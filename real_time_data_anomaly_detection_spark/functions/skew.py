@@ -1,10 +1,9 @@
-"""Skew mitigation for joins and aggregations.
+"""Skew mitigation for joins.
 
 AQE's skew-join handling (on by default in session.py) covers
 sort-merge joins it can observe; salting is the explicit fallback for
-(a) aggregations with a hot key and (b) joins where one key dominates
-so badly that even split partitions overwhelm a task. Both helpers are
-pure DataFrame transforms.
+joins where one key dominates so badly that even split partitions
+overwhelm a task. The helpers are pure DataFrame transforms.
 """
 
 from __future__ import annotations
@@ -82,39 +81,3 @@ def salted_join(
     )
     out = salted_l.join(salted_r, [key, "_salt"], how)
     return out.drop("_salt")
-
-
-def two_phase_agg(
-    df: DataFrame,
-    keys: list[str],
-    aggs: dict[str, tuple],
-    salt_buckets: int = 16,
-    seed: int = 42,
-) -> DataFrame:
-    """Skew-safe aggregation: aggregate on (keys + salt) first, then
-    merge partials per key.
-
-    ``aggs`` maps output name -> (col, kind) with kind in
-    {"sum", "count", "min", "max"} (the re-aggregatable kinds; avg =
-    sum/count composed by the caller). A hot key's rows split across
-    ``salt_buckets`` partial groups before the final (tiny) merge.
-    """
-    salted = df.withColumn("_salt", (F.rand(seed) * salt_buckets).cast("int"))
-    partial_exprs, merge_exprs = [], []
-    for name, (col, kind) in aggs.items():
-        if kind == "count":
-            partial_exprs.append(F.count(col).alias(f"_p_{name}"))
-            merge_exprs.append(F.sum(f"_p_{name}").alias(name))
-        elif kind == "sum":
-            partial_exprs.append(F.sum(col).alias(f"_p_{name}"))
-            merge_exprs.append(F.sum(f"_p_{name}").alias(name))
-        elif kind == "min":
-            partial_exprs.append(F.min(col).alias(f"_p_{name}"))
-            merge_exprs.append(F.min(f"_p_{name}").alias(name))
-        elif kind == "max":
-            partial_exprs.append(F.max(col).alias(f"_p_{name}"))
-            merge_exprs.append(F.max(f"_p_{name}").alias(name))
-        else:
-            raise ValueError(f"non-mergeable agg kind {kind!r}")
-    partial = salted.groupBy(*keys, "_salt").agg(*partial_exprs)
-    return partial.groupBy(*keys).agg(*merge_exprs)

@@ -26,14 +26,3 @@ def l2_norm(a: Column) -> Column:
 def cosine_similarity(a: Column, b: Column) -> Column:
     """Cosine similarity; NULL-safe only insofar as inputs are non-null."""
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def l2_distance(a: Column, b: Column) -> Column:
-    """Euclidean distance between two array<double> columns."""
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )

@@ -31,12 +31,6 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Dimension tables small enough to broadcast at ANY scale factor (TPC-H
-# sizing: region=5 rows, nation=25 rows always; supplier/part/customer
-# grow with sf but stay dimension-ish vs lineitem/orders facts).
-BROADCASTABLE = frozenset({"region", "nation", "supplier"})
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; have {TABLES}")
@@ -76,10 +70,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view for spark.sql()."""
     for t in TABLES:
@@ -114,7 +104,7 @@ def local_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
     mix targets, dim tables). Routing the same rows through a pandas
     frame (Arrow serialization, enabled session-wide) converts once
     at build time: build+collect measured 0.27 -> 0.03 s. Same rows,
-    same DDL schema string, so results are unchanged (round-14)."""
+    same DDL schema string, so results are unchanged."""
     import pandas as pd
 
     names = _schema_field_names(schema)
@@ -130,20 +120,18 @@ def corpus_cache_path(sf_dir: str, table: str, prefix: str) -> str:
     cache dirs instead of silently sharing a stale index (the
     _SUCCESS gate only guards torn writes, not staleness). One
     implementation for every persisted-index query cache (IVF /
-    text postings / image hashes) — round-10 dedup of three
-    copy-pastes that would otherwise drift.
+    text postings / image hashes), so the key scheme cannot drift
+    between them.
 
     Scheme'd (hdfs:// s3a:// file://) corpora fingerprint through the
-    Hadoop FS shim (round-12, VERDICT r11 What's-wrong #5): the
-    previous os.stat path silently degraded to a path-only hash on
-    remote corpora — no crash, but the staleness protection vanished
-    exactly where fs.py made the rest of the index lifecycle
-    portable. Plain posix paths keep the direct os.stat walk: it
+    Hadoop FS shim: os.stat would silently degrade to a path-only
+    hash on remote corpora — no crash, but no staleness protection
+    either. Plain posix paths keep the direct os.stat walk: it
     needs no SparkSession (callers may compute cache paths before one
     exists) and keeps NANOSECOND mtime granularity; the shim path's
     Hadoop mtime is milliseconds, where name+size still disambiguate
     a same-ms rewrite of different content length. Residual gap,
-    accepted explicitly (round-13, ADVICE r12 #2): a remote rewrite
+    accepted explicitly: a remote rewrite
     within the SAME millisecond producing the SAME byte length keeps
     the fingerprint and silently reuses a stale index. Closing it
     would need a content discriminator (FileSystem.getFileChecksum —
@@ -163,9 +151,9 @@ def corpus_cache_path(sf_dir: str, table: str, prefix: str) -> str:
     root = os.path.abspath(root)
     h = hashlib.md5(f"{prefix}:{root}".encode())
     if os.path.isdir(root):
-        # Recursive, leaf-files-only (round-12 review #5: a partitioned
+        # Recursive, leaf-files-only (a partitioned
         # corpus's directory mtimes do NOT change on an in-place part
-        # rewrite), and TOCTOU-tolerant (review #3: a file unlinked
+        # rewrite), and TOCTOU-tolerant (a file unlinked
         # between listing and stat — i.e. a concurrent rewrite, the
         # exact staleness event the fingerprint defends against — must
         # yield a DIFFERENT key, not a crash).

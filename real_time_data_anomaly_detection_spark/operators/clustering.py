@@ -239,82 +239,6 @@ def kmeans_assign(
     return df.mapInPandas(assign, f"{fields}, {cell_col} int")
 
 
-def kmeans_assign_two_level(
-    df: DataFrame,
-    centroids: np.ndarray,
-    vec_col: str = "embedding",
-    cell_col: str = "cell",
-    n_coarse: int | None = None,
-    nprobe: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate nearest-centroid assignment in O(n·(g + k·nprobe/g))
-    instead of O(n·k) — the IVF trick applied to the assignment step
-    itself, for SemDeDup-scale k (50k cells) where flat assignment's
-    per-row k·d flops dominate.
-
-    The k centroids are clustered driver-side into ``n_coarse``
-    (default ≈√k) groups; each row scores the g coarse centers, then
-    only the fine centroids inside its ``nprobe`` nearest coarse
-    groups. Approximation: a row whose true nearest centroid lives in
-    a non-probed group gets its best probed centroid instead —
-    agreement vs flat assignment is pinned ≥95% at nprobe=4 in tests,
-    and exact when nprobe == n_coarse. One Arrow pass, no shuffle."""
-    C = centroids.astype(np.float64)
-    k = len(C)
-    g = n_coarse or max(2, int(k**0.5))
-    from real_time_data_anomaly_detection_spark.operators.similarity import (
-        _kmeans_centroids,
-    )
-
-    G = _kmeans_centroids(C, g, seed)
-    coarse_of = (
-        ((C[:, None, :] - G[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
-    )  # fine centroid -> coarse group
-    members = [np.nonzero(coarse_of == j)[0] for j in range(g)]
-    nprobe = min(nprobe, g)
-    cols = df.columns
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            n = len(X)
-            dg = (
-                (X * X).sum(axis=1)[:, None]
-                - 2.0 * (X @ G.T)
-                + (G * G).sum(axis=1)[None, :]
-            )
-            probes = np.argpartition(dg, nprobe - 1, axis=1)[:, :nprobe]
-            best_d = np.full(n, np.inf)
-            best_c = np.zeros(n, dtype=np.int64)
-            for j in range(g):
-                fine = members[j]
-                if len(fine) == 0:
-                    continue
-                rows = np.nonzero((probes == j).any(axis=1))[0]
-                if len(rows) == 0:
-                    continue
-                Cf = C[fine]
-                d2 = (
-                    (X[rows] * X[rows]).sum(axis=1)[:, None]
-                    - 2.0 * (X[rows] @ Cf.T)
-                    + (Cf * Cf).sum(axis=1)[None, :]
-                )
-                loc = d2.argmin(axis=1)
-                dmin = d2[np.arange(len(rows)), loc]
-                upd = dmin < best_d[rows]
-                best_d[rows[upd]] = dmin[upd]
-                best_c[rows[upd]] = fine[loc[upd]]
-            out = pdf[cols].copy()
-            out[cell_col] = best_c.astype(np.int32)
-            yield out
-
-    return df.mapInPandas(assign, f"{fields}, {cell_col} int")
-
-
 def semantic_dup_pairs(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -536,7 +460,7 @@ def q_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Materialize before the global sort so the range partitioner's
     # sampling job doesn't re-run the Arrow projection pass (the
-    # q_video_dhash_md5 range-sampling fix, round-14).
+    # same fix as q_video_dhash_md5).
     return out.localCheckpoint(eager=False).orderBy("vec_id")
 
 

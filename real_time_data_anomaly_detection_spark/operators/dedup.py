@@ -21,35 +21,12 @@ Jaccard baseline (tests/test_dedup.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from real_time_data_anomaly_detection_spark.functions.vector import cosine_similarity
 from real_time_data_anomaly_detection_spark.io import load_table
 from real_time_data_anomaly_detection_spark.operators.registry import query
-
-
-def exact_dedup(df: DataFrame, cols: list[str], keep_col: str) -> DataFrame:
-    """Keep one row per distinct ``cols`` content (lowest ``keep_col``).
-
-    Dedups on sha2-256 of the content so the exchange hashes/compares
-    32-byte keys; deterministic winner via min(keep_col), unlike
-    dropDuplicates whose survivor depends on partition order.
-    """
-    fingerprint = F.sha2(F.concat_ws("\x1f", *cols), 256)
-    # row_number (not min-join-back): a min-join keeps EVERY row tied
-    # on the minimum keep_col, violating the one-survivor contract.
-    # Remaining columns break keep_col ties deterministically.
-    order_cols = [F.col(keep_col).asc()] + [
-        F.col(c).asc_nulls_first() for c in df.columns if c != keep_col
-    ]
-    w = Window.partitionBy("_fp").orderBy(*order_cols)
-    return (
-        df.withColumn("_fp", fingerprint)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_fp", "_rn")
-    )
 
 
 def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:
@@ -356,91 +333,6 @@ def minhash_neardup_pairs(
     return verify_candidates_arr(cands, arr, id_col, threshold)
 
 
-def build_minhash_index(
-    df: DataFrame,
-    table: str,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    buckets: int = 8,
-) -> None:
-    """Persist the corpus's banded MinHash signatures BUCKETED by
-    band_key — the incremental-dedup index.
-
-    Matching a new batch of documents against a 100 TB corpus must not
-    reshuffle the corpus per batch; bucketing the banded relation on
-    the join key means the index side of every subsequent match join is
-    read co-located (zero exchange; pinned in tests/test_dedup.py). At
-    scale set ``buckets`` ~ corpus_size / healthy-partition-size.
-
-    Signatures come from the row-wise array path (zero exchanges before
-    the bucketed write itself) — on THE whole-corpus operation, the
-    exploded formulation's distinct + groupBy would be two full corpus
-    shuffles; value-equality of the two paths is pinned in
-    tests/test_dedup.py::test_arr_signature_path_equals_exploded_path."""
-    banded = banded_signatures(
-        minhash_signatures_arr(shingle_arrays(df, text_col, id_col, n), id_col, num_hashes),
-        id_col,
-        bands,
-        num_hashes // bands,
-    )
-    (
-        banded.write.format("parquet")
-        .bucketBy(buckets, "band_key")
-        .sortBy("band_key")
-        .option("path", path)
-        .mode("overwrite")
-        .saveAsTable(table)
-    )
-
-
-def minhash_match_incremental(
-    new_df: DataFrame,
-    table: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    est_threshold: float = 0.5,
-) -> DataFrame:
-    """Match NEW documents against a persisted minhash index
-    (build_minhash_index) without reshuffling the corpus.
-
-    Candidates = equal band_key (single-column join, co-located on the
-    bucketed index side); similarity is then ESTIMATED from signature
-    agreement (fraction of equal minhash slots — the unbiased Jaccard
-    estimator), so no corpus text/shingles are needed at match time.
-    Returns (new_id, corpus_id, est_jaccard >= est_threshold)."""
-    spark = new_df.sparkSession
-    idx = spark.table(table)
-    nb = banded_signatures(
-        minhash_signatures_arr(shingle_arrays(new_df, text_col, id_col, n), id_col, num_hashes),
-        id_col,
-        bands,
-        num_hashes // bands,
-    ).select(
-        F.col(id_col).alias("new_id"), F.col("sig").alias("_nsig"), "band_key"
-    )
-    pairs = (
-        nb.join(idx, "band_key")
-        .filter(F.col("new_id") != F.col(id_col))
-        .select("new_id", F.col(id_col).alias("corpus_id"), "_nsig", "sig")
-        .distinct()
-    )
-    est = F.size(
-        F.filter(F.zip_with("_nsig", "sig", lambda x, y: x == y), lambda b: b)
-    ) / F.lit(float(num_hashes))
-    return (
-        pairs.withColumn("est_jaccard", F.round(est, 4))
-        .filter(F.col("est_jaccard") >= est_threshold)
-        .select("new_id", "corpus_id", "est_jaccard")
-    )
-
-
 def simhash_fingerprints(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -591,7 +483,7 @@ def containment_pairs(
     as :func:`jaccard_pairs` — only the published ratio differs.
 
     ``max_posting_size`` is the same stop-shingle valve as
-    :func:`jaccard_pairs` (round-7 advice #4): one boilerplate shingle
+    :func:`jaccard_pairs`: one boilerplate shingle
     shared by m docs yields ~m²/2 pair rows, the exact path's
     quadratic hazard. Postings over the cap are dropped BEFORE pair
     generation and doc sizes are recomputed from the capped relation,
@@ -1079,51 +971,6 @@ def q_embed_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embed_neardup_lsh(e)
 
 
-def stream_dedup_against_index(
-    stream_df: DataFrame,
-    table: str,
-    out_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    est_threshold: float = 0.5,
-    trigger: dict | None = None,
-):
-    """Streaming corpus dedup: per micro-batch, drop documents that
-    near-duplicate the persisted corpus (minhash index built by
-    build_minhash_index) or an earlier doc in the same batch, append
-    the novel remainder to ``out_path``.
-
-    This is the online half of a training-data ingestion pipeline: the
-    corpus index is bucketed on the match key, so every micro-batch
-    joins it CO-LOCATED — per-batch cost scales with the batch, never
-    with the corpus. (Index refresh is an offline concern: rebuild or
-    union a delta index periodically.)
-
-    Exactly-once: each epoch OVERWRITES its own ``batch=<id>``
-    directory, so a recovery replay of the same epoch is idempotent —
-    a bare append would duplicate the batch on retry. Read the sink
-    with ``spark.read.parquet(out_path)`` (``batch`` surfaces as a
-    partition column)."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = exact_dedup(batch_df, [text_col], id_col)
-        matches = minhash_match_incremental(
-            batch_df, table, text_col, id_col, n, num_hashes, bands, est_threshold
-        )
-        dupes = matches.select(F.col("new_id").alias(id_col)).distinct()
-        novel = batch_df.join(dupes, id_col, "left_anti")
-        novel.write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
-
-    return (
-        stream_df.writeStream.foreachBatch(_process)
-        .trigger(**(trigger or {"processingTime": "1 second"}))
-        .start()
-    )
-
-
 def connected_components(
     edges: DataFrame,
     col_a: str = "doc_a",
@@ -1233,9 +1080,8 @@ def connected_components(
         # eager=False: the convergence count below is the round's first
         # action, so it MATERIALIZES the checkpoint and counts changed
         # labels in ONE job — eager=True paid a separate materialization
-        # job per round before the count's (cheap) cached scan
-        # (round-13; the non-eager-checkpoint-then-act pattern pagerank
-        # already relies on).
+        # job per round before the count's (cheap) cached scan (the
+        # non-eager-checkpoint-then-act pattern pagerank also uses).
         new_comp = (
             jumped.join(hop2, jumped.comp == hop2._ln, "left")
             .select(
@@ -1362,7 +1208,7 @@ def minhash_md5_pairs(d: DataFrame) -> DataFrame:
     minhash_neardup_pairs: the shingle-array relation feeds the
     signature chain AND both verify sides, so below the 1 GB estimate
     one localCheckpoint beats tokenizing the corpus three times
-    (round-13: measured 1.9 -> 1.4 s at sf0.1 across each of the five
+    (measured 1.9 -> 1.4 s at sf0.1 across each of the five
     md5-family consumers); above it, recompute wins."""
     from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
 
@@ -1657,7 +1503,7 @@ def q_cluster_stats_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cluster_size − 1 per cluster). Oracle extends the shared
     recursive-CTE closure with the same two-level aggregation; note
     the CAST on sum() — DuckDB would otherwise publish HUGEINT, which
-    a pandas fetch turns into float64 (the round-6 gate lesson).
+    a pandas fetch turns into float64.
     Scale shape: both aggregations are component-keyed then size-keyed
     reductions over the LABEL relation (|clustered docs| rows, then
     |clusters| rows) — nothing corpus-sized past the closure."""

@@ -34,7 +34,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Counts DISTINCT over sha2(text, 256) so the distinct-aggregate
     exchange carries 32-byte digests instead of full documents — at
     100 TB that is the difference between shuffling ~100 TB of text and
-    ~3 TB of hashes (same design as dedup.exact_dedup). Equal to
+    ~3 TB of hashes. Equal to
     count(DISTINCT text) up to SHA-256 collisions; NULL handling
     matches (sha2(NULL) is NULL, ignored by countDistinct either way).
     """

@@ -520,7 +520,7 @@ def dsir_log_weights(
         .groupBy(id_col)
         # + 0.0 normalizes IEEE negative zero: a tiny negative sum
         # rounds to -0.0, which one engine prints as -0.0 and the other
-        # as 0.0 (surfaced as a value-hash mismatch at sf0.1, round 8)
+        # as 0.0 (surfaced as a value-hash mismatch at sf0.1)
         .agg(
             (F.round(F.sum(F.col("c") * log_ratio), 4) + F.lit(0.0)).alias(
                 "log_weight"
@@ -992,7 +992,7 @@ def temperature_sample(
     counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("_n"))
     if alpha == 0.5:
         # exact integer weights: order-independent sum, bit-equal
-        # thresholds on every engine (round-8 advice #1)
+        # thresholds on every engine
         wexpr = F.floor(
             F.sqrt(F.col("_n").cast("double")) * F.lit(1048576.0)
         ).cast("bigint")
@@ -1092,7 +1092,7 @@ def ingest_dedup(
     (≤ 2·|batch| rows); (2) batch keys ⋉ seen → the hit doc-ids;
     (3) batch ▷ hit ids.
 
-    Regimes (round-8 verdict #1 valve): with ``broadcast_keys=None``
+    Regimes (the broadcast valve): with ``broadcast_keys=None``
     the batch side is size-gated via plans.inspect.plan_size_bytes —
     under ``max_broadcast_bytes`` every hop is a broadcast-hash join
     and the corpus is scanned once, SHUFFLED NEVER (plan-pinned in
@@ -1129,9 +1129,8 @@ def ingest_dedup_keys(
 ) -> DataFrame:
     """The :func:`ingest_dedup` core against a PRE-COMPUTED corpus key
     frame ``corpus_keys`` (columns ``_dig``, ``canon_url``) — what a
-    persisted ingest index stores, so the streaming twin
-    (streaming/ingest.py) and repeated incremental runs never re-scan
-    or re-digest corpus documents. Returns the admitted batch rows as
+    persisted ingest index stores, so repeated incremental runs never
+    re-scan or re-digest corpus documents. Returns the admitted batch rows as
     (id, _dig, canon_url) — the digest rides along so admissions can
     be appended straight back into the index."""
     from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes

@@ -420,8 +420,8 @@ def kmv_quantiles(
     algebra as a reusable operator — see that docstring for why KMV
     over GK/KLL). Estimate = sample value at rank
     (q·(n−1)) div 100 + 1 in (value, rid) order, n = |sample| — pure
-    integer selection, so the streaming fold
-    (streaming/sketches.kmv_quantile_stream) reproduces it bit-for-bit."""
+    integer selection, so any engine that keeps the same sample
+    reproduces it bit-for-bit."""
     from pyspark.sql import Window
 
     x = df.withColumn("_dg", F.md5(F.col(rid_col).cast("string")))
@@ -537,7 +537,7 @@ def q_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("matches"))
     )
     # All four exact scalars from ONE scan + ONE per-key flag
-    # aggregation (round-13): per order key, anyA/anyB membership
+    # aggregation: per order key, anyA/anyB membership
     # flags, then inter = Σ(anyA∧anyB), un = Σ(anyA∨anyB),
     # n_a = Σ anyA, n_b = Σ anyB — set-identical to the
     # distinct/semi-join/union formulation it replaces, which consumed

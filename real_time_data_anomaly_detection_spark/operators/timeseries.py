@@ -48,7 +48,7 @@ def resample_ffill(
     and rounded half-up to 4 dp via integer division
     (:func:`_exact_mean_4dp`) — round(avg(double), 4) diverges across
     engines on half-boundary inputs, which surfaced as 1-ulp row
-    mismatches at sf0.1 (round-8 fix; assumes non-negative values,
+    mismatches at sf0.1 (assumes non-negative values,
     like every micro-unit op here).
 
     Missing slots appear with ``avg_value`` null — the gap REPORT —
@@ -953,7 +953,7 @@ def exact_group_quantile(
     take the offset-th element. Deterministic, no sampling; returns
     (key, q_value).
 
-    ``bucket_bits=None`` (round-10) sizes buckets from the DATA: an
+    ``bucket_bits=None`` sizes buckets from the DATA: an
     in-plan one-row min/max broadcast picks a power-of-two width so
     the global value range splits into ~2-4k level-1 buckets (see
     exact_group_quantiles). The former fixed default of 20
@@ -981,10 +981,9 @@ def exact_group_quantiles(
 ) -> DataFrame:
     """Multi-quantile form of :func:`exact_group_quantile` — EVERY
     requested quantile from ONE scan and ONE bucket-count relation
-    (round-10: psi_bucket_edges previously ran the whole two-level
-    selection once per edge, 4 scans for quintiles; the bucket counts,
-    the cumulative window and the in-bucket ranks are q-independent,
-    so all ranks select against the same relations). Returns
+    (the bucket counts, the cumulative window and the in-bucket ranks
+    are q-independent, so all ranks select against the same
+    relations). Returns
     (key, q_pct, q_value); identical rank definition per q — the
     single-q wrapper stays oracle-green unchanged.
 
@@ -1150,8 +1149,8 @@ def q_peaks_over_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Numeric-feature drift: population stability index (round-10 — the numeric
-# sibling of q_category_drift's categorical chi-square).
+# Numeric-feature drift: population stability index (the numeric sibling
+# of q_category_drift's categorical chi-square).
 # ---------------------------------------------------------------------------
 
 
@@ -1164,8 +1163,7 @@ def psi_bucket_edges(
 ) -> DataFrame:
     """Per-key PSI bucket edges: the EXACT reference-window quantiles
     at ``quantiles`` via :func:`exact_group_quantiles` — ALL edges
-    from one scan and one bucket-count relation (round-10; previously
-    one full two-level selection per edge), pivoted into one
+    from one scan and one bucket-count relation, pivoted into one
     (key, e0..e{n-1}) row per key. Edges are exact integers of the
     (value, rid) total order, so bucket assignment — and therefore
     the whole PSI report — is engine-replayable."""
@@ -1187,42 +1185,6 @@ def _psi_bucket(value_col: str, n_edges: int):
     for i in range(n_edges):
         b = b + F.when(F.col(value_col) > F.col(f"e{i}"), 1).otherwise(0)
     return b
-
-
-def _psi_counts(
-    df: DataFrame,
-    edges: DataFrame,
-    key_col: str,
-    value_col: str,
-    flag_col: str,
-    n_edges: int,
-) -> DataFrame:
-    """Grid-complete per-(key, bucket) window counts (o1 = reference
-    rows, o2 = current rows): ONE pass over df (broadcast edge join +
-    partial-aggregable groupBy), then a left join against the full
-    key × bucket grid so empty buckets surface as explicit zeros (the
-    Laplace smoothing needs them)."""
-    nb = n_edges + 1
-    b = df.join(F.broadcast(edges), key_col).select(
-        key_col, flag_col, _psi_bucket(value_col, n_edges).alias("_bk")
-    )
-    g = b.groupBy(key_col, "_bk").agg(
-        F.sum(F.when(F.col(flag_col), 1).otherwise(0))
-        .cast("bigint")
-        .alias("o1"),
-        F.sum(F.when(F.col(flag_col), 0).otherwise(1))
-        .cast("bigint")
-        .alias("o2"),
-    )
-    grid = edges.select(
-        key_col, F.explode(F.expr(f"sequence(0, {nb - 1})")).alias("_bk")
-    )
-    return grid.join(g, [key_col, "_bk"], "left").select(
-        key_col,
-        "_bk",
-        F.coalesce("o1", F.lit(0)).cast("bigint").alias("o1"),
-        F.coalesce("o2", F.lit(0)).cast("bigint").alias("o2"),
-    )
 
 
 def psi_term_u(nb: int):
@@ -1273,7 +1235,7 @@ def psi_drift(
     arithmetic on |keys|·buckets rows — nothing event-sized moves
     after the scan.
 
-    Single-consumer discipline (round-13): the per-key window totals
+    Single-consumer discipline: the per-key window totals
     and the key × bucket grid both come straight from ONE df
     aggregation (``tt``), NOT by re-summing / re-exploding the
     bucket-count relation — the previous body consumed ``gf`` twice
@@ -1398,7 +1360,7 @@ def psi_drift(
 )
 def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Numeric-feature drift via the population stability index
-    (round-10, extending the r9 drift family beyond categories): per
+    (extending the drift family beyond categories): per
     event_type, the value distribution of the afternoon window is
     scored against the morning window's EXACT quintile edges
     (exact_group_quantile — integer order statistics, no sampling),
@@ -1427,10 +1389,9 @@ def _ks_tail(g, key_col: str, value_col: str) -> DataFrame:
     groupBy-totals + broadcast join consumed ``g`` twice, and for
     q_ks_drift_bucketed that re-inlined the whole edge-selection
     subtree per consumer), and the cross-multiplied integer numerator
-    max. The one tail of q_ks_drift AND q_ks_drift_bucketed (round-12
-    review #4: previously two verbatim copies — the documented
-    ref_n·cur_n ≥ 2^63 pre-scaling valve, when it lands, now lands
-    once)."""
+    max. The one tail of q_ks_drift AND q_ks_drift_bucketed (so the
+    documented ref_n·cur_n ≥ 2^63 pre-scaling valve, when it lands,
+    lands once)."""
     w = (
         Window.partitionBy(key_col)
         .orderBy(value_col)
@@ -1584,22 +1545,20 @@ def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_ks_drift_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bucketed two-sample KS drift (round-12): the batch twin of
-    ks_drift_stream's ``bucket_edges`` mode, putting the BUCKET-GRID
-    ALGEBRA itself under the hash gate. Both windows fold onto the
+    """Bucketed two-sample KS drift, putting the BUCKET-GRID ALGEBRA
+    itself under the hash gate. Both windows fold onto the
     reference window's 4-bucket rank grid — interior edges are the
     EXACT reference values at multiset ranks (b·(n−1)) div 4
     (exact_group_quantiles at 25/50/75, whose integer rank arithmetic
-    (q·(n−1)) div 100 coincides with the stream grid for these q),
+    (q·(n−1)) div 100 coincides with the bucket grid for these q),
     the per-key reference minimum is the floor representative, and a
     value maps to the LARGEST edge ≤ it (below-min clamps to min) —
     then the standard cross-multiplied integer KS runs over the
     ≤ 4-value domain. Statistic contract: this is the KS of the
     BUCKETED distributions (conservative; the raw statistic is
     q_ks_drift). Scale shape: counts-sized quantile selections + ONE
-    broadcast-edge bucketing pass + a ≤ 4-rows-per-key ECDF — the
-    state-bounded monitor shape the streaming valve keeps, here as a
-    batch query with a full DuckDB replay of edges → representative
+    broadcast-edge bucketing pass + a ≤ 4-rows-per-key ECDF, with a
+    full DuckDB replay of edges → representative
     mapping → ECDF → numerator."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
@@ -1608,7 +1567,7 @@ def q_ks_drift_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.hour("ts") < 12).alias("w1"),
     )
     ref = ev.filter(F.col("w1"))
-    # Round-13: the floor representative (per-key reference MIN) is the
+    # The floor representative (per-key reference MIN) is the
     # rank-0 order statistic — (0·(n−1)) div 100 = 0 — so it rides the
     # SAME one-scan multi-quantile selection as the interior edges
     # instead of a separate ref scan + groupBy(min) + edges⋈em join
@@ -1643,7 +1602,7 @@ def _emd_u_expr(num_col: str, den_col: str):
     not num·2²⁰ — the naive single multiply overflowed decimal(38,0)
     once Σterms passed ~9.6e31 and Spark's non-ANSI overflow-null was
     swallowed into a silent emd_u=0, i.e. maximal drift published as
-    NO drift (round-11 review #2). Exact while den·2¹⁰ < 10³⁸
+    NO drift. Exact while den·2¹⁰ < 10³⁸
     (n1·n2·range ≤ ~9.7e34); beyond that the null PROPAGATES — a loud
     unknown, never a silent zero. den = 0 (empty window / zero range)
     publishes 0. Shared by emd_drift and drift_report so the pinned
@@ -1688,7 +1647,7 @@ def emd_drift(
     flag_col: str,
 ) -> DataFrame:
     """Exact 1-D earth-mover's (Wasserstein-1) drift per key, integer
-    end-to-end (round-11 — the fourth drift statistic: chi² sees the
+    end-to-end (the fourth drift statistic: chi² sees the
     category mix, PSI coarse bucket shares, KS the single worst ECDF
     gap; EMD integrates the WHOLE gap, so a broad small shift that KS
     underweights and PSI's five buckets miss still scores).
@@ -1966,21 +1925,17 @@ def q_emd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The one-stop drift monitor (round-10; FUSED round-11): per
-    event_type, all four drift statistics over the same
-    morning/afternoon window split — chi-square contribution
-    (category mix), population stability index (bucketed value
-    shares), the exact Kolmogorov–Smirnov numerator (worst single
-    ECDF gap), and the exact earth-mover's score (integrated ECDF
-    gap, round-11) — from ONE scan of events. The round-10 body
-    composed the standalone oracle-green queries and paid the
-    event-sized scan + aggregation once per statistic (verdict
-    What's-wrong #3); the fused :func:`drift_report` derives all four
-    from a single per-(key, distinct value) count relation, bit-equal
-    to the composed versions (same oracles). The reference's detector
-    flags point outliers one event at a time (app/app3_ML.py:165); a
-    fleet monitor needs exactly this distribution-level quartet next
-    to it."""
+    """The one-stop drift monitor: per event_type, all four drift
+    statistics over the same morning/afternoon window split —
+    chi-square contribution (category mix), population stability
+    index (bucketed value shares), the exact Kolmogorov–Smirnov
+    numerator (worst single ECDF gap), and the exact earth-mover's
+    score (integrated ECDF gap) — from ONE scan of events. The fused
+    :func:`drift_report` derives all four from a single per-(key,
+    distinct value) count relation, bit-equal to the composed versions
+    (same oracles). The reference's detector flags point outliers one
+    event at a time (app/app3_ML.py:165); a fleet monitor needs exactly
+    this distribution-level quartet next to it."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         _micro_units(F.col("value")).alias("xm"),
@@ -1999,9 +1954,8 @@ def drift_report(
     quantiles: tuple[int, ...] = (20, 40, 60, 80),
 ) -> DataFrame:
     """Fused chi²/PSI/KS/EMD drift quartet from ONE pass over ``df``
-    (round-11 verdict #3 plus the round-11 earth-mover's statistic;
-    the round-10 body composed the standalone queries and paid the
-    event-sized scan + aggregation once per statistic).
+    (composing the standalone queries would pay the event-sized scan
+    + aggregation once per statistic).
     Single-consumer pipeline — every relation below is consumed
     exactly once, so the plan has exactly ONE FileScan of the input at
     ANY scale (pinned in tests/test_plans.py), with no materialization
@@ -2080,7 +2034,7 @@ def drift_report(
         )
         .cast("bigint")
         .alias("ks_num"),
-        # EMD pieces (round-11 — the quartet's fourth statistic rides
+        # EMD pieces (the quartet's fourth statistic rides
         # the same single pass: gap is one more window function over
         # the identical partition/order, no new exchange)
         F.sum(_emd_term).alias("_emd_num"),
@@ -2177,7 +2131,7 @@ def holt_smooth(
     value_col: str,
 ) -> DataFrame:
     """Holt's linear (double exponential) smoothing per key over an
-    integer series, engine-portable by construction (round-11 — the
+    integer series, engine-portable by construction (the
     forecasting companion to the anomaly/drift family; the reference
     refits its detector per window, app/app3_ML.py:165, with no
     forward view at all).
@@ -2248,7 +2202,7 @@ def holt_smooth(
     # Null measurements are dropped BEFORE the per-slot aggregation: a
     # (key, slot) group whose values were all NULL would otherwise
     # deliver a NaN _x to pandas and math.floor(NaN) would kill the
-    # whole applyInPandas stage (ADVICE r11 #2). Dropping the rows
+    # whole applyInPandas stage. Dropping the rows
     # matches SQL sum() semantics for mixed slots and degrades an
     # all-null slot to "slot absent" instead of a job crash.
     series = df.filter(F.col(value_col).isNotNull()).groupBy(

@@ -10,9 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-#: Metric columns common to every plant type.
-COMMON_METRICS = ("power_output", "demand", "grid_frequency")
-
 #: All 11 metric columns of the wire schema.
 METRIC_COLUMNS = (
     "power_output",

@@ -15,6 +15,11 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# Directory that holds the package. Python workers start in the JVM's
+# working directory and import the package only through PYTHONPATH,
+# which they inherit from the JVM's environment.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Streaming state-store backends (spark.sql.streaming.stateStore.
 # providerClass). The HDFS-backed provider keeps state on the JVM heap
 # — fine for small key spaces; RocksDB spills state to local disk, the
@@ -39,7 +44,14 @@ def get_spark(
     At real cluster scale the same knobs apply; only ``master`` and the
     shuffle-partition count (sized ~2-3x total cores, with AQE coalescing
     the excess) change.
+
+    Puts the package root on PYTHONPATH first, so Python workers import
+    the package from any working directory. Like the memory setting,
+    this reaches the workers only when this call launches the JVM.
     """
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([_PACKAGE_ROOT, *paths])
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)

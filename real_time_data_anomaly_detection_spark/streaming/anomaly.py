@@ -16,6 +16,7 @@ contamination-threshold labeling).
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -23,6 +24,37 @@ from pyspark.sql import types as T
 
 from real_time_data_anomaly_detection_spark.functions.iforest import IsolationForest
 from real_time_data_anomaly_detection_spark.schemas import PLANT_FEATURES
+
+
+def score_window(
+    pdf: pd.DataFrame,
+    features: list[str],
+    ts_col: str,
+    contamination: float,
+    random_state: int,
+    min_rows: int,
+) -> tuple[pd.DataFrame, np.ndarray, np.ndarray] | None:
+    """The detector kernel: fit IsolationForest on one group's window
+    and score that same window (reference app/app3_ML.py:165-169).
+
+    Returns (complete, scores, is_outlier): ``complete`` is the rows
+    with every feature present, sorted by (ts, features) — Spark
+    shuffle order is nondeterministic, and identical window contents
+    must yield identical models (SURVEY.md §7 hard-part 2) — and
+    ``is_outlier`` marks scores above the (1 − contamination)
+    quantile. None when fewer than ``min_rows`` rows are complete
+    (the reference's warm-up guard, app/app3_ML.py:151-152)."""
+    complete = pdf.dropna(subset=features)
+    if len(complete) < min_rows:
+        return None
+    complete = complete.sort_values([ts_col] + features, kind="mergesort")
+    X = complete[features].astype(float).to_numpy()
+    model = IsolationForest(
+        contamination=contamination, random_state=random_state
+    ).fit(X)
+    scores = model.score_samples(X)
+    threshold = np.quantile(scores, 1.0 - contamination)
+    return complete, scores, scores > threshold
 
 
 def _scored_schema(df: DataFrame) -> T.StructType:
@@ -49,10 +81,7 @@ def score_anomalies(
     Output = input columns + ``anomaly`` (-1 outlier / 1 normal / 0
     unscored: null-feature rows and warm-up groups under ``min_rows``,
     the reference's guard at app/app3_ML.py:151-152) + ``score``.
-
-    Rows are sorted by (ts, features) inside each group before fitting:
-    Spark shuffle order is nondeterministic, and identical window
-    contents must yield identical models (SURVEY.md §7 hard-part 2).
+    Each group goes through :func:`score_window`.
     """
     fmap = features_map or PLANT_FEATURES
     schema = _scored_schema(df)
@@ -68,20 +97,13 @@ def score_anomalies(
         pdf["score"] = float("nan")
         if features is None:
             return pdf[out_cols]
-        complete = pdf.dropna(subset=features)
-        if len(complete) < min_rows:
+        scored = score_window(
+            pdf, features, ts_col, contamination, random_state, min_rows
+        )
+        if scored is None:
             return pdf[out_cols]
-        complete = complete.sort_values([ts_col] + features, kind="mergesort")
-        X = complete[features].astype(float).to_numpy()
-        model = IsolationForest(
-            contamination=contamination, random_state=random_state
-        ).fit(X)
-        scores = model.score_samples(X)
-        import numpy as np
-
-        threshold = np.quantile(scores, 1.0 - contamination)
-        labels = np.where(scores > threshold, -1, 1)
-        pdf.loc[complete.index, "anomaly"] = labels
+        complete, scores, is_outlier = scored
+        pdf.loc[complete.index, "anomaly"] = np.where(is_outlier, -1, 1)
         pdf.loc[complete.index, "score"] = scores
         return pdf[out_cols]
 
@@ -110,71 +132,6 @@ def latest_outliers(
         .filter(F.col("_rn") <= k)
         .drop("_rn")
     )
-
-
-def embedding_distance_threshold(
-    df: DataFrame,
-    centroids,
-    vec_col: str = "embedding",
-    quantile: float = 0.95,
-) -> float:
-    """Calibrate an outlier threshold OFFLINE: the ``quantile`` of
-    squared nearest-centroid distances over a reference (training)
-    batch. One scan + an approxQuantile — run once, ship the float."""
-    scored = score_embedding_outliers(df, centroids, vec_col=vec_col, threshold=None)
-    return scored.approxQuantile("dist2", [quantile], 1e-3)[0]
-
-
-def score_embedding_outliers(
-    df: DataFrame,
-    centroids,
-    vec_col: str = "embedding",
-    threshold: float | None = None,
-) -> DataFrame:
-    """Nearest-centroid distance scoring for embedding streams: adds
-    ``cell`` (nearest k-means cell), ``dist2`` (squared distance to
-    it), and — when ``threshold`` is given — ``anomaly`` (-1 outlier
-    / 1 normal, the reference's label convention).
-
-    STATELESS per row (centroids fit offline via
-    ``operators.clustering.kmeans_fit``, threshold via
-    ``embedding_distance_threshold``), so the same code path runs on a
-    batch frame or inside a Structured Streaming query with no state
-    store and no watermark — per micro-batch it is one Arrow pass,
-    exactly the semantic-drift monitor a production embedding pipeline
-    bolts onto ingest. The reference scores sensor rows per-window
-    with IsolationForest (app/app3_ML.py:165-169); this is the same
-    shape for embedding payloads with a closed-form detector."""
-    import numpy as np
-    import pandas as pd
-
-    C = np.asarray(centroids, dtype=np.float64)
-    cols = df.columns
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            d2 = (
-                (X * X).sum(axis=1)[:, None]
-                - 2.0 * (X @ C.T)
-                + (C * C).sum(axis=1)[None, :]
-            )
-            out = pdf[cols].copy()
-            out["cell"] = d2.argmin(axis=1).astype(np.int32)
-            out["dist2"] = np.maximum(d2.min(axis=1), 0.0)
-            if threshold is not None:
-                out["anomaly"] = np.where(out["dist2"] > threshold, -1, 1).astype(
-                    np.int32
-                )
-            yield out
-
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    schema = f"{fields}, cell int, dist2 double"
-    if threshold is not None:
-        schema += ", anomaly int"
-    return df.mapInPandas(score, schema)
 
 
 def cusum_stream(
@@ -226,8 +183,6 @@ def cusum_stream(
     the full interaction and the explicit-stop backfill shape); use a
     timeout only under continuous triggers.
     """
-    import numpy as np
-
     out_schema = T.StructType(
         [
             T.StructField(key_col, T.StringType(), False),

@@ -1,71 +1,14 @@
-"""Streaming sinks: memory (queryable surface), parquet, Kafka,
-foreachBatch.
+"""Streaming sink lifecycle: graceful stop.
 
 The reference's only "sink" is a foreachBatch collecting to driver
-dicts (app/app3_ML.py:136-141) that a Dash UI polls; the memory-table
-sink here is its queryable replacement (SURVEY.md §3.3), and parquet/
-Kafka are the durable/production paths it lacked.
+dicts (app/app3_ML.py:136-141) that a Dash UI polls; the detection
+pipeline's memory-table sink (streaming/pipeline.py) is its queryable
+replacement (SURVEY.md §3.3).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-
-
-def to_memory(
-    df: DataFrame, table_name: str, trigger: dict | None = None, output_mode: str = "append"
-) -> StreamingQuery:
-    """In-memory table sink — query it with spark.sql(f"SELECT ... FROM {name}")."""
-    writer = df.writeStream.format("memory").queryName(table_name).outputMode(output_mode)
-    return writer.trigger(**(trigger or {"availableNow": True})).start()
-
-
-def to_parquet(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    trigger: dict | None = None,
-    partition_by: list[str] | None = None,
-) -> StreamingQuery:
-    """Durable parquet sink with exactly-once via checkpointing.
-
-    ``partition_by`` (e.g. event date) keeps downstream partition
-    pruning effective at scale."""
-    writer = (
-        df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    return writer.trigger(**(trigger or {"availableNow": True})).start()
-
-
-def to_kafka(
-    df: DataFrame,
-    bootstrap_servers: str,
-    topic: str,
-    checkpoint: str,
-    trigger: dict | None = None,
-) -> StreamingQuery:
-    """Kafka sink — serializes all columns to a JSON value (the inverse
-    of source.parse_energy_json; reference producer P9/P10 semantics)."""
-    payload = df.select(
-        F.to_json(F.struct(*[F.col(c) for c in df.columns])).alias("value")
-    )
-    return (
-        payload.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**(trigger or {"processingTime": "1 second"}))
-        .start()
-    )
 
 
 def stop_gracefully(query: StreamingQuery, timeout_sec: float = 60.0) -> None:
@@ -115,14 +58,3 @@ def stop_gracefully(query: StreamingQuery, timeout_sec: float = 60.0) -> None:
     finally:
         if sc is not None:
             sc.setLogLevel("WARN")
-
-
-def to_foreach_batch(
-    df: DataFrame, fn: Callable, trigger: dict | None = None
-) -> StreamingQuery:
-    """foreachBatch escape hatch (reference app/app3_ML.py:136-141)."""
-    return (
-        df.writeStream.foreachBatch(fn)
-        .trigger(**(trigger or {"processingTime": "1 second"}))
-        .start()
-    )

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from real_time_data_anomaly_detection_spark.schemas import PLANT_FEATURES
+from real_time_data_anomaly_detection_spark.streaming.anomaly import score_window
 
 #: State = one binary cell holding the current window as parquet bytes.
 STATE_SCHEMA = T.StructType([T.StructField("window_parquet", T.BinaryType(), True)])
@@ -58,17 +59,16 @@ def last_n_window(
 
     emit="window": each trigger emits the group's full current window
     (the queryable surface the reference's Dash UI polled, §3.3).
-    emit="outliers": each trigger scores the window with IsolationForest
-    (functions/iforest.py; reference app/app3_ML.py:165-169 semantics)
-    and emits only rows of the CURRENT batch labeled -1 — the streaming
-    twin of anomaly.score_anomalies.
+    emit="outliers": each trigger scores the window with
+    anomaly.score_window — the kernel anomaly.score_anomalies runs on a
+    batch — and emits only rows of the CURRENT batch labeled -1.
 
     ``state_ttl_ms``: evict a group's window after that long with no new
     data (processing-time timeout). Essential when the group key is
     high-cardinality (device ids rather than 4 plant types) — without a
     TTL, state grows with every key ever seen.
 
-    TTL × trigger interaction (round-12 find): with a processing-time
+    TTL × trigger interaction: with a processing-time
     timeout registered, ``trigger(availableNow=True)`` CANNOT
     self-terminate — timers only fire inside micro-batches, so Spark
     keeps scheduling empty ~1/s batches until every group's TTL
@@ -124,24 +124,14 @@ def last_n_window(
         features = fmap.get(plant)
         if features is None:
             return
-        complete = window.dropna(subset=features)
-        if len(complete) < min_rows:  # warm-up guard (app/app3_ML.py:151-152)
-            return
-        complete = complete.sort_values([ts_col] + features, kind="mergesort")
-        import numpy as np
-
-        from real_time_data_anomaly_detection_spark.functions.iforest import (
-            IsolationForest,
+        scored = score_window(
+            window, features, ts_col, contamination, random_state, min_rows
         )
-
-        X = complete[features].astype(float).to_numpy()
-        model = IsolationForest(
-            contamination=contamination, random_state=random_state
-        ).fit(X)
-        scores = model.score_samples(X)
-        threshold = np.quantile(scores, 1.0 - contamination)
-        out = complete.loc[scores > threshold].copy()
-        out["score"] = scores[scores > threshold]
+        if scored is None:
+            return
+        complete, scores, is_outlier = scored
+        out = complete.loc[is_outlier].copy()
+        out["score"] = scores[is_outlier]
         # Only surface outliers from rows that arrived this trigger:
         # windowed rescoring would otherwise re-emit old rows each batch.
         out = out[out["_is_new"]]

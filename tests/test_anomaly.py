@@ -92,3 +92,41 @@ def test_latest_outliers_cap(spark):
         assert total_out >= capped.count()
     finally:
         capped.unpersist()
+
+
+def test_python_workers_import_package_from_other_cwd(tmp_path):
+    """A Spark application started outside the repo root still runs
+    Python-worker stages: get_spark hands the package root to the
+    workers, whose PYTHONPATH the caller's sys.path does not reach."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {root!r})\n"
+        "from real_time_data_anomaly_detection_spark.session import get_spark\n"
+        "from real_time_data_anomaly_detection_spark.streaming.anomaly import score_anomalies\n"
+        "from real_time_data_anomaly_detection_spark.streaming.generator import energy_batch\n"
+        "spark = get_spark(app_name='other-cwd', shuffle_partitions=2)\n"
+        "print('ROWS', score_anomalies(energy_batch(spark, 2000)).count())\n"
+    )
+    env = {
+        k: v for k, v in os.environ.items() if k not in ("PYTHONPATH", "PWD")
+    }
+    env.update(
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        SPARK_LOCAL_DIRS=str(tmp_path / "local"),
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "ROWS 2000" in proc.stdout

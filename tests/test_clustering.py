@@ -5,8 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-
-from tests.conftest import finish
+from pyspark.sql import functions as F
 
 from real_time_data_anomaly_detection_spark.operators.clustering import (
     _init_centroids,
@@ -149,108 +148,6 @@ def test_semantic_dedup_recall_and_survivors(spark):
         groups[kp].add(vid)
     for kp, members in groups.items():
         assert kp == min(members), f"keeper {kp} != min of {sorted(members)[:5]}"
-
-
-from pyspark.sql import functions as F  # noqa: E402  (used in fixture above)
-
-
-def test_embedding_outlier_scoring_stream_equals_batch(spark, tmp_path):
-    """Centroid-distance outlier scoring: calibrated threshold flags
-    planted far-off vectors while in-blob rows fire at no more than
-    the calibrated tail rate; the SAME code path run as a Structured
-    Streaming query over a file replay emits identical rows to the
-    batch frame (stateless per-row)."""
-    from real_time_data_anomaly_detection_spark.streaming.anomaly import (
-        embedding_distance_threshold,
-        score_embedding_outliers,
-    )
-
-    ids, X, labels = _blobs(n_per=40, d=8, k=3, sep=10.0, noise=0.5, seed=2)
-    train = _blob_df(spark, ids, X)
-    cent, _ = kmeans_fit(train, k=3, n_iters=6, seed=3)
-    thr = embedding_distance_threshold(train, cent, quantile=0.99)
-
-    # serve: 20 in-blob rows + 3 planted far-away outliers
-    rng = np.random.RandomState(4)
-    serve_X = np.concatenate([X[:20], 30.0 + rng.randn(3, 8)])
-    serve_ids = np.arange(1000, 1000 + len(serve_X))
-    serve = _blob_df(spark, serve_ids, serve_X)
-
-    batch = score_embedding_outliers(serve, cent, threshold=thr)
-    got = {r.vec_id: r.anomaly for r in batch.collect()}
-    # A q-quantile threshold calibrated on n train points leaves
-    # ~(1-q)·n of them above it BY CONSTRUCTION; the 20 in-blob serve
-    # rows are copies of train rows, so they may legitimately include
-    # those tail points. Pin the false-positive rate to the calibrated
-    # tail (<=2 of 120 train points above a 0.99 quantile), not zero —
-    # asserting zero made the test flip on ulp-level centroid jitter
-    # from the nondeterministic order of distributed partial sums.
-    in_blob_flagged = sum(got[int(i)] == -1 for i in serve_ids[:20])
-    assert in_blob_flagged <= 2, f"{in_blob_flagged} in-blob rows flagged"
-    assert all(got[int(i)] == -1 for i in serve_ids[20:])
-
-    # identical rows through a streaming query (file replay → memory)
-    sdir = str(tmp_path / "emb_stream")
-    serve.write.parquet(sdir)
-    stream = spark.readStream.schema(serve.schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(sdir)
-    q = (
-        score_embedding_outliers(stream, cent, threshold=thr)
-        .writeStream.format("memory")
-        .queryName("emb_outliers")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    finish(q)
-    streamed = {
-        r.vec_id: (r.anomaly, round(r.dist2, 9))
-        for r in spark.table("emb_outliers").collect()
-    }
-    batched = {
-        r.vec_id: (r.anomaly, round(r.dist2, 9)) for r in batch.collect()
-    }
-    assert streamed == batched
-
-
-def test_two_level_assignment_agreement(spark):
-    """Coarse-probed assignment vs flat assignment: >=95% agreement at
-    nprobe=4 on uniform-ish data with k=32, and EXACT equality when
-    every coarse group is probed."""
-    from real_time_data_anomaly_detection_spark.operators.clustering import (
-        kmeans_assign_two_level,
-        kmeans_fit_sample,
-    )
-
-    rng = np.random.RandomState(7)
-    X = rng.randn(600, 16)
-    ids = np.arange(600)
-    df = _blob_df(spark, ids, X)
-    cent = kmeans_fit_sample(df, k=32, n_iters=5, seed=1)
-
-    flat = np.array(
-        [r.cell for r in kmeans_assign(df, cent).orderBy("vec_id").collect()]
-    )
-    two = np.array(
-        [
-            r.cell
-            for r in kmeans_assign_two_level(df, cent, nprobe=4)
-            .orderBy("vec_id")
-            .collect()
-        ]
-    )
-    assert (flat == two).mean() >= 0.95, (flat == two).mean()
-
-    exact = np.array(
-        [
-            r.cell
-            for r in kmeans_assign_two_level(df, cent, n_coarse=6, nprobe=6)
-            .orderBy("vec_id")
-            .collect()
-        ]
-    )
-    assert (flat == exact).all()
 
 
 def test_semantic_dup_pairs_stop_cluster_valve(spark):

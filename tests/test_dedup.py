@@ -1,14 +1,12 @@
-"""Dedup operator tests: exact, MinHash-LSH recall vs exact Jaccard,
-SimHash behavior on near-identical docs."""
+"""Dedup operator tests: MinHash-LSH recall vs exact Jaccard, SimHash
+behavior on near-identical docs, connected components, edit-distance
+and embedding near-dup pairs."""
 
 from __future__ import annotations
-
-from tests.conftest import finish
 
 from pyspark.sql import functions as F
 
 from real_time_data_anomaly_detection_spark.operators.dedup import (
-    exact_dedup,
     jaccard_pairs,
     minhash_neardup_pairs,
     shingles,
@@ -28,13 +26,6 @@ def _docs(spark):
         (5, base + " extra trailing tokens added"),  # near-dup, longer
     ]
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_exact_dedup(spark):
-    d = _docs(spark)
-    out = exact_dedup(d, ["text"], "doc_id").collect()
-    kept = sorted(r.doc_id for r in out)
-    assert kept == [0, 2, 3, 4, 5]  # doc 1 removed, doc 0 kept (min id)
 
 
 def test_jaccard_pairs_finds_neardups(spark):
@@ -130,110 +121,6 @@ def test_embed_lsh_recall_vs_exact(spark):
     assert exact, "fixture must contain near-dup pairs"
     recall = len(approx & exact) / len(exact)
     assert recall >= 0.85, f"recall {recall:.3f} below S-curve bound"
-
-
-def test_minhash_incremental_index(spark, tmp_path):
-    """Persisted bucketed index: new docs match the corpus without
-    reshuffling it — index side of the band join is exchange-free."""
-    from real_time_data_anomaly_detection_spark.operators.dedup import (
-        banded_signatures,
-        build_minhash_index,
-        minhash_match_incremental,
-        minhash_signatures,
-    )
-    from real_time_data_anomaly_detection_spark.plans.inspect import count_exchanges
-
-    d = _docs(spark)
-    corpus = d.filter(F.col("doc_id").isin([0, 3, 4]))
-    new = d.filter(F.col("doc_id").isin([1, 2, 5]))
-    build_minhash_index(corpus, "mh_idx", str(tmp_path / "mh_idx"))
-    try:
-        got = {
-            (r.new_id, r.corpus_id): r.est_jaccard
-            for r in minhash_match_incremental(new, "mh_idx").collect()
-        }
-        assert got[(1, 0)] == 1.0  # exact dup: every minhash slot agrees
-        assert (2, 0) in got and got[(2, 0)] >= 0.5  # one-token edit
-        assert (5, 0) in got  # superset doc
-        assert not any(c in (3, 4) for _, c in got)  # unrelated corpus docs
-
-        # co-location: with broadcast off, the band join shuffles ONLY
-        # the new side — the bucketed index scan adds no exchange
-        # (one fewer than joining the same files unbucketed), and the
-        # plan shows the bucketed scan.
-        from real_time_data_anomaly_detection_spark.operators.dedup import shingles
-        from real_time_data_anomaly_detection_spark.plans.inspect import formatted_plan
-
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-        try:
-            nb = banded_signatures(minhash_signatures(shingles(new))).select(
-                F.col("doc_id").alias("new_id"), "band_key"
-            )
-            j = spark.table("mh_idx").join(nb, "band_key")
-            assert "Bucketed: true" in formatted_plan(j)
-            unbucketed = spark.read.parquet(str(tmp_path / "mh_idx")).join(
-                nb, "band_key"
-            )
-            assert count_exchanges(j) == count_exchanges(unbucketed) - 1, (
-                "bucketed index side must not shuffle"
-            )
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    finally:
-        spark.sql("DROP TABLE IF EXISTS mh_idx")
-
-
-def test_stream_dedup_against_index(spark, tmp_path):
-    """Online ingestion dedup: micro-batches drop corpus near-dups and
-    in-batch exact dups; only novel docs reach the sink."""
-    import pandas as pd
-
-    from real_time_data_anomaly_detection_spark.operators.dedup import (
-        build_minhash_index,
-        stream_dedup_against_index,
-    )
-    from real_time_data_anomaly_detection_spark.streaming.source import (
-        file_replay_source,
-    )
-
-    d = _docs(spark)
-    build_minhash_index(
-        d.filter(F.col("doc_id").isin([0, 3, 4])), "mh_stream_idx",
-        str(tmp_path / "idx"),
-    )
-    try:
-        replay = tmp_path / "replay"
-        replay.mkdir()
-        # batch 1: corpus dup (1), near-dup (2); batch 2: near-dup (5),
-        # novel (6), novel exact-dup pair (7, 8 — one must survive)
-        pd.DataFrame({"doc_id": [1, 2], "text": [
-            "the quick brown fox jumps over the lazy dog and runs far away tonight",
-            "the quick brown fox jumps over the sleepy dog and runs far away tonight",
-        ]}).to_parquet(replay / "b1.parquet")
-        novel = "entirely novel sentence with completely fresh vocabulary and tokens"
-        pd.DataFrame({"doc_id": [5, 6, 7, 8], "text": [
-            "the quick brown fox jumps over the lazy dog and runs far away tonight extra trailing tokens added",
-            "a different novel document about structured streaming state stores",
-            novel, novel,
-        ]}).to_parquet(replay / "b2.parquet")
-
-        out = str(tmp_path / "clean")
-        stream = file_replay_source(
-            spark, str(replay), "doc_id long, text string"
-        )
-        q = stream_dedup_against_index(
-            stream, "mh_stream_idx", out, trigger={"availableNow": True}
-        )
-        finish(q)
-        kept = sorted(r.doc_id for r in spark.read.parquet(out).collect())
-        assert kept == [6, 7], kept  # 1,2,5 match corpus; 8 in-batch dup
-        # epoch replay is idempotent: re-writing batch dirs, not append
-        assert sorted(
-            p.name for p in (tmp_path / "clean").iterdir() if p.name.startswith("batch=")
-        ) == ["batch=0", "batch=1"]
-    finally:
-        spark.sql("DROP TABLE IF EXISTS mh_stream_idx")
 
 
 def test_connected_components_and_neardup_removal(spark):
@@ -567,7 +454,7 @@ def test_leakage_safe_split_properties(spark):
 
 def test_containment_posting_cap(spark):
     """containment_pairs exposes the same stop-shingle valve as
-    jaccard_pairs (round-7 advice #4): a boilerplate shingle shared by
+    jaccard_pairs: a boilerplate shingle shared by
     every doc must not generate quadratic pair rows once capped, while
     a genuine subset pair survives with containment computed over the
     capped universe."""

@@ -1,92 +1,24 @@
-"""Multimodal plumbing: schema, Arrow batching, deterministic stub
-decode, frame sampling, resize planning."""
+"""Multimodal decode stack and perceptual-hash operators: the
+codec-free pixel decoders behind ``decode_gray_milli``, the WAV sample
+decoder, Motion-JPEG frame extraction, and the image / audio / video
+near-dup operators built on them."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from real_time_data_anomaly_detection_spark.operators.multimodal import (
-    FEATURE_DIM,
-    MEDIA_SCHEMA,
-    _decode_payload,
-    extract_features,
-    resize_plan,
-    sample_frames,
+    _wav_samples_int,
+    decode_gray_milli,
 )
 
 
-def _media(spark):
-    rows = [
-        (0, "image", b"\x89PNGfakebytes", (800, 600, None, None, "png")),
-        (1, "image", b"\xff\xd8JPEGfake", (300, 200, None, None, "jpeg")),
-        (2, "audio", b"RIFFfakewav", (None, None, 16000, 2500, "pcm")),
-        (3, "video", b"\x00\x00ftypmp4", (1920, 1080, None, 3500, "h264")),
-        (4, "image", None, (10, 10, None, None, "png")),  # null payload
-    ]
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def test_extract_features_shapes(spark):
-    out = extract_features(_media(spark)).collect()
-    by_id = {r.media_id: r for r in out}
-    assert len(out) == 5
-    for i in (0, 1, 2, 3):
-        assert len(by_id[i].feature) == FEATURE_DIM
-        assert all(0 <= v < 1 for v in by_id[i].feature)
-    assert by_id[4].feature is None  # null payload survives as null
-
-
-def test_features_deterministic_content_addressed(spark):
-    a = {r.media_id: r.feature for r in extract_features(_media(spark)).collect()}
-    b = {r.media_id: r.feature for r in extract_features(_media(spark)).collect()}
-    assert a == b
-    assert a[0] != a[1]  # different payloads → different features
-
-
-def test_stub_rejects_unknown_type():
-    with pytest.raises(NotImplementedError):
-        _decode_payload("hologram", b"xyz")
-
-
-def test_sample_frames(spark):
-    frames = sample_frames(_media(spark), every_ms=1000).collect()
-    # video id=3, duration 3500ms → ts 0,1000,2000,3000
-    assert [(r.media_id, r.frame_ts_ms) for r in frames] == [
-        (3, 0),
-        (3, 1000),
-        (3, 2000),
-        (3, 3000),
-    ]
-
-
-def test_resize_plan(spark):
-    plans = {r.media_id: r for r in resize_plan(_media(spark), max_side=512).collect()}
-    assert plans[0].target_width == 512 and plans[0].target_height == 384
-    assert plans[1].scale == 1.0  # already small
-
-
-def test_real_image_decode_when_codecs_present(spark):
-    """Runs only where Pillow exists (auto-skips in this env): a real
-    PNG must decode to a normalized histogram, not the hash stub."""
-    import pytest
-
-    PIL = pytest.importorskip("PIL")  # noqa: F841
-    import io
-
+def _milli(rgb):
+    """Reference milli-luma 299·R + 587·G + 114·B of an (h, w, 3) image."""
     import numpy as np
-    from PIL import Image
 
-    from real_time_data_anomaly_detection_spark.operators.multimodal import (
-        FEATURE_DIM,
-        _decode_payload,
-    )
-
-    buf = io.BytesIO()
-    Image.new("L", (8, 8), color=128).save(buf, format="PNG")
-    feat = _decode_payload("image", buf.getvalue())
-    assert len(feat) == FEATURE_DIM
-    assert abs(float(np.sum(feat)) - 1.0) < 1e-9  # histogram normalized
+    g = rgb.astype(np.int64)
+    return g[..., 0] * 299 + g[..., 1] * 587 + g[..., 2] * 114
 
 
 def _wav_bytes(samples, rate=16000, channels=1, width=2):
@@ -106,33 +38,33 @@ def _wav_bytes(samples, rate=16000, channels=1, width=2):
 
 def test_builtin_wav_decode():
     """RIFF PCM WAV decodes for real — numpy + stdlib only, no codecs:
-    a constant-amplitude signal must yield that amplitude in every
-    band, not a hash stub."""
+    the samples come back exactly, centered, from the first channel."""
     import numpy as np
 
-    amp = 8192  # -> 0.25 after /32768 scaling
-    payload = _wav_bytes([amp] * 1600)
-    feat = _decode_payload("audio", payload)
-    assert len(feat) == FEATURE_DIM
-    assert np.allclose(feat, 0.25)
+    amp = 8192
+    samples = _wav_samples_int(_wav_bytes([amp] * 1600))
+    assert samples.dtype == np.int64 and len(samples) == 1600
+    assert (samples == amp).all()
 
-    # stereo: feature comes from the FIRST channel only
+    # stereo: samples come from the FIRST channel only
     left, right = 8192, 32000
-    stereo = _wav_bytes([left, right] * 800, channels=2)
-    assert np.allclose(_decode_payload("audio", stereo), 0.25)
+    stereo = _wav_samples_int(_wav_bytes([left, right] * 800, channels=2))
+    assert len(stereo) == 800 and (stereo == left).all()
+
+    assert _wav_samples_int(b"not a wav") is None
 
 
 def test_builtin_ppm_and_bmp_decode():
     """P6 PPM and 24bpp BMP decode for real with numpy alone; the same
-    pixels through either container give the same histogram feature."""
+    pixels through either container give the same milli-luma matrix."""
     import numpy as np
 
     w, h = 8, 4
-    # uniform gray 128 -> luma 128 -> histogram bin 8 (128 // 16)
+    # uniform gray 128 -> milli-luma 128 * (299 + 587 + 114)
     ppm = b"P6\n# comment\n%d %d\n255\n" % (w, h) + bytes([128, 128, 128]) * (w * h)
-    feat = _decode_payload("image", ppm)
-    assert len(feat) == FEATURE_DIM
-    assert feat[8] == 1.0 and float(np.sum(feat)) == 1.0
+    gm = decode_gray_milli(ppm)
+    assert gm.shape == (h, w)
+    assert (gm == 128_000).all()
 
     # BMP: same uniform image, bottom-up rows, BGR, 4-byte row padding
     row = bytes([128, 128, 128]) * w
@@ -152,8 +84,7 @@ def test_builtin_ppm_and_bmp_decode():
         + len(pixels).to_bytes(4, "little")
         + b"\x00" * 16
     )
-    feat_bmp = _decode_payload("image", header + pixels)
-    assert list(feat_bmp) == list(feat)
+    assert np.array_equal(decode_gray_milli(header + pixels), gm)
 
 
 def _png_filter_rows(flat, c, filters):
@@ -222,66 +153,33 @@ def _png_bytes(pixels, filters=None):
 
 def test_builtin_png_decode():
     """8-bit PNG decodes for real — stdlib zlib + numpy, no Pillow —
-    across every scanline filter type, to the same _gray_histogram
-    contract as the other image decoders."""
+    across every scanline filter type, reproducing the source pixels'
+    milli-luma exactly."""
     import numpy as np
 
-    from real_time_data_anomaly_detection_spark.operators.multimodal import (
-        _gray_histogram,
-        _rgb_to_gray,
-    )
-
-    # uniform gray 128, filter 0 -> everything lands in bin 8
+    # uniform gray 128, filter 0: gray PNGs scale the sample by 1000
     gray = np.full((4, 8, 1), 128, dtype=np.uint8)
-    feat = _decode_payload("image", _png_bytes(gray))
-    assert len(feat) == FEATURE_DIM
-    assert feat[8] == 1.0
+    gm = decode_gray_milli(_png_bytes(gray))
+    assert gm.shape == (4, 8) and (gm == 128_000).all()
 
-    # random RGB, one row per filter type incl. Paeth: decode must
-    # exactly reproduce the histogram of the original pixels
+    # random RGB, one row per filter type incl. Paeth
     rng = np.random.default_rng(42)
     rgb = rng.integers(0, 256, size=(5, 7, 3), dtype=np.uint8)
-    expected = _gray_histogram(
-        _rgb_to_gray(rgb.reshape(-1, 3).astype(np.float64))
-    )
-    feat_rgb = _decode_payload("image", _png_bytes(rgb, filters=[0, 1, 2, 3, 4]))
-    assert np.allclose(feat_rgb, expected)
+    want = _milli(rgb)
+    got = decode_gray_milli(_png_bytes(rgb, filters=[0, 1, 2, 3, 4]))
+    assert np.array_equal(got, want)
 
-    # RGBA: alpha channel ignored -> identical histogram
+    # RGBA: alpha channel ignored -> identical luma
     rgba = np.concatenate(
         [rgb, rng.integers(0, 256, size=(5, 7, 1), dtype=np.uint8)], axis=2
     )
-    feat_rgba = _decode_payload("image", _png_bytes(rgba, filters=[4, 3, 2, 1, 0]))
-    assert np.allclose(feat_rgba, expected)
+    got = decode_gray_milli(_png_bytes(rgba, filters=[4, 3, 2, 1, 0]))
+    assert np.array_equal(got, want)
 
-    # 16-bit depth is out of builtin scope: falls through to the stub
-    # (deterministic 16-dim digest), never a crash
+    # 16-bit depth is outside the decoder's scope: None, never a crash
     deep = _png_bytes(gray)
     deep = deep.replace(b"\x08\x00\x00\x00\x00", b"\x10\x00\x00\x00\x00", 1)
-    feat_stub = _decode_payload("image", deep)
-    assert len(feat_stub) == FEATURE_DIM
-
-
-def test_builtin_decode_through_spark(spark):
-    """The builtin decoders run end-to-end through the mapInPandas
-    stage — real decode in THIS env, no optional imports."""
-    import numpy as np
-
-    rows = [
-        (10, "audio", _wav_bytes([16384] * 800), (None, None, 16000, 50, "pcm")),
-        (
-            11,
-            "image",
-            b"P6\n2 2\n255\n" + bytes([255, 255, 255]) * 4,
-            (2, 2, None, None, "ppm"),
-        ),
-    ]
-    out = {
-        r.media_id: r.feature
-        for r in extract_features(spark.createDataFrame(rows, MEDIA_SCHEMA)).collect()
-    }
-    assert np.allclose(out[10], 0.5)  # 16384/32768 in every band
-    assert out[11][FEATURE_DIM - 1] == 1.0  # white -> top intensity bin
+    assert decode_gray_milli(deep) is None
 
 
 def _gif_bytes(rgb, interlaced=False):
@@ -344,24 +242,16 @@ def _gif_bytes(rgb, interlaced=False):
 
 def test_builtin_gif_decode():
     """GIF decodes for real — stdlib + numpy GIF-LZW, no Pillow —
-    including dictionary growth across clear codes, to the same
-    _gray_histogram contract as the other image decoders."""
+    including dictionary growth across clear codes, reproducing the
+    source pixels' milli-luma exactly."""
     import numpy as np
-
-    from real_time_data_anomaly_detection_spark.operators.multimodal import (
-        _decode_payload,
-        _gray_histogram,
-        _rgb_to_gray,
-    )
 
     rng = np.random.default_rng(7)
     # 20x30 image, 600 pixels -> exercises multiple clear-code resets;
     # drawn from a 200-color palette so it fits one GIF color table
     palette = rng.integers(0, 256, size=(200, 3), dtype=np.uint8)
     rgb = palette[rng.integers(0, 200, size=(20, 30))]
-    expected = _gray_histogram(_rgb_to_gray(rgb.reshape(-1, 3).astype(np.float64)))
-    feat = _decode_payload("image", _gif_bytes(rgb))
-    assert np.allclose(feat, expected)
+    assert np.array_equal(decode_gray_milli(_gif_bytes(rgb)), _milli(rgb))
 
 
 def test_builtin_gif_real_lzw_stream():
@@ -614,42 +504,26 @@ def _jpeg_bytes(img, subsampling="gray", restart_interval=0):
 
 def test_builtin_jpeg_decode_grayscale():
     """Generated baseline grayscale JPEG decodes codec-free and the
-    histogram matches the source image within quantization error."""
+    luma plane matches the source image within quantization error."""
     import numpy as np
-
-    from real_time_data_anomaly_detection_spark.operators.multimodal import (
-        _decode_jpeg_builtin,
-        _decode_payload,
-        _gray_histogram,
-    )
 
     rng = np.random.default_rng(7)
     x = np.linspace(0, 255, 64)
     img = np.clip(
         np.add.outer(x, x) / 2 + rng.normal(0, 8, (64, 64)), 0, 255
     ).astype(np.uint8)
-    payload = _jpeg_bytes(img, "gray")
-    got = _decode_jpeg_builtin(payload)
-    assert got is not None
-    want = _gray_histogram(img.astype(np.float64))
-    assert float(np.abs(got - want).sum()) < 0.12  # lossy: small L1 drift
-    # and the dispatcher routes JPEG to the real decoder, not the stub
-    assert np.allclose(_decode_payload("image", payload), got)
+    gm = decode_gray_milli(_jpeg_bytes(img, "gray"))
+    assert gm.shape == (64, 64) and (gm % 1000 == 0).all()
+    assert float(np.abs(gm / 1000 - img).mean()) < 8  # lossy: small drift
 
 
 def test_builtin_jpeg_decode_color_444_and_420():
     """3-component baseline JPEGs (4:4:4 and 4:2:0): the luma-only
-    decode matches the encoder's own Y plane histogram — chroma blocks
-    advance the bitstream correctly in both interleave shapes."""
+    decode matches the encoder's own Y plane — chroma blocks advance
+    the bitstream correctly in both interleave shapes."""
     import numpy as np
 
-    from real_time_data_anomaly_detection_spark.operators.multimodal import (
-        _decode_jpeg_builtin,
-        _gray_histogram,
-    )
-
-    # smooth gradients: DCT quantization error stays tiny, so the
-    # histogram (bin width 16) barely migrates across bin edges
+    # smooth gradients: DCT quantization error stays tiny
     gx = np.linspace(0, 255, 40)
     gy = np.linspace(0, 255, 48)
     img = np.stack(
@@ -660,45 +534,31 @@ def test_builtin_jpeg_decode_color_444_and_420():
         ],
         axis=-1,
     ).astype(np.uint8)
-    y = (
-        0.299 * img[..., 0] + 0.587 * img[..., 1] + 0.114 * img[..., 2]
-    ).astype(np.float64)
-    want = _gray_histogram(y)
+    y = 0.299 * img[..., 0] + 0.587 * img[..., 1] + 0.114 * img[..., 2]
     for mode in ("444", "420"):
-        got = _decode_jpeg_builtin(_jpeg_bytes(img, mode))
-        assert got is not None, mode
-        assert float(np.abs(got - want).sum()) < 0.15, mode
+        gm = decode_gray_milli(_jpeg_bytes(img, mode))
+        assert gm is not None and gm.shape == (48, 40), mode
+        err = np.abs(gm / 1000 - y)
+        assert float(err.mean()) < 2 and float(err.max()) < 6, mode
 
 
 def test_builtin_jpeg_restart_markers():
+    """Restart intervals reset DC prediction at each RSTn marker: the
+    decode equals the same image encoded without restarts."""
     import numpy as np
-
-    from real_time_data_anomaly_detection_spark.operators.multimodal import (
-        _decode_jpeg_builtin,
-        _gray_histogram,
-    )
 
     rng = np.random.default_rng(3)
     img = np.clip(rng.normal(128, 40, (40, 56)), 0, 255).astype(np.uint8)
     payload = _jpeg_bytes(img, "gray", restart_interval=3)
     assert b"\xff\xd0" in payload or b"\xff\xd1" in payload  # RSTn emitted
-    got = _decode_jpeg_builtin(payload)
-    assert got is not None
-    want = _gray_histogram(img.astype(np.float64))
-    assert float(np.abs(got - want).sum()) < 0.12
+    gm = decode_gray_milli(payload)
+    assert gm is not None and gm.shape == (40, 56)
+    assert np.array_equal(gm, decode_gray_milli(_jpeg_bytes(img, "gray")))
 
 
 def test_scanless_jpeg_falls_to_stub():
-    """A SOF2 stream with NO decodable SOS scan returns None from the
-    builtin decoder — the dispatcher then yields the deterministic
-    stub. (Renamed per round-10 advice #3: SOF2 itself no longer
-    falls to the stub — the progressive decoder is real — this pins
-    only the no-scan degenerate payload.)"""
-    from real_time_data_anomaly_detection_spark.operators.multimodal import (
-        _decode_jpeg_builtin,
-        _decode_payload,
-    )
-
+    """A SOF2 stream with NO decodable SOS scan decodes to None, so
+    the row's hash is null instead of the job failing."""
     # SOI + minimal SOF2 segment, then EOI
     payload = (
         b"\xff\xd8"
@@ -707,13 +567,11 @@ def test_scanless_jpeg_falls_to_stub():
         + bytes([1, 1, 0x11, 0])
         + b"\xff\xd9"
     )
-    assert _decode_jpeg_builtin(payload) is None
-    feat = _decode_payload("image", payload)
-    assert len(feat) == 16 and all(0 <= v < 1 for v in feat)  # sha256 stub
+    assert decode_gray_milli(payload) is None
 
 
 # ---------------------------------------------------------------------------
-# Perceptual near-dup (dHash) — round-8 verdict #6
+# Perceptual near-dup (dHash)
 # ---------------------------------------------------------------------------
 
 
@@ -859,9 +717,7 @@ def test_decode_gray_milli_gif_and_jpeg_paths():
     gif = _gif_bytes(rgb)
     gm = decode_gray_milli(gif)
     assert gm is not None and gm.shape == (16, 16)
-    g = rgb.astype(np.int64)
-    want = g[:, :, 0] * 299 + g[:, :, 1] * 587 + g[:, :, 2] * 114
-    assert (gm == want).all()
+    assert (gm == _milli(rgb)).all()
 
     # JPEG: lossy, so check the milli scale and shape contract only
     img = rng.randint(0, 256, size=(16, 16), dtype=np.uint8)
@@ -947,9 +803,9 @@ def test_perceptual_hashes_brightness_invariant():
 
 
 def test_block_means_match_loop():
-    """Round-9 verdict next-round #2: the integral-image vectorization
+    """The integral-image vectorization
     of dhash_bits/ahash_bits must be BIT-equal to the original
-    per-block Python loops (the round-9 implementation, reproduced
+    per-block Python loops (the earlier implementation, reproduced
     here as the reference) on random matrices — shapes that don't
     divide the grid evenly and negative values included. Also prints
     the measured per-image cost of both paths (informational; host
@@ -1024,7 +880,7 @@ def test_block_means_match_loop():
 
 
 def test_torn_payloads_yield_null(spark):
-    """Round-9 advice #1: a payload with valid magic but a torn body
+    """A payload with valid magic but a torn body
     (truncated PPM header, corrupt PNG zlib stream, truncated RIFF)
     must yield a NULL hash/fingerprint — never raise in the executor
     and fail the whole job. Images smaller than the hash grid also
@@ -1065,7 +921,7 @@ def test_torn_payloads_yield_null(spark):
 
 
 def test_image_neardup_default_bands_lossless(spark):
-    """Round-9 advice #3: with n_bands unset, image_neardup_pairs picks
+    """With n_bands unset, image_neardup_pairs picks
     the smallest hash-width divisor STRICTLY above max_hamming — the
     documented <= max_hamming contract holds losslessly by pigeonhole
     (the old fixed default of 4 could miss pairs at distance 4-6); an
@@ -1102,7 +958,7 @@ def test_image_neardup_default_bands_lossless(spark):
 
 
 def test_image_index_match_equals_inline_pairs(spark, tmp_path_factory):
-    """Round-10: the PERSISTED image index path returns exactly the
+    """The PERSISTED image index path returns exactly the
     inline pair search's cross pairs — build_image_index over a corpus
     half, image_index_match of the batch half, compared against
     image_neardup_pairs on the union restricted to (corpus, batch)
@@ -1150,87 +1006,9 @@ def test_image_index_match_equals_inline_pairs(spark, tmp_path_factory):
     assert got == want and len(got) > 0
 
 
-def _mp4_bytes(timescale, duration, version=0):
-    """Minimal ISO-BMFF fixture: ftyp + moov(mvhd) with the given
-    timescale/duration, version 0 (32-bit) or 1 (64-bit) mvhd."""
-    ftyp = (16).to_bytes(4, "big") + b"ftypisom" + b"\x00\x00\x02\x00"
-    if version == 0:
-        body = (
-            b"\x00\x00\x00\x00"          # version 0 + flags
-            + (0).to_bytes(4, "big")      # creation
-            + (0).to_bytes(4, "big")      # modification
-            + timescale.to_bytes(4, "big")
-            + duration.to_bytes(4, "big")
-            + b"\x00" * 80                # rate/volume/matrix/next_track
-        )
-    else:
-        body = (
-            b"\x01\x00\x00\x00"
-            + (0).to_bytes(8, "big")
-            + (0).to_bytes(8, "big")
-            + timescale.to_bytes(4, "big")
-            + duration.to_bytes(8, "big")
-            + b"\x00" * 80
-        )
-    mvhd = (8 + len(body)).to_bytes(4, "big") + b"mvhd" + body
-    moov = (8 + len(mvhd)).to_bytes(4, "big") + b"moov" + mvhd
-    return ftyp + moov
-
-
-def test_mp4_duration_parse_and_sample_frames(spark):
-    """Round-10: REAL codec-free MP4/MOV metadata decode — the ISO-BMFF
-    box walk must read mvhd timescale/duration in both version forms,
-    null out torn bytes, and feed sample_frames(decode_missing=True)
-    for rows whose metadata lacks a duration."""
-    from real_time_data_anomaly_detection_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        _mp4_duration_ms,
-        sample_frames,
-        video_duration_ms,
-    )
-
-    assert _mp4_duration_ms(_mp4_bytes(1000, 3500)) == 3500
-    assert _mp4_duration_ms(_mp4_bytes(600, 1200, version=1)) == 2000
-    assert _mp4_duration_ms(_mp4_bytes(90000, 630000)) == 7000
-    assert _mp4_duration_ms(b"\x00\x00ftypmp4 garbage") is None
-    assert _mp4_duration_ms(_mp4_bytes(0, 99)) is None  # zero timescale
-    assert _mp4_duration_ms(_mp4_bytes(1000, 3500)[:30]) is None  # torn
-    # corrupt mvhd with an absurd duration must null, not overflow the
-    # Arrow int64 column or hand sample_frames an unmaterializable
-    # sequence (review fix)
-    assert _mp4_duration_ms(_mp4_bytes(1, 2**64 - 1, version=1)) is None
-    assert _mp4_duration_ms(_mp4_bytes(1, 2**50, version=1)) is None
-    assert (
-        _mp4_duration_ms(_mp4_bytes(1000, 30 * 86_400_000)) == 30 * 86_400_000
-    )
-
-    rows = [
-        (0, "video", _mp4_bytes(1000, 2500), (None, None, None, None, "h264")),
-        (1, "video", _mp4_bytes(1000, 1000), (None, None, None, 9000, "h264")),
-        (2, "video", b"garbage", (None, None, None, None, "h264")),
-        (3, "image", _mp4_bytes(1000, 5000), (None, None, None, None, "png")),
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    durs = {r.media_id: r.duration_ms
-            for r in video_duration_ms(df.filter("media_type = 'video'")).collect()}
-    assert durs == {0: 2500, 1: 1000, 2: None}
-
-    got = sorted(
-        (r.media_id, r.frame_ts_ms)
-        for r in sample_frames(df, every_ms=1000, decode_missing=True).collect()
-    )
-    # id 1 keeps its METADATA duration (9000); id 0 parses 2500 from
-    # bytes; id 2 unparseable drops; id 3 is not video.
-    want = sorted(
-        [(0, t) for t in (0, 1000, 2000)]
-        + [(1, t) for t in range(0, 9001, 1000)]
-    )
-    assert got == want
-
-
 def test_image_index_meta_mismatch_raises(spark, tmp_path_factory):
     """build_image_index persists the banding geometry; a reader with
-    different parameters must fail LOUDLY (review fix) — a geometry
+    different parameters must fail LOUDLY — a geometry
     mismatch does not error at join time, it silently matches almost
     nothing because the packed bk domains differ."""
     import numpy as np
@@ -1258,7 +1036,7 @@ def test_image_index_meta_mismatch_raises(spark, tmp_path_factory):
 
 
 # ---------------------------------------------------------------------------
-# Progressive JPEG fixtures (round-10): a spec-faithful progressive encoder
+# Progressive JPEG fixtures: a spec-faithful progressive encoder
 # (ITU T.81 Annex G / libjpeg jcphuff.c semantics) so the SOF2 decode path is
 # exercised against REAL successive-approximation streams. The load-bearing
 # cross-check: baseline and progressive encodings of the SAME image share the
@@ -1560,7 +1338,7 @@ def _jpeg_progressive_bytes(img, subsampling="gray", restart_interval=0):
 
 
 def test_builtin_progressive_jpeg_decode():
-    """SOF2 progressive decode (round-10): baseline and progressive
+    """SOF2 progressive decode: baseline and progressive
     encodings of the SAME image share the quantized coefficient
     tensor, so the two decoders — entirely different entropy syntax
     (DPCM/EOB vs spectral selection + successive approximation with
@@ -1615,9 +1393,9 @@ def test_builtin_progressive_jpeg_decode():
 
 def test_progressive_jpeg_through_decode_paths(spark):
     """A progressive JPEG flows through the REAL decode everywhere the
-    engine consumes images: decode_gray_milli (perceptual hashes) and
-    extract_features both accept SOF2 now — matching the baseline
-    encoding of the same image."""
+    engine consumes images: decode_gray_milli and the perceptual hashes
+    built on it accept SOF2 — matching the baseline encoding of the
+    same image."""
     import numpy as np
 
     from real_time_data_anomaly_detection_spark.operators.multimodal import (
@@ -1838,7 +1616,7 @@ def test_image_admit_undecodable_policy(spark, tmp_path_factory):
 
 
 def test_default_bands_edge_cases(spark):
-    """Round-10 advice #1: max_hamming=0 (exact-dup search) must not
+    """max_hamming=0 (exact-dup search) must not
     resolve to ONE band — a 64-bit band mask (1<<64)-1 is not a Spark
     BIGINT literal — and max_hamming >= nbits must be a descriptive
     ValueError, not a bare StopIteration. The floor-at-2 keeps the
@@ -1876,18 +1654,18 @@ def test_default_bands_edge_cases(spark):
 
 
 def test_load_image_index_guards_geometry(spark, tmp_path_factory):
-    """Round-10 advice #4: load_image_index is the guarded read path —
-    it checks the persisted banding geometry BEFORE handing back the
-    relation (a raw parquet read with mismatched parameters silently
-    near-empty-joins), and the relation it returns matches exactly
-    what an inline read of seed does."""
+    """The guarded read path: check_image_index_meta compares the
+    caller's RESOLVED banding geometry (max_hamming picks n_bands)
+    with the index's meta.json before the seed is read, and the seed
+    it guards matches through image_index_match."""
     import numpy as np
     import pytest as _pt
 
     from real_time_data_anomaly_detection_spark.operators.multimodal import (
+        _default_bands,
         build_image_index,
+        check_image_index_meta,
         image_index_match,
-        load_image_index,
     )
 
     rng = np.random.RandomState(9)
@@ -1907,25 +1685,19 @@ def test_load_image_index_guards_geometry(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("imgidx_load"))
     build_image_index(corpus, path, max_hamming=6)
 
+    assert _default_bands(64, 3) != _default_bands(64, 6)
     with _pt.raises(ValueError, match="banding geometries"):
-        load_image_index(spark, path, max_hamming=3)  # resolves 4 bands
+        check_image_index_meta(path, 8, 8, _default_bands(64, 3))
 
-    idx = load_image_index(spark, path, max_hamming=6)
-    want = {
-        tuple(r)
-        for r in image_index_match(
-            spark.read.parquet(f"{path}/seed"), batch, max_hamming=6
-        ).collect()
-    }
-    got = {
-        tuple(r)
-        for r in image_index_match(idx, batch, max_hamming=6).collect()
-    }
-    assert got == want and len(got) > 0
+    check_image_index_meta(path, 8, 8, _default_bands(64, 6))
+    idx = spark.read.parquet(f"{path}/seed")
+    got = image_index_match(idx, batch, max_hamming=6).collect()
+    assert len(got) > 0
+
 
 
 def test_progressive_decode_matches_libjpeg_fixture():
-    """Round-10 advice #2 closed with an INDEPENDENT fixture: the
+    """An INDEPENDENT fixture: the
     committed tests/golden/libjpeg_{baseline,progressive}.jpg were
     encoded by libjpeg itself (jpeg_simple_progression scan script,
     optimized Huffman — generator: gen_progressive_fixture.c), so the
@@ -1962,7 +1734,7 @@ def test_progressive_decode_matches_libjpeg_fixture():
 
 
 # ---------------------------------------------------------------------------
-# Motion-JPEG container fixtures (round-11 verdict #4): hand-rolled AVI
+# Motion-JPEG container fixtures: hand-rolled AVI
 # (RIFF) and MOV (ISO-BMFF) writers so the sample-table walkers are
 # exercised against spec-shaped containers holding REAL JPEG frames.
 # ---------------------------------------------------------------------------
@@ -2119,23 +1891,6 @@ def test_video_frame_dhash_matches_image_path(spark):
     assert got[(3, None)] is None  # kept, not dropped
 
 
-def test_decode_payload_video_mjpeg_real():
-    """_decode_payload('video', mjpeg) returns the REAL first-frame
-    histogram, not the sha256 stub; non-MJPEG video still stubs."""
-    import numpy as np
-
-    from real_time_data_anomaly_detection_spark.operators.multimodal import (
-        _decode_jpeg_builtin,
-        _decode_payload,
-    )
-
-    frames, _ = _mjpeg_test_frames()
-    feat = _decode_payload("video", _avi_bytes(frames))
-    assert np.array_equal(feat, _decode_jpeg_builtin(frames[0]))
-    stub = _decode_payload("video", b"\x00\x01\x02mp3ish")
-    assert len(stub) == 16 and all(0 <= v < 1 for v in stub)
-
-
 def test_video_neardup_pairs_frame_containment(spark):
     """Video-vs-video near-dup over frame hashes: two videos sharing
     2 of 3 frames (identical JPEG bytes -> Hamming 0) qualify at
@@ -2171,7 +1926,7 @@ def test_video_index_match_cross_media(spark, tmp_path):
     video_frame_dhash == image_dhash is pinned separately)."""
     from real_time_data_anomaly_detection_spark.operators.multimodal import (
         build_image_index,
-        load_image_index,
+        check_image_index_meta,
         video_index_match,
     )
 
@@ -2186,7 +1941,8 @@ def test_video_index_match_cross_media(spark, tmp_path):
         [(1, _avi_bytes([a, b, c])), (2, _mov_bytes([b, c, d]))],
         "media_id long, payload binary",
     )
-    idx = load_image_index(spark, idx_path)
+    check_image_index_meta(idx_path, 8, 8, 4)
+    idx = spark.read.parquet(f"{idx_path}/seed")
     got = video_index_match(idx, vids).collect()
     assert [(r.idx_id, r.video_id, r.frame_idx, r.hamming) for r in got] == [
         (100, 2, 2, 0)
@@ -2194,7 +1950,7 @@ def test_video_index_match_cross_media(spark, tmp_path):
 
 
 def test_null_cobatched_hashes_stay_exact(spark):
-    """Round-11 corruption regression: an undecodable payload in the
+    """Corruption regression: an undecodable payload in the
     SAME Arrow chunk as decodable ones must not disturb the good
     rows' hashes. pd.DataFrame over a [None, int, ...] list infers
     float64, which rounds 64-bit hashes past 2^53 — found when a
@@ -2256,70 +2012,6 @@ def test_video_scene_cuts(spark):
     assert rows[2].prev_idx == 1 and rows[4].prev_idx == 3
 
 
-def test_video_frame_dhash_cached_and_fps_reuse(spark, tmp_path):
-    """Round-13 decode-once contract: (a) video_frame_dhash_cached
-    persists the production decode's exact rows (null contract rows
-    included) and a later call with _SUCCESS present SKIPS the decode
-    — proven by pre-seeding a cache with sentinel rows and watching
-    them come back verbatim; (b) every video operator fed the cached
-    relation via fps= returns exactly what its own decode would."""
-    from real_time_data_anomaly_detection_spark.operators.multimodal import (
-        build_video_index,
-        video_frame_dhash,
-        video_frame_dhash_cached,
-        video_index_match,
-        video_neardup_pairs,
-        video_scene_cuts,
-    )
-
-    fr, _ = _mjpeg_test_frames(n=4)
-    a, b, c, d = fr
-    vids = spark.createDataFrame(
-        [(1, _avi_bytes([a, b, c])), (2, _mov_bytes([b, c, d])),
-         (3, b"not a video")],
-        "media_id long, payload binary",
-    )
-    cache = str(tmp_path / "vidhash")
-    cached = video_frame_dhash_cached(vids, cache)
-    direct = video_frame_dhash(vids)
-    key = lambda df: sorted(  # noqa: E731 — local comparator
-        (r.media_id, r.frame_idx, r.dhash) for r in df.collect()
-    )
-    assert key(cached) == key(direct)  # null row for id 3 included
-    import os
-
-    assert os.path.exists(cache + "/_SUCCESS")
-
-    # _SUCCESS present -> NO re-decode: a sentinel relation written in
-    # place comes back even though the videos arg would decode different
-    sentinel = spark.createDataFrame(
-        [(99, 0, 12345)], "media_id long, frame_idx long, dhash long"
-    )
-    cache2 = str(tmp_path / "pre_seeded")
-    sentinel.write.parquet(cache2)
-    again = video_frame_dhash_cached(vids, cache2)
-    assert key(again) == [(99, 0, 12345)]
-
-    # fps= equivalence across the family (videos=None on the fps path)
-    pk = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
-    assert pk(video_scene_cuts(None, fps=cached)) == pk(
-        video_scene_cuts(vids)
-    )
-    assert pk(video_neardup_pairs(None, fps=cached, min_frac=0.5)) == pk(
-        video_neardup_pairs(vids, min_frac=0.5)
-    )
-    idx_path = str(tmp_path / "vididx")
-    build_video_index(
-        None, idx_path, fps=cached.filter(F.col("media_id") == 1)
-    )
-    idx = spark.read.parquet(f"{idx_path}/seed")
-    batch_fps = cached.filter(F.col("media_id") == 2)
-    batch = vids.filter(F.col("media_id") == 2)
-    assert pk(video_index_match(idx, None, fps=batch_fps)) == pk(
-        video_index_match(idx, batch)
-    )
-
-
 def test_bk_prune_inlist_paths(spark):
     """_bk_prune_inlist's three paths: (a) a small key set filters the
     index to exactly the isin-equivalent rows; (b) a key set larger
@@ -2345,7 +2037,7 @@ def test_bk_prune_inlist_paths(spark):
 
 
 def test_video_index_match_all_undecodable_batch(spark, tmp_path):
-    """Round-13 _bk_prune_inlist edge: a batch with ZERO decodable
+    """_bk_prune_inlist edge: a batch with ZERO decodable
     frames yields zero candidate band keys — the single-string IN
     construction must keep the old isin([])-is-false semantics (empty
     match result), not emit an unparseable `bk IN ()`."""
@@ -2368,7 +2060,7 @@ def test_video_index_match_all_undecodable_batch(spark, tmp_path):
 
 
 def test_avi_multistream_takes_only_mjpg_frames(spark):
-    """Round-11 review #4: an AVI whose stream 00 is a foreign codec
+    """An AVI whose stream 00 is a foreign codec
     and stream 01 is MJPG must yield ONLY the 01dc frames — the
     walker previously collected every '##dc' chunk once any stream
     was MJPG, interleaving undecodable foreign frames (shifting
@@ -2412,7 +2104,7 @@ def test_avi_multistream_takes_only_mjpg_frames(spark):
 
 
 def test_video_admit_rejects_exactly_half_covered_even_n(spark):
-    """Round-12 review #1 regression: covered < ceil(n_frames·0.5) at
+    """Regression: covered < ceil(n_frames·0.5) at
     the even-n boundary — a 2-frame video with EXACTLY ONE frame
     covered by the index must be REJECTED (1 < ceil(1.0) = 1 is
     false); the superficially equivalent 2·covered ≤ n would admit
@@ -2446,7 +2138,7 @@ def test_video_admit_rejects_exactly_half_covered_even_n(spark):
 
 
 def test_dc_only_jpeg_entropy_pack_golden():
-    """Round-13: _dc_only_jpeg's per-bit put() loop was replaced by a
+    """_dc_only_jpeg's per-bit put() loop was replaced by a
     single big-int bit accumulator + one bytes.replace for 0xFF
     stuffing. The rewrite must be BYTE-identical — these goldens were
     generated from the pre-rewrite encoder (verified equal over 5000+
@@ -2474,43 +2166,3 @@ def test_dc_only_jpeg_entropy_pack_golden():
     p0, p1 = _synth_video_payload(0), _synth_video_payload(1)
     assert hashlib.md5(p0).hexdigest() == "8997a8d30f8ac88a37303a9165b7617a"
     assert hashlib.md5(p1).hexdigest() == "3a393d006813498f3823b22e794dd157"
-
-
-def test_bucket_ref_counts_drops_zero_count_key():
-    """Round-12 review #5 regression: a reference key whose counts sum
-    to zero has no bucket grid; _bucket_ref_counts must drop it (the
-    batch operators filter ref_n > 0) instead of KeyError-ing the
-    whole operator construction — including the all-keys-empty case."""
-    import pandas as pd
-
-    from real_time_data_anomaly_detection_spark.streaming.sketches import (
-        _bucket_ref_counts,
-        reference_bucket_edges,
-    )
-
-    ref = pd.DataFrame(
-        {
-            "event_type": ["a", "a", "z"],
-            "xm": [10, 20, 5],
-            "d1": [3, 1, 0],  # key z: zero total -> no grid
-        }
-    )
-    edges = reference_bucket_edges(ref, 4)
-    assert set(edges) == {"a"}
-    out = _bucket_ref_counts(ref, edges, "event_type", "xm")
-    assert set(out["event_type"]) == {"a"} and out["d1"].sum() == 4
-    empty = _bucket_ref_counts(ref[ref.event_type == "z"], {}, "event_type", "xm")
-    assert len(empty) == 0 and list(empty.columns) == ["event_type", "xm", "d1"]
-
-    # round-12 review pass 2 #2: the RAW path must drop the zero-total
-    # key at the shared _ref_base entry point too — previously it was
-    # admitted with o1 = 0 and drift_report_stream's chi² divided by
-    # o1 + o2 = 0, crashing the micro-batch after state.update (every
-    # replay re-crashed), while ks_drift_stream emitted ref_n=0 rows
-    # the batch operators (ref_n > 0 filter) never produce.
-    from real_time_data_anomaly_detection_spark.streaming.sketches import (
-        _ref_base,
-    )
-
-    base = _ref_base(ref, "event_type", "xm")
-    assert set(base) == {"a"}

@@ -1,4 +1,4 @@
-"""Salted-join / two-phase-agg equivalence with plain operators."""
+"""Salted-join equivalence with plain operators."""
 
 from __future__ import annotations
 
@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 
 from real_time_data_anomaly_detection_spark.functions.skew import (
     salted_join,
-    two_phase_agg,
 )
 
 
@@ -63,21 +62,3 @@ def test_salted_join_no_skew_means_no_replication(spark):
     assert "Generate explode" not in formatted_plan(salted)
     plain = left.join(right, "k").select("k", "v", "tag")
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_two_phase_agg_equals_plain(spark):
-    df = _skewed(spark)
-    plain = df.groupBy("k").agg(
-        F.count("v").alias("n"),
-        F.sum("v").alias("s"),
-        F.min("v").alias("lo"),
-        F.max("v").alias("hi"),
-    )
-    salted = two_phase_agg(
-        df,
-        ["k"],
-        {"n": ("v", "count"), "s": ("v", "sum"), "lo": ("v", "min"), "hi": ("v", "max")},
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(
-        map(tuple, salted.select("k", "n", "s", "lo", "hi").collect())
-    )

@@ -22,41 +22,31 @@ exercised by the listed tests.
 | Capability | Implementation | Tested by |
 |---|---|---|
 | Kafka source + JSON parse pipeline | streaming/source.py (kafka_energy_source, parse_energy_json) | tests/test_streaming.py::test_json_roundtrip_parse |
-| Rate / file-replay / socket sources | streaming/generator.py, streaming/source.py, sources/registry.py | tests/test_streaming.py, tests/test_sources.py |
+| Rate / file-replay sources | streaming/generator.py, streaming/source.py | tests/test_streaming.py |
 | Synthetic producer semantics (seasonality, drift, noise, anomaly injection, clamp) | streaming/generator.py | tests/test_generator.py |
 | Tumbling / sliding / session windows + watermark | streaming/windows.py | tests/test_streaming.py (incl. batch-twin equality, watermark holdback) |
 | Stream-stream time-bounded join | streaming/windows.py::stream_stream_join | tests/test_stream_join_recovery.py |
 | Streaming dedup (watermark-bounded) | streaming/windows.py::stream_dedup | — (thin wrapper over dropDuplicatesWithinWatermark) |
 | Count-based last-N-per-group stateful window | streaming/stateful.py (applyInPandasWithState) | tests/test_streaming.py::test_last_n_window_matches_deque_simulation |
-| Streaming CUSUM change-point detector (4 BIGINTs state/key, bit-equal to batch) | streaming/anomaly.py::cusum_stream | tests/test_streaming.py::test_cusum_stream_equals_batch |
-| Streaming KMV quantiles (bounded k-row sample state, idempotent under re-delivery) | streaming/sketches.py::kmv_quantile_stream | tests/test_streaming.py::test_kmv_quantile_stream_equals_batch, ::test_kmv_quantile_stream_idempotent_under_redelivery |
-| Streaming OHLC bars (8 BIGINTs state per (key, bar), commutative fold, bit-equal to batch) | streaming/timeseries.py::ohlc_stream | tests/test_streaming.py::test_ohlc_stream_equals_batch |
+| Streaming CUSUM change-point detector (4 BIGINTs state/key, bit-equal to batch) | streaming/anomaly.py::cusum_stream | tests/test_streaming.py::test_cusum_stream_equals_batch_closed_form |
 | Checkpoint recovery (offsets + state) | streaming/stateful.py + any durable sink | tests/test_stream_join_recovery.py::test_stateful_checkpoint_recovery |
 | IsolationForest anomaly scoring (distributed) | streaming/anomaly.py + functions/iforest.py | tests/test_iforest.py, tests/test_anomaly.py |
 | End-to-end detection pipeline | streaming/pipeline.py | tests/test_streaming.py::test_detection_pipeline_end_to_end |
-| Embedding-stream outlier scoring (centroid distance, stateless) | streaming/anomaly.py::score_embedding_outliers | tests/test_clustering.py::test_embedding_outlier_scoring_stream_equals_batch |
-| Sinks: memory / parquet / kafka / foreachBatch; graceful stop (batch-boundary, benign under load) | streaming/sinks.py | tests/test_stream_join_recovery.py::test_stop_gracefully_no_abort, ::test_stop_under_load_sink_consistent |
+| Memory-table sink (streaming/pipeline.py); graceful stop (batch-boundary, benign under load) | streaming/sinks.py | tests/test_stream_join_recovery.py::test_stop_gracefully_no_abort, ::test_stop_under_load_sink_consistent |
 | ANN similarity (hyperplane LSH + multiprobe) | operators/similarity.py | tests/test_similarity.py (recall + candidate-fraction bounds) |
-| Skew mitigation (salted join, two-phase agg) | functions/skew.py | tests/test_skew.py (equivalence on 90%-skewed keys) |
-| Multimodal binary columns + Arrow-batched decode | operators/multimodal.py (REAL codec-free decode for 8-bit PNG incl. Adam7+palette / GIF incl. interlaced / baseline+progressive JPEG / WAV PCM / PPM / 24bpp BMP / MP4-MOV metadata / Motion-JPEG video frames; Pillow/soundfile for the rest when importable; sha256 stub only for arithmetic/12-bit JPEG, MP3, non-MJPEG codecs) | tests/test_multimodal.py (incl. generated-stream PNG/GIF/JPEG decode, libjpeg-encoded progressive fixtures) |
+| Skew mitigation (salted join) | functions/skew.py | tests/test_skew.py (equivalence on 90%-skewed keys) |
+| Multimodal binary columns + Arrow-batched decode | operators/multimodal.py (one codec-free decode stack: decode_gray_milli for 8-bit PNG incl. Adam7+palette / GIF incl. interlaced / baseline+progressive JPEG / PPM / 24bpp BMP; _wav_samples_int for WAV PCM; Motion-JPEG video frames through the JPEG decoder; other codecs decode to null) | tests/test_multimodal.py (incl. generated-stream PNG/GIF/JPEG decode, libjpeg-encoded progressive fixtures) |
 | Plan assertions (pushdown, broadcast, exchange counts) | plans/inspect.py | tests/test_plans.py |
 | Connected components: O(log n) pointer-jump rounds | operators/dedup.py::connected_components | tests/test_dedup.py::test_connected_components_round_scaling (10k chain/star) |
 | Kafka parse-path parity (no broker in env) | streaming/source.py::parse_energy_json | tests/test_kafka_gating.py::test_kafka_parse_path_parity_via_file_replay |
 | Sequence packing (deterministic bucketed greedy) | operators/pipeline_ops.py::pack_sequences | tests/test_pipeline_ops.py |
 | sklearn IsolationForest parity scaffolding | tests/golden/gen_iforest_golden.py | tests/test_iforest.py::test_sklearn_label_agreement (gated) |
-| Batch connectors (parquet/csv/json/orc/text) | sources/registry.py | tests/test_sources.py (round-trips, partition pruning) |
-| Text ingest gate (digest+URL admission vs self-growing persisted index; exactly-once, generation compaction, durable checkpoint, auto compact_every) | streaming/ingest.py::ingest_stream, ::compact_ingest_index | tests/test_streaming.py::test_ingest_stream_equals_batch, ::test_ingest_compaction_preserves_replay |
-| Image ingest gate (banded dHash admission; seen-keys contract) | streaming/ingest.py::image_ingest_stream; operators/multimodal.py::image_neardup_admit, ::build_image_index | tests/test_streaming.py::test_image_ingest_stream_equals_batch |
-| Video ingest gate (frame-coverage admission over MJPEG frame hashes; shared layout/compaction) | streaming/ingest.py::video_ingest_stream; operators/multimodal.py::video_neardup_admit, ::build_video_index | tests/test_streaming.py::test_video_ingest_stream_equals_batch |
+| Image admission gate (banded dHash admission vs a persisted index; geometry guard) | operators/multimodal.py::image_neardup_admit, ::build_image_index, ::check_image_index_meta | q_image_ingest_admit_md5; tests/test_multimodal.py::test_image_admit_undecodable_policy, ::test_image_index_meta_mismatch_raises |
+| Video admission gate (frame-coverage admission over MJPEG frame hashes) | operators/multimodal.py::video_neardup_admit, ::build_video_index | q_video_ingest_admit_md5; tests/test_multimodal.py::test_video_admit_rejects_exactly_half_covered_even_n |
 | Video near-dup algebra (frame-containment pairs; cross-media match vs persisted image index with bk IN-list pruning) | operators/multimodal.py::video_neardup_pairs, ::video_index_match | tests/test_multimodal.py::test_video_neardup_pairs_frame_containment, ::test_video_index_match_cross_media |
 | Video scene-cut detection (hash-delta lag window) | operators/multimodal.py::video_scene_cuts | tests/test_multimodal.py::test_video_scene_cuts |
 | Batch Holt forecasting (oracle-gated grouped-map; recursive-CTE oracle) | operators/timeseries.py::holt_smooth | q_holt_forecast (full value-hash gate) |
-| Streaming chi-square category drift (bounded category table state, bit-equal to batch) | streaming/sketches.py::category_drift_stream | tests/test_streaming.py::test_category_drift_stream_equals_batch |
-| Streaming PSI drift (frozen baseline, nb BIGINTs state/key, restart-pinned) | streaming/sketches.py::psi_drift_stream | tests/test_streaming.py::test_psi_drift_stream_equals_batch, ::test_psi_drift_stream_restart_recovery |
-| Streaming KS drift (frozen baseline, distinct-value-count state, integer end-to-end) | streaming/sketches.py::ks_drift_stream | tests/test_streaming.py::test_ks_drift_stream_equals_batch, ::test_ks_drift_stream_restart_recovery |
-| Unified online drift quartet (chi²/PSI/KS/EMD per key per trigger from ONE fold, bit-equal to fused batch) | streaming/sketches.py::drift_report_stream | tests/test_streaming.py::test_drift_report_stream_equals_batch, ::test_drift_report_stream_restart_recovery |
-| Streaming Holt forecasting (O(1) level/trend state, replay-idempotent) | streaming/timeseries.py::holt_stream | tests/test_streaming.py::test_holt_stream_equals_batch_with_restart |
-| Hadoop FileSystem shim (persisted-index lifecycle on posix/HDFS/S3A) | real_time_data_anomaly_detection_spark/fs.py | tests/test_fs.py |
+| Hadoop FileSystem shim (index meta.json, _SUCCESS probes, corpus fingerprints on posix/HDFS/S3A) | real_time_data_anomaly_detection_spark/fs.py | tests/test_fs.py |
 | Int64 Arrow handoff (hash exactness with co-batched nulls) | operators/multimodal.py::_int64_col | tests/test_multimodal.py::test_null_cobatched_hashes_stay_exact |
 
 ## Declared queries (driver correctness gate)

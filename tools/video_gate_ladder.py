@@ -1,16 +1,13 @@
-"""Video-gate ladder: per-trigger admission cost vs seen-frame index
-size (round-12, VERDICT r11 #7 — SCALING §7.3 claimed the compaction
-rows "transfer 1:1" to the image/video gates; this measures the video
-gate's own per-trigger plan once to close the claim honestly).
+"""Video-gate ladder: per-batch admission cost vs seen-frame index size.
 
 Per tier V (indexed videos ≈ 3·V frames): build_video_index over V
-synthetic Motion-JPEG videos (the round-12 oracle fixture generator —
-REAL AVI/MOV containers with real DC-only JPEG frames), then time the
-EXACT per-trigger decision plan video_ingest_stream runs —
-``video_neardup_admit`` of a FIXED 50-video batch against the persisted
-index — interleaved min-of-3 across tiers (the stress.py stall-dodging
-discipline). Expectation: flat-ish per-trigger cost dominated by the
-batch's decode + the bk IN-list-pruned index probe, NOT by index size.
+synthetic Motion-JPEG videos (the q_video_* fixture generator — REAL
+AVI/MOV containers with real DC-only JPEG frames), then time the
+admission decision — ``video_neardup_admit`` of a FIXED 50-video batch
+against the persisted index — interleaved min-of-3 across tiers (the
+stress.py stall-dodging discipline). Expectation: flat-ish per-batch
+cost dominated by the batch's decode + the bk IN-list-pruned index
+probe, NOT by index size.
 
 Usage: python tools/video_gate_ladder.py [batch_videos]
 """
@@ -82,7 +79,7 @@ def main() -> None:
                 results.setdefault(v, []).append(time.time() - t0)
         print(
             f"{'indexed videos':>14} {'indexed frames':>14} "
-            f"{'index build':>12} {'per-trigger admit':>18}"
+            f"{'index build':>12} {'per-batch admit':>18}"
         )
         for v in TIERS:
             nf, build_s = frames[v]
