@@ -113,6 +113,38 @@ def test_scores_match_brute_force_path_length_oracle():
     )
 
 
+def test_scores_bit_identical_to_golden():
+    """score_samples and fit_predict reproduce the frozen golden bit for
+    bit on every case and seed of tests/golden/gen_iforest_scores.py
+    (energy windows per plant type, ties, constant columns, n < ψ, d = 1).
+    NaN scores (n = 1, where c(ψ) = 0) must stay NaN at the same rows."""
+    import json
+    import os
+    import sys
+
+    golden_dir = os.path.join(os.path.dirname(__file__), "golden")
+    sys.path.insert(0, golden_dir)
+    try:
+        import gen_iforest_scores as gen
+    finally:
+        sys.path.pop(0)
+
+    with open(gen.GOLDEN) as f:
+        golden = json.load(f)
+    inputs = gen.cases()
+    assert len(golden["entries"]) == len(inputs) * len(gen.SEEDS)
+    for entry in golden["entries"]:
+        where = f"{entry['case']} seed={entry['seed']}"
+        X = inputs[entry["case"]]
+        assert gen.digest(X) == entry["input_sha256"], f"{where}: input drifted"
+        want = gen.decode_scores(entry["scores_f8"])
+        scores, labels = gen.compute(X, entry["seed"])
+        nan = np.isnan(want)
+        assert np.array_equal(np.isnan(scores), nan), where
+        assert np.array_equal(scores[~nan].view("<u8"), want[~nan].view("<u8")), where
+        assert np.flatnonzero(labels == -1).tolist() == entry["outliers"], where
+
+
 def test_sklearn_label_agreement():
     """Label-for-label parity with sklearn's IsolationForest
     (contamination=0.05, random_state=42 — reference app3_ML.py:165).
