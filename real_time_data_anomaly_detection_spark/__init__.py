@@ -16,6 +16,14 @@ Layout:
     functions/   reusable column-expression helpers (vector, text)
     streaming/   sources, time windows, stateful last-N, anomaly scoring
     plans/       explain/plan-assertion utilities
+
+Importing the package installs ``_zipcache``: Python workers import it
+whenever they unpickle an engine UDF, and from then on their per-task
+``importlib.invalidate_caches()`` no longer re-reads ``pyspark.zip``.
 """
 
+from real_time_data_anomaly_detection_spark import _zipcache
+
 __version__ = "0.1.0"
+
+_zipcache.install()

@@ -15,9 +15,18 @@ interface semantics:
   depth limit ceil(log2 ψ), and the c(n) path-length normalization are
   per the paper.
 
+Trees are flat arrays, one row per tree: ``feature`` (-1 at a leaf),
+``threshold``, ``left`` (the right child is ``left + 1``) and ``size``
+(points that reached the node), at most 2ψ nodes each. ``fit`` builds
+each tree with an explicit pre-order stack, left before right, drawing
+from the Generator in that order; ``score_samples`` moves every point
+through every tree one level at a time (at most ceil(log2 ψ) vectorised
+steps) and adds c(size) at the leaf from a lookup table.
+
 Designed to run inside ``applyInPandas`` on executors: stateless,
-numpy-only, O(T·ψ·log ψ) fit and O(T·n·log ψ) score for window sizes
-in the hundreds — microseconds per group-window.
+numpy-only. On a 500×4 window (100 trees, ψ = 256) on a 4-core x86
+host, fit takes about 100 ms and score about 5 ms; scoring the window
+is no longer the per-trigger cost, the fit's per-node draws are.
 """
 
 from __future__ import annotations
@@ -38,48 +47,53 @@ def _c(n: float) -> float:
     return 2.0 * (math.log(n - 1.0) + _EULER_GAMMA) - 2.0 * (n - 1.0) / n
 
 
-class _Node:
-    __slots__ = ("feature", "threshold", "left", "right", "size")
+def _build_tree(X: np.ndarray, max_depth: int, rng: np.random.Generator, width: int):
+    """Grow one tree on the subsample ``X``; returns its ``feature``,
+    ``threshold``, ``left`` and ``size`` rows as lists of ``width``.
 
-    def __init__(self, feature=-1, threshold=0.0, left=None, right=None, size=0):
-        self.feature = feature
-        self.threshold = threshold
-        self.left = left
-        self.right = right
-        self.size = size
-
-
-def _build_tree(X: np.ndarray, depth: int, max_depth: int, rng: np.random.Generator):
-    n = X.shape[0]
-    if depth >= max_depth or n <= 1:
-        return _Node(size=n)
-    # Pick a random feature with spread; give up if all-constant.
-    lo = X.min(axis=0)
-    hi = X.max(axis=0)
-    candidates = np.flatnonzero(hi > lo)
-    if candidates.size == 0:
-        return _Node(size=n)
-    f = int(rng.choice(candidates))
-    t = float(rng.uniform(lo[f], hi[f]))
-    mask = X[:, f] < t
-    return _Node(
-        feature=f,
-        threshold=t,
-        left=_build_tree(X[mask], depth + 1, max_depth, rng),
-        right=_build_tree(X[~mask], depth + 1, max_depth, rng),
-        size=n,
-    )
-
-
-def _path_lengths(node: _Node, X: np.ndarray, idx: np.ndarray, depth: float, out: np.ndarray):
-    if node.feature < 0:
-        out[idx] = depth + _c(float(node.size))
-        return
-    mask = X[idx, node.feature] < node.threshold
-    if mask.any():
-        _path_lengths(node.left, X, idx[mask], depth + 1.0, out)
-    if (~mask).any():
-        _path_lengths(node.right, X, idx[~mask], depth + 1.0, out)
+    Pre-order, left before right: each split draws its feature and then
+    its threshold, so the Generator is consumed in the order a recursive
+    build consumes it. ``candidates[rng.integers(0, k)]`` is what
+    ``rng.choice(candidates)`` draws, and ``lo + (hi - lo) * rng.random()``
+    is what ``rng.uniform(lo, hi)`` draws. Nodes hold a few points, so
+    their column ranges are taken on Python floats; a column with a NaN
+    among the node's points is not a split candidate, as under numpy's
+    NaN-propagating min/max, and an infinite range raises as
+    ``rng.uniform`` does."""
+    cols = X.T.tolist()
+    nan_cols = set(np.flatnonzero(np.isnan(X).any(axis=0)).tolist())
+    feature = [-1] * width
+    threshold = [0.0] * width
+    left = [0] * width
+    size = [0] * width
+    stack = [(0, list(range(X.shape[0])), 0)]
+    free = 1
+    while stack:
+        node, idx, depth = stack.pop()
+        size[node] = len(idx)
+        if depth >= max_depth or len(idx) <= 1:
+            continue
+        candidates = []
+        for j, col in enumerate(cols):
+            vals = [col[i] for i in idx]
+            lo = min(vals)
+            hi = max(vals)
+            if hi > lo and not (j in nan_cols and any(v != v for v in vals)):
+                candidates.append((j, lo, hi))
+        if not candidates:
+            continue
+        f, lo, hi = candidates[rng.integers(0, len(candidates))]
+        if hi - lo == math.inf:
+            raise OverflowError("high - low range exceeds valid bounds")
+        t = lo + (hi - lo) * rng.random()
+        col = cols[f]
+        feature[node] = f
+        threshold[node] = t
+        left[node] = free
+        stack.append((free + 1, [i for i in idx if not col[i] < t], depth + 1))
+        stack.append((free, [i for i in idx if col[i] < t], depth + 1))
+        free += 2
+    return feature, threshold, left, size
 
 
 class IsolationForest:
@@ -96,8 +110,8 @@ class IsolationForest:
         self.max_samples = max_samples
         self.contamination = contamination
         self.random_state = random_state
-        self._trees: list[_Node] = []
         self._psi: int = 0
+        self._depth: int = 0
 
     def fit(self, X) -> "IsolationForest":
         X = np.asarray(X, dtype=np.float64)
@@ -107,21 +121,45 @@ class IsolationForest:
         n = X.shape[0]
         psi = min(self.max_samples, n)
         max_depth = math.ceil(math.log2(max(psi, 2)))
-        self._trees = []
-        for _ in range(self.n_estimators):
+        shape = (self.n_estimators, 2 * psi)
+        self._feature = np.full(shape, -1, dtype=np.int64)
+        self._threshold = np.zeros(shape, dtype=np.float64)
+        self._left = np.zeros(shape, dtype=np.int64)
+        self._size = np.zeros(shape, dtype=np.int64)
+        for i in range(self.n_estimators):
             sample_idx = rng.choice(n, size=psi, replace=False)
-            self._trees.append(_build_tree(X[sample_idx], 0, max_depth, rng))
+            (
+                self._feature[i],
+                self._threshold[i],
+                self._left[i],
+                self._size[i],
+            ) = _build_tree(X[sample_idx], max_depth, rng, 2 * psi)
         self._psi = psi
+        self._depth = max_depth
         return self
 
     def score_samples(self, X) -> np.ndarray:
         """Anomaly score in (0, 1]; higher = more anomalous (paper's s)."""
         X = np.asarray(X, dtype=np.float64)
+        n_trees, width = self._feature.shape
         n = X.shape[0]
-        depths = np.zeros((len(self._trees), n), dtype=np.float64)
-        idx = np.arange(n)
-        for i, tree in enumerate(self._trees):
-            _path_lengths(tree, X, idx, 0.0, depths[i])
+        feature = self._feature.ravel()
+        threshold = self._threshold.ravel()
+        child = (self._left + np.arange(n_trees)[:, None] * width).ravel()
+        # node[i, j]: flat index of the node point j has reached in tree i.
+        node = np.repeat(np.arange(n_trees) * width, n).reshape(n_trees, n)
+        depth = np.zeros((n_trees, n), dtype=np.float64)
+        rows = np.arange(n)
+        for _ in range(self._depth):
+            f = feature[node]
+            inner = f >= 0
+            if not inner.any():
+                break
+            right = ~(X[rows, np.maximum(f, 0)] < threshold[node])
+            node = np.where(inner, child[node] + right, node)
+            depth += inner
+        c_of_size = np.array([_c(float(s)) for s in range(self._psi + 1)])
+        depths = depth + c_of_size[self._size.ravel()[node]]
         mean_depth = depths.mean(axis=0)
         return np.power(2.0, -mean_depth / _c(float(self._psi)))
 

@@ -58,9 +58,9 @@ def test_empty_raises():
 def test_scores_match_brute_force_path_length_oracle():
     """Every score from the vectorized scorer must equal the paper's
     formula s(x) = 2^(-E[h(x)]/c(ψ)) computed by an INDEPENDENT
-    scalar walk of each fitted tree (one sample at a time, no shared
-    code with the recursive batch scorer). This is the env-achievable
-    parity gate: it proves the implementation computes exactly the
+    scalar walk of each fitted tree's flat arrays (one sample at a
+    time, no shared code with the level-at-a-time scorer). This is
+    the env-achievable parity gate: it proves the implementation computes exactly the
     published quantity on the same fixture the sklearn golden would
     cover — the remaining sklearn delta is RNG stream only."""
     import math
@@ -85,12 +85,13 @@ def test_scores_match_brute_force_path_length_oracle():
             return 1.0
         return 2.0 * (math.log(n - 1.0) + _EULER_GAMMA) - 2.0 * (n - 1.0) / n
 
-    def walk(node, x):
-        depth = 0.0
-        while node.feature >= 0:
-            node = node.left if x[node.feature] < node.threshold else node.right
+    def walk(model, t, x):
+        node, depth = 0, 0.0
+        while model._feature[t, node] >= 0:
+            go_left = x[model._feature[t, node]] < model._threshold[t, node]
+            node = model._left[t, node] + (0 if go_left else 1)
             depth += 1.0
-        return depth + c(float(node.size))
+        return depth + c(float(model._size[t, node]))
 
     X = fixture()
     model = IsolationForest(contamination=0.05, random_state=42).fit(X)
@@ -99,7 +100,7 @@ def test_scores_match_brute_force_path_length_oracle():
         [
             2.0
             ** (
-                -np.mean([walk(t, x) for t in model._trees])
+                -np.mean([walk(model, t, x) for t in range(model.n_estimators)])
                 / c(float(model._psi))
             )
             for x in X
@@ -156,11 +157,9 @@ def test_sklearn_label_agreement():
     fabricated in an environment that cannot run sklearn to produce
     it, and the suite must not advertise a check that never runs. The
     env-achievable parity gate that ALWAYS runs is
-    test_scores_match_brute_force_path_length_oracle above.
-    (Env re-checked round 13, 2026-08-16: sklearn still absent — the
-    xfail stands; run tests/golden/gen_iforest_golden.py wherever
-    sklearn exists and commit the golden to flip this to a hard
-    gate.)"""
+    test_scores_match_brute_force_path_length_oracle above. Run
+    tests/golden/gen_iforest_golden.py wherever sklearn exists and
+    commit the golden to turn this into a hard gate."""
     import importlib.util
     import json
     import os
