@@ -55,6 +55,22 @@ def test_empty_raises():
         IsolationForest().fit(np.empty((0, 4)))
 
 
+def test_nan_column_is_not_split_and_infinite_range_raises():
+    """A column with a NaN among a node's points is never that node's
+    split (numpy's min/max propagate the NaN); a split over an infinite
+    range raises OverflowError, as numpy's Generator.uniform does."""
+    X = np.random.default_rng(3).normal(size=(200, 3))
+    X[5, 1] = np.nan
+    model = IsolationForest(random_state=42).fit(X)
+    # n < ψ: every tree's root holds all rows, the NaN row included.
+    assert (model._feature[:, 0] != 1).all()
+    assert np.isfinite(model.score_samples(X)).all()
+    X[5, 1] = 0.0
+    X[7, 0] = np.inf
+    with pytest.raises(OverflowError):
+        IsolationForest(random_state=42).fit(X)
+
+
 def test_scores_match_brute_force_path_length_oracle():
     """Every score from the vectorized scorer must equal the paper's
     formula s(x) = 2^(-E[h(x)]/c(ψ)) computed by an INDEPENDENT
