@@ -5,8 +5,9 @@ at the start of every task (``pyspark.worker`` → ``setup_spark_files``).
 Before Python 3.13 that makes every ``zipimporter`` on the path re-read
 its archive's central directory at once. The workers import pyspark from
 ``pyspark.zip`` (about 1,300 entries, one importer per imported
-subpackage), so each task paid 150-175 ms of CPU on a 4-core x86 host
-before it read a row. Python 3.13 drops the cache entry instead and
+subpackage): with 14 importers one ``invalidate_caches()`` took about
+150 ms on a 4-core x86 host, paid by every task before it read a row,
+and 0.1 ms with the guard. Python 3.13 drops the cache entry instead and
 reloads lazily, so there :func:`install` does nothing.
 
 The guard keeps the stdlib behaviour for an archive that changed: it
@@ -49,6 +50,5 @@ def install() -> None:
         if sig is not None:
             _read_at[self.archive] = sig
 
-    invalidate_caches.__doc__ = stdlib.__doc__
     invalidate_caches._guarded = True
     zipimport.zipimporter.invalidate_caches = invalidate_caches

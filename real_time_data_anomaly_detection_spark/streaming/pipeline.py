@@ -50,8 +50,10 @@ def run_detection_pipeline(
     """Start the full pipeline into a queryable memory table.
 
     The reference's implied end-to-end latency budget is 2-7 s
-    (BASELINE.md); with a 1 s trigger this graph's budget is
-    ~1-2 s (one trigger + scoring inside the same micro-batch).
+    (BASELINE.md). With a 1 s trigger at the reference's 1,000 ev/s
+    (perfbench ``stream_ref``, 4-core x86 host, median of 10 runs),
+    event-to-outlier latency is 2.5 s at p50 and 3.6 s at p95: a
+    trigger still takes longer than its 1 s interval.
     """
     outliers = build_detection_stream(source)
     writer = (

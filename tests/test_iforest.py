@@ -76,9 +76,10 @@ def test_scores_match_brute_force_path_length_oracle():
     formula s(x) = 2^(-E[h(x)]/c(ψ)) computed by an INDEPENDENT
     scalar walk of each fitted tree's flat arrays (one sample at a
     time, no shared code with the level-at-a-time scorer). This is
-    the env-achievable parity gate: it proves the implementation computes exactly the
-    published quantity on the same fixture the sklearn golden would
-    cover — the remaining sklearn delta is RNG stream only."""
+    the env-achievable parity gate: it proves the implementation
+    computes exactly the published quantity on the same fixture the
+    sklearn golden would cover — the remaining sklearn delta is RNG
+    stream only."""
     import math
     import os
     import sys
