@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from real_time_data_anomaly_detection_spark.io import load_table
 from real_time_data_anomaly_detection_spark.operators.registry import query
+from real_time_data_anomaly_detection_spark.plans.inspect import materialize
 
 
 def word_counts(
@@ -76,9 +77,8 @@ def bpe_train(
     returns [(rank, left, right, pair_count)], deterministic under any
     partitioning (ties broken count DESC then (left, right) ASC).
 
-    ``batch_size=B`` applies the standard merge-batching trick (round-6
-    judge item #5): each round collects the top candidates once and
-    greedily picks up to B pairs that are pairwise disjoint on SYMBOLS
+    ``batch_size=B`` applies the standard merge-batching trick: each
+    round collects the top candidates once and greedily picks up to B pairs that are pairwise disjoint on SYMBOLS
     (no member consumes another's operand) and on CREATIONS (no member
     touches a symbol equal to an earlier member's left+right
     concatenation — without this, ('a','b') then ('ab','x') would let
@@ -99,26 +99,24 @@ def bpe_train(
         raise ValueError(f"batch_size must be >= 1, got {batch_size}")
     # eager=False throughout: each round's pair-count collect is the
     # first action on the previous round's checkpoint, so it
-    # materializes the fused dict and counts pairs in ONE job — the
-    # default eager=True paid a separate materialization job per merge
-    # round (round-13; same job merge as connected_components).
-    # Unmergeable words are dropped from the carried state (round-13
-    # second pass): a single-symbol word has no adjacent pair and can
-    # never match a future merge; it was already excluded from every
-    # count, so the learned merges are unchanged by construction, but
-    # the 10..32k rounds now checkpoint and scan a shrinking dict.
+    # materializes the fused dict and counts pairs in ONE job instead
+    # of two per merge round (same job merge as connected_components).
+    # Unmergeable words are dropped from the carried state: a
+    # single-symbol word has no adjacent pair and can never match a
+    # future merge; it was already excluded from every count, so the
+    # learned merges are unchanged by construction, but the 10..32k
+    # rounds checkpoint and scan a shrinking dict.
     # Placement matters: at init the filter tests the RAW word length
     # (pushable, no double-eval of the split); per round it sits ABOVE
     # the checkpoint so it reads materialized rows — a filter on the
     # un-checkpointed fold column would inline the whole fuse
     # expression a second time per row (measured 2-3× slower).
-    sym = (
-        words.filter(F.length(word_col) >= 2)
-        .select(
+    sym = materialize(
+        words.filter(F.length(word_col) >= 2).select(
             F.split(F.col(word_col), "").alias("syms"),
             F.col(count_col).alias("cnt"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     merges: list[tuple[int, str, str, int]] = []
     while len(merges) < n_merges:
@@ -172,10 +170,8 @@ def bpe_train(
         for left, right, n in batch:
             merges.append((len(merges), left, right, n))
             col = _fuse(col, left, right)
-        sym = (
-            sym.withColumn("syms", col)
-            .localCheckpoint(eager=False)
-            .filter(F.size("syms") >= 2)
+        sym = materialize(sym.withColumn("syms", col), eager=False).filter(
+            F.size("syms") >= 2
         )
     return merges
 

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from real_time_data_anomaly_detection_spark.io import load_table
 from real_time_data_anomaly_detection_spark.operators.registry import query
+from real_time_data_anomaly_detection_spark.plans.inspect import sort_past_boundary
 
 
 def _sample_matrix(
@@ -458,10 +459,8 @@ def q_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
             4,
         ).alias("norm2"),
     )
-    # Materialize before the global sort so the range partitioner's
-    # sampling job doesn't re-run the Arrow projection pass (the
-    # same fix as q_video_dhash_md5).
-    return out.localCheckpoint(eager=False).orderBy("vec_id")
+    # the sort's sampling job must not re-run the Arrow projection pass
+    return sort_past_boundary(out, "vec_id")
 
 
 @query("q_kmeans")  # iterative + float-boundary sensitive → rows-only

@@ -1,4 +1,4 @@
-"""Corpus-curation operators round 5: chunking, segment-level dedup,
+"""Corpus-curation operators: chunking, segment-level dedup,
 BM25 relevance, and CDC-style merge/upsert.
 
 These extend the LLM-pipeline surface (SURVEY.md §2.3) past document
@@ -21,6 +21,10 @@ from pyspark.sql import functions as F
 
 from real_time_data_anomaly_detection_spark.io import load_table
 from real_time_data_anomaly_detection_spark.operators.registry import query
+from real_time_data_anomaly_detection_spark.plans.inspect import (
+    materialize,
+    sort_past_boundary,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -263,17 +267,11 @@ def exact_substring_dedup(
 
     # grams feeds TWO subplans (the duplicated-digest aggregate and the
     # dup_starts flag-back join), and the gram computation itself is
-    # narrow — no exchange for Spark to reuse — so without
-    # materialization the tokenize + slice + sha2 pass runs twice.
-    # Below a 1 GB input estimate, localCheckpoint once (measured
-    # 2.5 -> 1.9 s at sf0.1); above, recompute wins — a corpus-sized
-    # gram materialization (LARGER than the corpus: ~one digest row
-    # per token) costs more storage traffic than a second codegen'd
-    # scan. Same gate as dedup.minhash_neardup_pairs' arr relation.
-    from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
-
-    if plan_size_bytes(df) <= 1 << 30:
-        grams = grams.localCheckpoint(eager=True)
+    # narrow — no exchange for Spark to reuse — so unmaterialized the
+    # tokenize + slice + sha2 pass runs twice (measured 2.5 -> 1.9 s
+    # at sf0.1). Above the gate the grams outgrow the corpus (~one
+    # digest row per token).
+    grams = materialize(grams, gate_on=df)
     dup = (
         grams.groupBy("_dig")
         .agg(F.count(F.lit(1)).alias("_c"))
@@ -1000,10 +998,8 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = logreg_score(feats, w, b).select(
         "doc_id", (F.col("p") > 0.5).cast("int").alias("pred")
     )
-    # Materialize before the global sort so the range partitioner's
-    # sampling job doesn't re-run the Arrow scoring pass (the
-    # q_video_dhash_md5 range-sampling fix, round-14).
-    return out.localCheckpoint(eager=False).orderBy("doc_id")
+    # the sort's sampling job must not re-run the Arrow scoring pass
+    return sort_past_boundary(out, "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1036,9 +1032,9 @@ def merge_upsert(
         raise ValueError(
             f"schema mismatch: target {cols} vs updates {updates.columns}"
         )
-    # NOTE (round-14): ``updates`` has two consumers (key set + union
-    # branch) and its derivation re-inlines under each, but a
-    # size-gated localCheckpoint here measured a WASH at sf0.1
+    # ``updates`` has two consumers (key set + union branch) and its
+    # derivation re-inlines under each, but a size-gated
+    # materialization here measured a WASH at sf0.1
     # (0.451 vs 0.483 s min, interleaved) — a change batch is
     # typically a cheap scan+filter, and the materialization job costs
     # what the second inline pass does. cdc_apply checkpoints its
@@ -1217,7 +1213,7 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     Prices run in exact integer CENTS (round(p*100) recovers the
     stored 2-dp value exactly) and the 1.1× update is integer half-up
     ((c·11 + 5) div 10) — round(double·1.1, 2) diverged across engines
-    on a half-boundary row at sf0.1 (round-8 fix); publication is the
+    on a half-boundary row at sf0.1; publication is the
     deterministic double division cents/100 on both engines."""
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
     o = load_table(spark, sf_dir, "orders").select(
@@ -1370,13 +1366,8 @@ def cdc_apply(
     )
     # ``latest`` feeds TWO consumers (changed-key set + the upsert
     # branch) and each re-inlined the whole change derivation AND its
-    # latest-wins window (q_cdc_apply: 13 snapshot scans). Below the
-    # house 1 GB estimate, materialize the compacted batch once —
-    # it is change-batch-sized by construction (round-14).
-    from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
-
-    if plan_size_bytes(changes) <= 1 << 30:
-        latest = latest.localCheckpoint(eager=True)
+    # latest-wins window (q_cdc_apply: 13 snapshot scans)
+    latest = materialize(latest, gate_on=changes)
     changed_keys = latest.select(key_col)
     untouched = target.join(
         F.broadcast(changed_keys) if broadcast_keys else changed_keys,
@@ -1446,7 +1437,7 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # k%7-class change structs from an exploded array — the previous
     # 6-branch filter/union re-scanned the snapshot per branch (and
     # Catalyst re-inlined the union under every consumer of the
-    # compacted batch: 13 orders scans for this query before round-14).
+    # compacted batch: 13 orders scans for this query).
     # Row set is IDENTICAL: same (k, payload, op, seq) tuples per class.
     m = F.col("k") % 7
     nul = F.lit(None).cast("bigint")

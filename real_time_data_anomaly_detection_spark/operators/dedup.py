@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from real_time_data_anomaly_detection_spark.functions.vector import cosine_similarity
 from real_time_data_anomaly_detection_spark.io import load_table
 from real_time_data_anomaly_detection_spark.operators.registry import query
+from real_time_data_anomaly_detection_spark.plans.inspect import materialize
 
 
 def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:
@@ -314,16 +315,9 @@ def minhash_neardup_pairs(
     → ~1 s at sf0.1 on local[32].
 
     The arr relation feeds three subplans (signatures + both verify
-    sides). Below a 1 GB input estimate it is localCheckpoint-ed —
-    materializing once beats tokenizing three times (measured 1.8 →
-    1.3 s at sf0.1); above, recompute wins (a corpus-sized
-    materialization costs more storage traffic than three codegen'd
-    scans, and the exchange under it is already reused)."""
-    arr = shingle_arrays(df, text_col, id_col, n)
-    from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
-
-    if plan_size_bytes(df) <= 1 << 30:
-        arr = arr.localCheckpoint(eager=True)
+    sides), so it is materialized under the size gate (measured 1.8 →
+    1.3 s at sf0.1)."""
+    arr = materialize(shingle_arrays(df, text_col, id_col, n), gate_on=df)
     cands = minhash_lsh_candidates(
         minhash_signatures_arr(arr, id_col, num_hashes),
         id_col,
@@ -665,13 +659,8 @@ def prefix_filter_jaccard(
     filtering + array-intersect verification: IDENTICAL results to the
     all-pairs exact join (the oracle replays that), with candidate
     cost bounded by prefix-posting sizes instead of full postings."""
-    arr = shingle_arrays(df, text_col, id_col, n)
-    # same size-gated materialization as minhash_neardup_pairs: arr
-    # feeds candidate generation AND both verify sides
-    from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
-
-    if plan_size_bytes(df) <= 1 << 30:
-        arr = arr.localCheckpoint(eager=True)
+    # arr feeds candidate generation AND both verify sides
+    arr = materialize(shingle_arrays(df, text_col, id_col, n), gate_on=df)
     cands = prefix_filter_candidates(arr, id_col, threshold)
     # The candidate relation is BYTE-small (two ids/row) but each row
     # buys an array_intersect over two full shingle arrays — AQE's
@@ -977,7 +966,6 @@ def connected_components(
     col_b: str = "doc_b",
     max_iter: int = 25,
     stats: dict | None = None,
-    pre_partition: bool = False,
 ) -> DataFrame:
     """(node, component) labeling over an undirected edge list via
     iterative min-label propagation.
@@ -1000,16 +988,11 @@ def connected_components(
     O(log n) round claim is pinned, not assumed, by
     tests/test_dedup.py::test_connected_components_round_scaling.
 
-    ``pre_partition=True`` caches ``sym`` hash-partitioned by ``src``
-    (pagerank's contractual-co-partitioning move): the per-round
-    propagation join then never re-exchanges the edge side. Default
-    False: the near-dup callers' edge lists are PAIR-sized (orders
-    below the corpus), where the one-off fill exchange measurably
-    costs more than log(n) rounds of pair-sized exchanges save
-    (interleaved A/B at sf0.1: 2.60 vs 2.72 s on q_cluster_stats_md5).
-    Set True when the edge list itself is corpus-scale (e.g. a raw
-    interaction graph), where the regime flips — label equality under
-    both settings is pinned in tests/test_dedup.py."""
+    The edge cache is NOT pre-partitioned by ``src`` (pagerank's
+    move): the near-dup callers' edge lists are PAIR-sized, orders
+    below the corpus, where the one-off fill exchange costs more than
+    log(n) rounds of pair-sized exchanges save (interleaved A/B at
+    sf0.1: 2.60 vs 2.72 s on q_cluster_stats_md5)."""
     # Persist the edge list FIRST: every round references it twice
     # (propagation + convergence check), and without materialization
     # each round would recompute the edges' full upstream lineage —
@@ -1027,10 +1010,7 @@ def connected_components(
                 F.struct(F.col(col_b).alias("src"), F.col(col_a).alias("dst")),
             )
         ).alias("_e")
-    ).select("_e.src", "_e.dst")
-    if pre_partition:
-        sym = sym.repartition("src")
-    sym = sym.persist()
+    ).select("_e.src", "_e.dst").persist()
     # Seed comp = min(self, direct neighbors), not comp = self: the
     # node set needs a groupBy-shaped shuffle either way (the old code
     # paid it as distinct), and folding the first neighbor-min into it
@@ -1073,23 +1053,20 @@ def connected_components(
             "_prev",
         )
         hop2 = jumped.select(F.col("node").alias("_ln"), F.col("comp").alias("_lc"))
-        # localCheckpoint, not persist: it TRUNCATES lineage. With bare
+        # A checkpoint, not persist: it TRUNCATES lineage. With bare
         # persist the logical plan doubles per round and Catalyst
         # analysis time explodes after ~10 iterations (minutes-long
         # planning for a 60-node chain).
         # eager=False: the convergence count below is the round's first
         # action, so it MATERIALIZES the checkpoint and counts changed
-        # labels in ONE job — eager=True paid a separate materialization
-        # job per round before the count's (cheap) cached scan (the
-        # non-eager-checkpoint-then-act pattern pagerank also uses).
-        new_comp = (
-            jumped.join(hop2, jumped.comp == hop2._ln, "left")
-            .select(
+        # labels in ONE job instead of two.
+        new_comp = materialize(
+            jumped.join(hop2, jumped.comp == hop2._ln, "left").select(
                 "node",
                 F.least(F.col("comp"), F.coalesce("_lc", "comp")).alias("comp"),
                 "_prev",
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
         changed = new_comp.filter(F.col("comp") != F.col("_prev")).count()
         comp.unpersist()
@@ -1204,17 +1181,11 @@ def q_minhash_neardup_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 def minhash_md5_pairs(d: DataFrame) -> DataFrame:
     """The md5-hasher MinHash-LSH pair pipeline shared by
     q_minhash_neardup_md5 and q_components_md5 (Spark twin of the
-    ``_MINHASH_MD5_CTES`` SQL). Same size-gated arr materialization as
-    minhash_neardup_pairs: the shingle-array relation feeds the
-    signature chain AND both verify sides, so below the 1 GB estimate
-    one localCheckpoint beats tokenizing the corpus three times
-    (measured 1.9 -> 1.4 s at sf0.1 across each of the five
-    md5-family consumers); above it, recompute wins."""
-    from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
-
-    arr = shingle_arrays(d, n=3)
-    if plan_size_bytes(d) <= 1 << 30:
-        arr = arr.localCheckpoint(eager=True)
+    ``_MINHASH_MD5_CTES`` SQL). As in minhash_neardup_pairs, the
+    shingle-array relation feeds the signature chain AND both verify
+    sides, so it is materialized under the size gate (measured 1.9 ->
+    1.4 s at sf0.1 across each of the five md5-family consumers)."""
+    arr = materialize(shingle_arrays(d, n=3), gate_on=d)
     sig = F.array(
         *[
             F.array_min(F.transform("sharr", (lambda i: lambda s: _md5_hash64(s, i))(i)))

@@ -4,18 +4,17 @@ Web-scale curation pipelines score documents by the link structure of
 their hosts (PageRank/harmonic centrality over the host graph is a
 standard crawl-quality signal); the same join-aggregate iteration
 underlies label propagation and trust propagation. The reference app
-has no graph surface — this extends the engine the same way the dedup
-connected-components operator does (dedup.py:886), and shares its
-scaling discipline: a driver LOOP whose every round is fully
-distributed (one join + one groupBy), with ``localCheckpoint`` lineage
-truncation so Catalyst analysis stays O(1) per round instead of
-growing with the iteration count.
+has no graph surface — this extends the engine the same way
+dedup.connected_components does, and shares its scaling discipline: a
+driver LOOP whose every round is fully distributed (one join + one
+groupBy), with checkpoint lineage truncation so Catalyst analysis
+stays O(1) per round instead of growing with the iteration count.
 
 100 TB shape: the edge list is the corpus-sized side; it is persisted
 ONCE with its out-degrees attached, and every iteration shuffles only
 rank-vector-sized relations (|V| rows — at most the hash(node) feed
-into the join plus the hash(dst) contribution groupBy; with the
-pre-partitioned cache the join side reuses compatible hash
+into the join plus the hash(dst) contribution groupBy; the cache is
+partitioned by source, so the join side reuses compatible hash
 partitioning and the measured live set is the groupBy exchange
 alone). Nothing corpus-sized is ever collected or broadcast.
 
@@ -33,6 +32,10 @@ from pyspark.sql import functions as F
 
 from real_time_data_anomaly_detection_spark.io import load_table
 from real_time_data_anomaly_detection_spark.operators.registry import query
+from real_time_data_anomaly_detection_spark.plans.inspect import (
+    live_exchanges,
+    materialize,
+)
 
 DAMPING = 0.85
 
@@ -44,7 +47,6 @@ def pagerank(
     n_iters: int = 5,
     damping: float = DAMPING,
     stats: dict | None = None,
-    pre_partition: bool = True,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list; returns
     (node, pr) with ranks summing to ≤ 1 (dangling mass leaks, per the
@@ -55,47 +57,39 @@ def pagerank(
     (PageRank contracts at rate d, so ~20 rounds ≈ 3-digit precision)
     beats a convergence check that costs an extra full pass per round.
 
-    ``pre_partition=True`` (the default) repartitions the persisted
-    edge set by ``_src`` BEFORE caching, making the co-partitioning
-    of the per-iteration join CONTRACTUAL: the InMemoryTableScan's
-    outputPartitioning is hash(_src) by construction, so the join
-    never re-shuffles the corpus-sized edge side regardless of how
-    the planner built the cache. Without it, co-partitioning is a
-    planner accident: when the degree join plans as SMJ the cache
-    inherits hash(_src) and iterations are free anyway, but when AQE
-    broadcasts the degree side (observed under the test config) the
-    cache keeps the pre-join edge partitioning and EVERY iteration
-    re-exchanges the edges — the exact per-round corpus shuffle this
-    operator's 100 TB story forbids. The repartition cost is paid
-    once at cache fill. Both regimes are plan-pinned in
-    tests/test_graph.py; ``stats["iter_live_exchanges"]`` exposes the
+    The persisted edge set is repartitioned by ``_src`` BEFORE
+    caching, making the co-partitioning of the per-iteration join
+    CONTRACTUAL: the InMemoryTableScan's outputPartitioning is
+    hash(_src) by construction, so the join never re-shuffles the
+    corpus-sized edge side regardless of how the planner built the
+    cache. Without it, co-partitioning is a planner accident: when
+    AQE broadcasts the degree side the cache keeps the pre-join edge
+    partitioning and EVERY iteration re-exchanges the edges. The
+    repartition cost is paid once at cache fill; tests/test_graph.py
+    pins the plan, and ``stats["iter_live_exchanges"]`` exposes the
     measured per-iteration non-cache-fill exchange list.
     """
-    from real_time_data_anomaly_detection_spark.plans import live_exchanges
-
-    e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
-    if pre_partition:
-        # ONE shuffle funds the whole cache fill: hash(_src) satisfies
-        # the clustered-distribution requirement of BOTH the
-        # (_src,_dst) dedup and the _src degree aggregate (equal _src
-        # ⇒ co-located), so neither re-exchanges, and the degree join
-        # (broadcast or SMJ — both sides already hash(_src)) preserves
-        # it into the cache. The previous shape (distinct → groupBy →
-        # join → repartition) paid three edge-sized shuffles for the
-        # same partitioned result.
-        e = e.repartition("_src")
-    e = e.dropDuplicates(["_src", "_dst"])
+    # ONE shuffle funds the whole cache fill: hash(_src) satisfies the
+    # clustered-distribution requirement of BOTH the (_src,_dst) dedup
+    # and the _src degree aggregate (equal _src ⇒ co-located), so
+    # neither re-exchanges, and the degree join (broadcast or SMJ —
+    # both sides already hash(_src)) preserves it into the cache.
+    e = (
+        edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
+        .repartition("_src")
+        .dropDuplicates(["_src", "_dst"])
+    )
     deg = e.groupBy("_src").agg(F.count(F.lit(1)).alias("_deg"))
     # Persist the degree-annotated edges FIRST — every iteration joins
     # them, and without materialization each round would recompute the
-    # edge derivation's full upstream lineage (cf. dedup.py:908).
+    # edge derivation's full upstream lineage (cf. connected_components).
     # SHUFFLE_HASH on the degree side: both sides are already
     # hash(_src), so the planner's default SMJ would pay nothing in
     # exchanges but SORT the corpus-sized edge stream AND the |V|-row
     # degree side at cache fill. A per-partition hash build of the
     # degree slice needs no sort, streams the edges straight into the
     # cache, and preserves the hash(_src) output partitioning the
-    # iterations rely on (round-13 continuation; interleaved A/B below).
+    # iterations rely on.
     ew = e.join(deg.hint("shuffle_hash"), "_src").persist()
     # Fill the cache EAGERLY: an unmaterialized AQE cached plan reports
     # unknown outputPartitioning to consumers, so without this count the
@@ -154,27 +148,27 @@ def pagerank(
                 # must be rank-vector-sized only (hash(node) into the
                 # join + hash(_dst) for the contribution groupBy).
                 stats["iter_live_exchanges"] = live_exchanges(contrib)
-            ranks = (
+            # Truncate lineage each round — bare chaining doubles the
+            # logical plan per iteration (cf. connected_components).
+            ranks = materialize(
                 nodes.join(
                     contrib.hint("shuffle_hash"),
                     nodes.node == contrib._dst,
                     "left",
-                )
-                .select(
+                ).select(
                     "node",
                     (
                         F.lit(base) + F.lit(damping) * F.coalesce("_sum", F.lit(0.0))
                     ).alias("pr"),
-                )
-                # Truncate lineage each round — bare chaining doubles the
-                # logical plan per iteration (cf. dedup.py:941).
-                .localCheckpoint(eager=False)
+                ),
+                eager=False,
             )
-        # Materialize the final rank vector (|V| rows — small), then
-        # drop the session-lifetime caches: bench/verify runs execute
-        # many registry queries in one process, and un-released edge
-        # blocks accumulate across them (round-6 advice).
-        ranks = ranks.localCheckpoint(eager=True)
+        # Fill the final rank vector, then drop the session-lifetime
+        # caches: bench/verify runs execute many registry queries in one
+        # process, and un-released edge blocks accumulate across them.
+        # Ungated: filled after the unpersist, the |V|-row vector would
+        # re-derive the whole edge set instead of reading the caches.
+        ranks = materialize(ranks)
     finally:
         ew.unpersist()
         nodes.unpersist()
@@ -300,18 +294,11 @@ def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     wedges concentrate on hubs; the a<b orientation (degree-ordering's
     cheap cousin) keeps per-key fan-out bounded by the smaller
     endpoint's degree."""
-    from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
-
     li = load_table(spark, sf_dir, "lineitem")
-    os_ = li.select("l_orderkey", "l_suppkey").distinct()
     # The wedge join consumes os_ on BOTH sides, and Catalyst re-inlines
-    # the subtree per consumer — without materialization the scan +
-    # distinct exchange run twice inside the edge-set fill job. Same
-    # size gate as dedup.minhash_neardup_pairs' arr relation: above the
-    # estimate a second codegen'd scan beats materializing a
-    # corpus-sized distinct.
-    if plan_size_bytes(li) <= 1 << 30:
-        os_ = os_.localCheckpoint(eager=True)
+    # the subtree per consumer — unmaterialized, the scan + distinct
+    # exchange run twice inside the edge-set fill job.
+    os_ = materialize(li.select("l_orderkey", "l_suppkey").distinct(), gate_on=li)
     x, y = os_.alias("x"), os_.alias("y")
     edges = (
         x.join(
@@ -336,7 +323,7 @@ def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_edges = edges.count()
     finally:
         # Both actions are done; the result is two scalars — release
-        # the cached edge blocks (round-6 advice).
+        # the cached edge blocks.
         edges.unpersist()
     from real_time_data_anomaly_detection_spark.io import local_df
 
@@ -362,8 +349,8 @@ def hierarchy_flatten(
     anc := anc(anc), d := d + d(anc) via ONE state-sized self-join,
     so the resolved distance doubles per round and a depth-D forest
     converges in ceil(log2 D)+1 rounds (pinned in tests/test_graph.py)
-    — the same shortcut discipline as connected_components
-    (dedup.py:1113), with the same localCheckpoint lineage truncation
+    — the same shortcut discipline as dedup.connected_components,
+    with the same checkpoint lineage truncation
     and fused convergence check (the start-of-round anc rides along
     as ``_prev``; convergence is a filter-count scan of the round's
     own checkpointed frame, no extra join job).
@@ -393,18 +380,17 @@ def hierarchy_flatten(
             F.col("anc").alias("_a"),
             F.col("d").alias("_d"),
         )
-        new = (
-            cur.join(hop, cur.anc == hop._n, "left")
-            .select(
+        # eager=False: the convergence count is the round's first
+        # action — it materializes the checkpoint AND counts in one
+        # job (same merge as connected_components).
+        new = materialize(
+            cur.join(hop, cur.anc == hop._n, "left").select(
                 "node",
                 F.coalesce("_a", "anc").alias("anc"),
                 (F.col("d") + F.coalesce("_d", F.lit(0))).alias("d"),
                 F.col("anc").alias("_prev"),
-            )
-            # eager=False: the convergence count is the round's first
-            # action — it materializes the checkpoint AND counts in one
-            # job (round-13, same merge as connected_components).
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
         changed = new.filter(F.col("anc") != F.col("_prev")).count()
         cur = new.drop("_prev")

@@ -26,6 +26,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from real_time_data_anomaly_detection_spark.plans.inspect import (
+    materialize,
+    plan_size_bytes,
+    sort_past_boundary,
+)
+
+
 def _ppm_pixels(payload: bytes) -> tuple[int, int, np.ndarray] | None:
     """Codec-free binary PPM (P6) pixel extraction with numpy alone:
     (height, width, rgb uint8 [h*w, 3]) in row-major top-down order."""
@@ -1271,16 +1278,22 @@ def _bk_prune_inlist(
     the filter — at that size the batch touches most of the index's
     band-key domain and the full scan is the cheaper plan.
 
-    The keys come back as ONE collect_set row, capped with slice so
-    the driver fetch stays bounded at prune_keys_max+1 values: the
-    previous distinct().limit().collect() paid a 32-partition distinct
-    exchange plus the two-stage limit for the same key set
-    (interleaved probe 0.44 -> 0.16 s on the sf0.1 video batch; the
-    partial collect_set dedups map-side, so the exchange carries one
-    set per task)."""
-    row = bands.agg(
-        F.slice(F.collect_set("bk"), 1, prune_keys_max + 1).alias("ks")
-    ).head()
+    The keys come back as ONE row, capped twice with slice: first per
+    input partition, then after the merge. Any partition holding more
+    than prune_keys_max keys alone pushes the merged set over the cap,
+    so the skip decision is exact, while the final merge task and the
+    driver fetch hold at most P × (prune_keys_max+1) and
+    prune_keys_max+1 keys. One aggregate row instead of
+    distinct().limit().collect() measured 0.44 -> 0.16 s on the sf0.1
+    video batch."""
+    cap = prune_keys_max + 1
+    merged = F.array_distinct(F.flatten(F.collect_list("ks")))
+    row = (
+        bands.groupBy(F.spark_partition_id().alias("_part"))
+        .agg(F.slice(F.collect_set("bk"), 1, cap).alias("ks"))
+        .agg(F.slice(merged, 1, cap).alias("ks"))
+        .head()
+    )
     keys = [int(x) for x in (row.ks or [])]
     if len(keys) > prune_keys_max:
         return idx
@@ -1326,8 +1339,6 @@ def video_index_match(
     two-hop-keys trick over build_image_index's bk-sorted layout, so
     per-trigger cost scales with the BATCH's frames, not the corpus
     (the image ladder's flat 1.27→1.48 s row transfers verbatim)."""
-    from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
-
     nbits = hash_w * hash_h
     if n_bands is None:
         n_bands = _default_bands(nbits, max_hamming)
@@ -1336,10 +1347,10 @@ def video_index_match(
         # backfill-sized batch degrades to a shuffle join instead of
         # an executor-OOM broadcast
         broadcast_batch = plan_size_bytes(batch_videos) <= max_broadcast_bytes
-    fps = video_frame_dhash(
+    decoded = video_frame_dhash(
         batch_videos, payload_col, id_col, hash_w, hash_h
     ).filter(F.col("dhash").isNotNull())
-    fps = fps.localCheckpoint(eager=True)  # decode once: probe + join
+    fps = materialize(decoded, gate_on=batch_videos)  # decode once: probe + join
     b = _band_fps(fps, id_col, nbits, n_bands, extra_cols=("frame_idx",)).select(
         F.col(id_col).alias("video_id"),
         "frame_idx",
@@ -1349,10 +1360,11 @@ def video_index_match(
     idx = index_bands.select(
         F.col(id_col).alias("idx_id"), F.col("dhash").alias("h_idx"), "bk"
     )
-    # two-hop prune probe reads the CHECKPOINTED/cached hashes — never
-    # a second decode (the image_index_match discipline); single-string
-    # IN-list construction via _bk_prune_inlist
-    idx = _bk_prune_inlist(idx, b, prune_keys_max)
+    if fps is not decoded:
+        # the prune probe reads the CHECKPOINTED hashes, as in
+        # image_index_match: an unmaterialized batch would re-run the
+        # decode for it, and is past prune_keys_max anyway
+        idx = _bk_prune_inlist(idx, b, prune_keys_max)
     right = F.broadcast(b) if broadcast_batch else b
     hamming = F.bit_count(F.col("h_idx").bitwiseXOR(F.col("h_new")))
     return (
@@ -1431,7 +1443,7 @@ def video_neardup_pairs(
     fps = video_frame_dhash(
         videos, payload_col, id_col, hash_w, hash_h
     ).filter(F.col("dhash").isNotNull())
-    fps = fps.localCheckpoint(eager=True)  # decode once: counts + join
+    fps = materialize(fps, gate_on=videos)  # decode once: counts + join
     n_frames = fps.groupBy(id_col).agg(
         F.countDistinct("frame_idx").alias("n_frames")
     )
@@ -1512,10 +1524,6 @@ def video_neardup_admit(
     order, "covered by the index" plus "covered by a smaller-id
     same-batch video" equals "covered by ANY smaller-id video or the
     seed"."""
-    from real_time_data_anomaly_detection_spark.plans.inspect import (
-        plan_size_bytes,
-    )
-
     nbits = hash_w * hash_h
     if n_bands is None:
         n_bands = _default_bands(nbits, max_hamming)
@@ -1524,9 +1532,10 @@ def video_neardup_admit(
         # side never shuffles); a backfill-sized batch degrades to a
         # shuffle join instead of an executor-OOM broadcast
         broadcast_batch = plan_size_bytes(batch_videos) <= max_broadcast_bytes
-    fps = video_frame_dhash(batch_videos, payload_col, id_col, hash_w, hash_h)
-    if plan_size_bytes(batch_videos) <= 1 << 30:
-        fps = fps.localCheckpoint(eager=True)
+    fps = materialize(
+        video_frame_dhash(batch_videos, payload_col, id_col, hash_w, hash_h),
+        gate_on=batch_videos,
+    )
     good = fps.filter(F.col("dhash").isNotNull())
     banded = _band_fps(good, id_col, nbits, n_bands, extra_cols=("frame_idx",))
     maybe_bc = F.broadcast if broadcast_batch else (lambda x: x)
@@ -1921,17 +1930,10 @@ def image_neardup_pairs(
     fps = image_dhash(df, payload_col, id_col, hash_w, hash_h).filter(
         F.col("dhash").isNotNull()
     )
-    # Both self-join sides consume fps — without a materialization the
-    # Python DECODE subplan evaluates twice (the size-gated
-    # localCheckpoint house pattern; the checkpointed relation is
-    # (id, hash), 16 B/row, never payloads). Gate on the INPUT
-    # estimate: payload relations outgrow the gate long before the
-    # hash relation matters, and above it a 100 TB deployment should
-    # persist hashes to a table instead.
-    from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
-
-    if plan_size_bytes(df) <= 1 << 30:
-        fps = fps.localCheckpoint(eager=True)
+    # Both self-join sides consume fps — unmaterialized, the Python
+    # DECODE subplan evaluates twice. The checkpointed relation is
+    # (id, hash), 16 B/row, never payloads.
+    fps = materialize(fps, gate_on=df)
     banded = _band_fps(fps, id_col, nbits, n_bands)
     a = banded.select(
         F.col(id_col).alias("img_a"), F.col("dhash").alias("h_a"), "bk"
@@ -2132,32 +2134,26 @@ def image_index_match(
     then read ``index_bands`` with
     ``spark.read.parquet(f"{index_path}/seed")`` — a mismatched index
     silently matches (almost) nothing here."""
-    from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
-
     nbits = hash_w * hash_h
     if n_bands is None:
         n_bands = _default_bands(nbits, max_hamming)
     if broadcast_batch is None:
         broadcast_batch = plan_size_bytes(batch_images) <= max_broadcast_bytes
-    fps = image_dhash(batch_images, payload_col, id_col, hash_w, hash_h).filter(
+    decoded = image_dhash(batch_images, payload_col, id_col, hash_w, hash_h).filter(
         F.col("dhash").isNotNull()
     )
-    small = plan_size_bytes(batch_images) <= 1 << 30
-    if small:
-        fps = fps.localCheckpoint(eager=True)
+    fps = materialize(decoded, gate_on=batch_images)
     b = _band_fps(fps, id_col, nbits, n_bands).select(
         F.col(id_col).alias("new_id"), F.col("dhash").alias("h_new"), "bk"
     )
     idx = index_bands.select(
         F.col(id_col).alias("idx_id"), F.col("dhash").alias("h_idx"), "bk"
     )
-    if small:
+    if fps is not decoded:
         # two-hop prune probe reads the CHECKPOINTED hashes — never a
         # second decode; for un-checkpointed backfill batches the probe
         # would itself re-run the decode, and a batch that big would
         # blow past prune_keys_max anyway, so skip it entirely.
-        # Single-string IN-list construction via _bk_prune_inlist
-        # (isin(list) cost ~1.1 ms/key of py4j time)
         idx = _bk_prune_inlist(idx, b, prune_keys_max)
     right = F.broadcast(b) if broadcast_batch else b
     hamming = F.bit_count(F.col("h_idx").bitwiseXOR(F.col("h_new")))
@@ -2202,17 +2198,15 @@ def image_neardup_admit(
     nbits = hash_w * hash_h
     if n_bands is None:
         n_bands = _default_bands(nbits, max_hamming)
-    from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
-
     if broadcast_batch is None:
         # the ingest_dedup valve: micro-batches broadcast (the index
         # side never shuffles); a backfill-sized batch degrades to a
         # shuffle join instead of an executor-OOM broadcast
         broadcast_batch = plan_size_bytes(batch_images) <= max_broadcast_bytes
-    fps = image_dhash(batch_images, payload_col, id_col, hash_w, hash_h)
-    if plan_size_bytes(batch_images) <= 1 << 30:
-        fps = fps.localCheckpoint(eager=True)
-    all_fps = fps
+    all_fps = materialize(
+        image_dhash(batch_images, payload_col, id_col, hash_w, hash_h),
+        gate_on=batch_images,
+    )
     fps = all_fps.filter(F.col("dhash").isNotNull())
     banded = _band_fps(fps, id_col, nbits, n_bands)
     maybe_bc = F.broadcast if broadcast_batch else (lambda x: x)
@@ -2529,10 +2523,8 @@ def q_audio_fingerprint_md5(spark, sf_dir: str) -> DataFrame:
     out = audio_fingerprints(wav, "payload", "doc_id").select(
         "doc_id", F.col("fingerprint").cast("bigint").alias("fingerprint")
     )
-    # Same range-sampling fix as q_video_dhash_md5: materialize the
-    # tiny hash relation so the orderBy's sampling job doesn't re-run
-    # the WAV decode pass.
-    return out.localCheckpoint(eager=False).orderBy("doc_id")
+    # the sort's sampling job must not re-run the WAV decode pass
+    return sort_past_boundary(out, "doc_id")
 
 
 @query(
@@ -2574,10 +2566,8 @@ def q_image_ahash_md5(spark, sf_dir: str) -> DataFrame:
     out = image_ahash(img, "payload", "doc_id", hash_w=9, hash_h=7).select(
         "doc_id", F.col("ahash").cast("bigint").alias("ahash")
     )
-    # Same range-sampling fix as q_video_dhash_md5: without a
-    # materialization boundary the global orderBy's sampling job
-    # re-ran the PPM decode for the whole corpus.
-    return out.localCheckpoint(eager=False).orderBy("doc_id")
+    # the sort's sampling job must not re-run the PPM decode pass
+    return sort_past_boundary(out, "doc_id")
 
 
 def _image_index_path(sf_dir: str) -> str:
@@ -2979,15 +2969,10 @@ def q_video_dhash_md5(spark, sf_dir: str) -> DataFrame:
         F.col("frame_idx").cast("bigint").alias("frame_idx"),
         F.col("dhash").cast("bigint").alias("dhash"),
     )
-    # Materialize the (tiny) hash relation before the global sort:
-    # a range-partitioned orderBy first runs a SAMPLING job over its
-    # child, and with no shuffle/materialization boundary between the
-    # decode mapInPandas and the sort that sampling re-executed the
-    # ENTIRE synth+decode chain — the whole query paid the decode
-    # TWICE (measured 2.14 s vs 0.98 s for one synth+decode pass at
-    # sf0.1). The checkpoint is ~24 bytes/frame, within-invocation
-    # only — decode still runs (once) on every invocation.
-    return out.localCheckpoint(eager=False).orderBy("doc_id", "frame_idx")
+    # Unmaterialized, the sort's sampling job re-ran the whole
+    # synth+decode chain (measured 2.14 s vs 0.98 s for one pass at
+    # sf0.1); the checkpoint is ~24 bytes/frame.
+    return sort_past_boundary(out, "doc_id", "frame_idx")
 
 
 def _video_index_path(sf_dir: str) -> str:

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from real_time_data_anomaly_detection_spark.io import load_table
 from real_time_data_anomaly_detection_spark.operators.registry import query
+from real_time_data_anomaly_detection_spark.plans.inspect import materialize
 
 
 def _md5_u32(col: Column, prefix: Column | None = None) -> Column:
@@ -172,21 +173,18 @@ def q_countmin_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the 20 exact-top tokens; output (token, exact_n, cms_est) with
     cms_est ≥ exact_n guaranteed. Oracle replays the identical md5
     bucketing and min-of-rows estimate."""
-    toks = load_table(spark, sf_dir, "documents").select(
-        F.explode(F.split("text", " ")).alias("token")
-    )
+    d = load_table(spark, sf_dir, "documents")
+    toks = d.select(F.explode(F.split("text", " ")).alias("token"))
     # One tokenize+count pass feeds EVERYTHING downstream: the exact
     # relation is vocab-sized, and the sketch counters are the same
     # sums whether accumulated per occurrence or per (token, count)
-    # (countmin_build_from_counts — associativity). Without the
-    # checkpoint Catalyst re-inlined the corpus tokenize/explode under
-    # every consumer (6 parquet scans: sketch build, probe ranking,
-    # probe-side estimate, final join); now the corpus is scanned
-    # ONCE and md5 runs per distinct token, not per occurrence.
-    exact = (
-        toks.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("exact_n"))
-        .localCheckpoint(eager=True)
+    # (countmin_build_from_counts — associativity). Unmaterialized,
+    # Catalyst re-inlines the corpus tokenize/explode under every
+    # consumer (6 parquet scans: sketch build, probe ranking,
+    # probe-side estimate, final join); materialized, the corpus is
+    # scanned ONCE and md5 runs per distinct token, not per occurrence.
+    exact = materialize(
+        toks.groupBy("token").agg(F.count(F.lit(1)).alias("exact_n")), gate_on=d
     )
     probes = exact.orderBy(F.desc("exact_n"), "token").limit(20)
     sketch = countmin_build_from_counts(exact, "token", "exact_n", depth=4, width=256)
@@ -330,15 +328,14 @@ def q_hll_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     # maxima are duplicate-insensitive (max of rho per bucket), so
     # registers over the distinct pairs are IDENTICAL to registers
     # over the raw rows — with md5 evaluated once per distinct key
-    # (~10x fewer at sf0.1) — and the exact side becomes a plain count
-    # of the same relation (countDistinct is distinct-then-count
-    # anyway). The checkpoint stops Catalyst re-inlining the scan +
-    # distinct under every consumer (6 parquet scans before).
-    dist = li.distinct().localCheckpoint(eager=True)
+    # (~10x fewer at sf0.1) — and the exact side becomes a count of
+    # the same relation's non-null keys (countDistinct is
+    # distinct-then-count anyway, and skips a (flag, NULL) pair). The
+    # checkpoint stops Catalyst re-inlining the scan + distinct under
+    # every consumer (6 parquet scans unmaterialized).
+    dist = materialize(li.distinct(), gate_on=li)
     est = hll_estimate(dist, "l_partkey", ["l_returnflag"], p=6)
-    exact = dist.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("exact_nd")
-    )
+    exact = dist.groupBy("l_returnflag").agg(F.count("l_partkey").alias("exact_nd"))
     return est.join(exact, "l_returnflag").orderBy("l_returnflag")
 
 

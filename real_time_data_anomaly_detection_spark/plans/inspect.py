@@ -134,9 +134,9 @@ def partitionless_windows(df) -> list[str]:
 
 def plan_size_bytes(df) -> int:
     """Catalyst's sizeInBytes estimate for a DataFrame's optimized
-    plan, or 2^60 when unavailable — the input to size-gated
-    localCheckpoint decisions. py4j returns the underlying BigInt as a
-    Python int on current pyspark; older versions handed back a JVM
+    plan, or 2^60 when unavailable — the input to :func:`materialize`
+    and to the broadcast valves. py4j returns the underlying BigInt as
+    a Python int on current pyspark; older versions handed back a JVM
     object needing .toString() — handle both, because the AttributeError
     from assuming one form silently disabled EVERY size gate (the
     checkpoint never fired and nobody noticed until a plan audit found
@@ -148,6 +148,49 @@ def plan_size_bytes(df) -> int:
         return 1 << 60
 
 
+# Largest input estimate whose derived intermediates materialize.
+MATERIALIZE_MAX_BYTES = 1 << 30
+
+
+def materialize(
+    df: DataFrame, gate_on: DataFrame | None = None, eager: bool = True
+) -> DataFrame:
+    """The engine's one materialization policy: ``df.localCheckpoint``
+    when ``gate_on``'s size estimate is at most MATERIALIZE_MAX_BYTES,
+    else ``df`` unchanged.
+
+    The reason to materialize: Catalyst re-inlines a subplan under
+    every consumer, so an intermediate feeding several branches (a
+    self-join, an aggregate plus a join back, a probe plus a join)
+    re-runs its scan, tokenize or Python decode once per consumer.
+    Checkpointing it once is cheaper while it is small. Past the gate
+    recompute wins: a corpus-sized checkpoint costs more executor
+    storage and block traffic than another codegen'd pass (at that
+    size a deployment persists the intermediate to a table instead).
+    ``gate_on`` is the INPUT the intermediate derives from (a scan or
+    a batch), because derived estimates are looser than the file
+    sizes under them. In-memory inputs report an unknown
+    (Long.MaxValue) estimate and so take the recompute branch.
+
+    ``gate_on=None`` always checkpoints: for lineage cuts inside
+    driver loops, where the plan would otherwise grow every round,
+    and for relations bounded by construction. ``eager=False`` defers
+    the fill to the caller's next action, which then materializes and
+    consumes in one job."""
+    if gate_on is not None and plan_size_bytes(gate_on) > MATERIALIZE_MAX_BYTES:
+        return df
+    return df.localCheckpoint(eager=eager)
+
+
+def sort_past_boundary(df: DataFrame, *cols) -> DataFrame:
+    """``df.orderBy(*cols)`` over a lazy checkpoint of ``df``. A global
+    sort first runs a range-sampling job over its child; with no
+    materialization boundary that job re-runs the whole child (a
+    Python decode or scoring pass) before the sort job runs it again.
+    Used where ``df`` is a small per-row result (hashes, scores)."""
+    return df.localCheckpoint(eager=False).orderBy(*cols)
+
+
 def executed_file_scans(df) -> int:
     """Number of file-scan nodes the EXECUTED plan actually runs —
     call AFTER an action so AQE has finalized. Walks the adaptive
@@ -155,8 +198,8 @@ def executed_file_scans(df) -> int:
     ReusedExchange subtrees (their source executes once elsewhere),
     so N identical-looking scans deduped by exchange reuse count as
     the one physical read they are. The multi-consumer fusion pin:
-    q_drift_report must report exactly 1 (round-11 — the composed
-    version paid 3; differential column pruning is what forks
+    q_drift_report must report exactly 1 (the composed version
+    paid 3; differential column pruning is what forks
     otherwise-identical consumers into re-scans)."""
     n = 0
 

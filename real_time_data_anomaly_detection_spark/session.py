@@ -20,24 +20,12 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # which they inherit from the JVM's environment.
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# Streaming state-store backends (spark.sql.streaming.stateStore.
-# providerClass). The HDFS-backed provider keeps state on the JVM heap
-# — fine for small key spaces; RocksDB spills state to local disk, the
-# right call when stateful keys × window size outgrow executor memory
-# (ships with Spark 4, no extra jars). Select per session via
-# get_spark(state_store_provider=...) or SPARK_GRAFT_STATE_STORE.
-STATE_STORE_PROVIDERS = {
-    "hdfs": "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-    "rocksdb": "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-}
-
 
 def get_spark(
     app_name: str = "real_time_data_anomaly_detection_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    state_store_provider: str | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
@@ -89,12 +77,6 @@ def get_spark(
         .config("spark.sql.codegen.cache.maxEntries", "4000")
         .config("spark.ui.enabled", "false")
     )
-    provider = state_store_provider or os.environ.get("SPARK_GRAFT_STATE_STORE")
-    if provider:
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            STATE_STORE_PROVIDERS.get(provider.lower(), provider),
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

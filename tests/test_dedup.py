@@ -145,29 +145,6 @@ def test_connected_components_and_neardup_removal(spark):
     assert kept == [0, 3, 4]  # cluster {0,1,2,5} -> 0; 3,4 unpaired
 
 
-def test_connected_components_pre_partition_label_equality(spark):
-    """pre_partition=True (contractual hash(src) edge cache for
-    corpus-scale edge lists) must produce the identical labeling —
-    min-label convergence is a fixed point, independent of the cached
-    edge partitioning."""
-    from real_time_data_anomaly_detection_spark.operators.dedup import (
-        connected_components,
-    )
-
-    # chains + stars + singleton-free mix, across several partitions
-    pairs = [(i, i + 1) for i in range(0, 30, 3)] + [
-        (100, 101), (100, 102), (100, 103), (200, 300), (300, 400)
-    ]
-    edges = spark.createDataFrame(pairs, "doc_a long, doc_b long").repartition(7)
-    a = {r.node: r.comp for r in connected_components(edges).collect()}
-    b = {
-        r.node: r.comp
-        for r in connected_components(edges, pre_partition=True).collect()
-    }
-    assert a == b
-    assert b[400] == 200 and b[103] == 100
-
-
 def test_stop_bucket_cap_drops_boilerplate_pairs(spark):
     """With a bucket cap, a large identical-boilerplate cluster stops
     generating quadratic candidates, while ordinary near-dups survive."""

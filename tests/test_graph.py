@@ -77,18 +77,6 @@ def test_matches_numpy_power_iteration(spark):
         assert r[i] == pytest.approx(pr[i], rel=1e-12)
 
 
-def test_pre_partition_parity(spark):
-    """pre_partition changes the physical layout only — ranks must be
-    bit-identical to the plain mode."""
-    pairs = [(i, (i * 7 + 3) % 50) for i in range(200)]
-    edges = spark.createDataFrame(pairs, "src int, dst int")
-    a = _ranks(pagerank(edges, n_iters=4, pre_partition=False))
-    b = _ranks(pagerank(edges, n_iters=4, pre_partition=True))
-    assert a.keys() == b.keys()
-    for k in a:
-        assert a[k] == pytest.approx(b[k], rel=1e-12)
-
-
 def test_iteration_edge_shuffle_contract(spark):
     """The scale claim behind pre_partition (the default): each
     iteration's LIVE shuffles (cache-fill excluded) carry only
@@ -115,14 +103,10 @@ def test_iteration_edge_shuffle_contract(spark):
 
 
 def test_pre_partition_drops_edge_exchange_vs_broadcast_built_cache(spark):
-    """Demonstrates the exact regime pre_partition exists for, with the
-    cache build pinned deterministically: when the degree join is built
-    with a BROADCAST hint (what AQE does at real scale — degrees are a
-    |V|-row side against corpus-sized edges), the plain cache keeps the
-    pre-join edge partitioning and every SMJ-regime iteration
-    re-exchanges the edges on hash(_src). Pre-partitioning the same
-    cache by _src removes that exchange — live exchange count per
-    iteration drops by exactly 1 (round-6 judge item #8)."""
+    """pagerank's edge cache is repartitioned by _src, so even when the
+    degree join is built with a BROADCAST hint (what AQE does at real
+    scale — degrees are a |V|-row side against corpus-sized edges) an
+    SMJ-regime iteration never re-exchanges the edges on hash(_src)."""
     from pyspark.sql import functions as F
 
     from real_time_data_anomaly_detection_spark.plans import live_exchanges
@@ -133,36 +117,27 @@ def test_pre_partition_drops_edge_exchange_vs_broadcast_built_cache(spark):
         F.col("src").alias("_src"), F.col("dst").alias("_dst")
     ).distinct()
     deg = e.groupBy("_src").agg(F.count(F.lit(1)).alias("_deg"))
-    counts = {}
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    for pre in (False, True):
-        ew = e.join(F.broadcast(deg), "_src")
-        if pre:
-            ew = ew.repartition("_src")
-        ew = ew.persist()
-        ew.count()
-        ranks = e.select(F.col("_src").alias("node")).distinct().withColumn(
-            "pr", F.lit(0.01)
-        ).localCheckpoint(eager=True)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        try:
-            contrib = (
-                ew.join(ranks, ew._src == ranks.node)
-                .select("_dst", (F.col("pr") / F.col("_deg")).alias("_c"))
-                .groupBy("_dst")
-                .agg(F.sum("_c").alias("_sum"))
-            )
-            counts[pre] = live_exchanges(contrib)
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-            spark.conf.set(
-                "spark.sql.adaptive.autoBroadcastJoinThreshold", prev
-            )
-            ew.unpersist()
-    assert "hashpartitioning(_src" in " ".join(counts[False]), counts
-    assert "hashpartitioning(_src" not in " ".join(counts[True]), counts
-    assert len(counts[False]) - len(counts[True]) == 1, counts
+    ew = e.join(F.broadcast(deg), "_src").repartition("_src").persist()
+    ew.count()
+    ranks = e.select(F.col("_src").alias("node")).distinct().withColumn(
+        "pr", F.lit(0.01)
+    ).localCheckpoint(eager=True)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    try:
+        contrib = (
+            ew.join(ranks, ew._src == ranks.node)
+            .select("_dst", (F.col("pr") / F.col("_deg")).alias("_c"))
+            .groupBy("_dst")
+            .agg(F.sum("_c").alias("_sum"))
+        )
+        live = live_exchanges(contrib)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", prev)
+        ew.unpersist()
+    assert "hashpartitioning(_src" not in " ".join(live), live
 
 
 def test_empty_edges_raises(spark):

@@ -2018,7 +2018,9 @@ def test_bk_prune_inlist_paths(spark):
     than prune_keys_max skips the filter (full index back — at that
     size the batch touches most of the bk domain and the full scan is
     the cheaper plan); (c) empty keys → empty result, not a parse
-    error (covered end-to-end by the all-undecodable test too)."""
+    error (covered end-to-end by the all-undecodable test too). Keys
+    are capped per input partition before the merge, and the skip
+    decision stays exact across partitions."""
     from real_time_data_anomaly_detection_spark.operators.multimodal import (
         _bk_prune_inlist,
     )
@@ -2034,13 +2036,25 @@ def test_bk_prune_inlist_paths(spark):
     # empty: nothing matches
     none = spark.range(0).selectExpr("id AS bk")
     assert _bk_prune_inlist(idx, none, prune_keys_max=5).count() == 0
+    # 4 partitions of 3 distinct keys: none over the cap alone, the
+    # union is — unfiltered index back
+    spread = spark.range(12, numPartitions=4).selectExpr("id AS bk")
+    assert spread.rdd.getNumPartitions() == 4
+    assert _bk_prune_inlist(idx, spread, prune_keys_max=5) is idx
+    # 4 partitions repeating the same 4 keys merge under the cap
+    repeated = spark.range(16, numPartitions=4).selectExpr("id % 4 AS bk")
+    got = _bk_prune_inlist(idx, repeated, prune_keys_max=5)
+    assert got.count() == 40
+    assert {r.bk for r in got.select("bk").distinct().collect()} == {0, 1, 2, 3}
 
 
 def test_video_index_match_all_undecodable_batch(spark, tmp_path):
     """_bk_prune_inlist edge: a batch with ZERO decodable
     frames yields zero candidate band keys — the single-string IN
     construction must keep the old isin([])-is-false semantics (empty
-    match result), not emit an unparseable `bk IN ()`."""
+    match result), not emit an unparseable `bk IN ()`. The batch is a
+    file source so it sits below the materialization gate and the
+    prune probe runs."""
     from real_time_data_anomaly_detection_spark.operators.multimodal import (
         build_video_index,
         video_index_match,
@@ -2053,9 +2067,11 @@ def test_video_index_match_all_undecodable_batch(spark, tmp_path):
     )
     build_video_index(good, idx_path)
     idx = spark.read.parquet(f"{idx_path}/seed")
-    torn = spark.createDataFrame(
+    torn_path = str(tmp_path / "torn")
+    spark.createDataFrame(
         [(7, b"not a video"), (8, None)], "media_id long, payload binary"
-    )
+    ).write.parquet(torn_path)
+    torn = spark.read.parquet(torn_path)
     assert video_index_match(idx, torn).count() == 0
 
 

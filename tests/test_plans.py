@@ -184,8 +184,7 @@ def test_no_accidental_cartesians_registry_wide(spark):
     # Queries whose CONSTRUCTION executes jobs (index builds / iterative
     # training) are excluded from this fast lazy-plan loop and instead
     # pinned post-build in test_no_cartesians_post_build_iterative below
-    # (round-6 judge item #3 — the invariant now covers them, on the
-    # final returned DataFrame's plan).
+    # (the same invariant, on the final returned DataFrame's plan).
     offenders = {}
     for name, q in sorted(REGISTRY.items()):
         if name in ITERATIVE_BUILD:
@@ -220,8 +219,7 @@ ITERATIVE_BUILD = {
 
 
 def test_no_cartesians_post_build_iterative(spark):
-    """Closes the round-5 plan-pin gap: the iterative/index-building
-    queries excluded from the lazy registry-wide loop get the SAME
+    """The iterative/index-building queries excluded from the lazy registry-wide loop get the SAME
     cartesian/BNLJ invariant asserted on the final returned DataFrame
     (construction jobs run; the plan checked is the one a consumer
     executes). q_ann_batch's BNLJ is the documented crossJoin with the
@@ -239,8 +237,8 @@ def test_no_cartesians_post_build_iterative(spark):
 
 
 def test_partitionless_windows_whitelisted_registry_wide(spark):
-    """Round-8 verdict #4: the bench run's two `WindowExec: No
-    Partition Defined` warnings must stay unambiguous forever — a
+    """The bench run's two `WindowExec: No Partition Defined`
+    warnings must stay unambiguous forever — a
     registry-wide pin (same harness as the cartesian pin) asserting
     the ONLY partition-less window-family nodes sit on
     bounded-cardinality relations, by query-name whitelist:
@@ -252,12 +250,12 @@ def test_partitionless_windows_whitelisted_registry_wide(spark):
     - q_rrf_fusion: rank over the fused per-query top-k candidate
       union — k-bounded by construction.
     - q_drift_report: global window totals over the per-event_type
-      triptych relation (|event_types| rows — the fused round-11 plan
+      triptych relation (|event_types| rows — the fused plan
       replaced the one-row-broadcast BNLJ with this so the relation
       keeps a single consumer and the input is scanned exactly once).
 
     Iterative/index-building queries were surveyed post-build the
-    same way (round 9) and plan ZERO partition-less windows; they are
+    same way and plan ZERO partition-less windows; they are
     excluded here only to keep this loop lazy, the cartesian
     post-build test already executes them."""
     from real_time_data_anomaly_detection_spark.operators import REGISTRY
@@ -276,33 +274,75 @@ def test_partitionless_windows_whitelisted_registry_wide(spark):
     assert not offenders, offenders
 
 
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_size_gated_checkpoint_fires(spark):
-    """The size-gated localCheckpoint must actually FIRE for small
+    """The size-gated materialization must actually FIRE for small
     inputs: pyspark's stats().sizeInBytes() started returning a plain
     int, so the old `.toString()` call raised AttributeError and the
     except-branch silently disabled every gate — all three multi-
     consumer relations (minhash arr, prefix arr, exact-substring
     grams) recomputed their corpus subplan per consumer (q_prefix_
     jaccard re-ran the scan+shingle chain serially, +4-6 s at sf0.1).
-    Pin both the estimator and the checkpoint's presence in the plan."""
+    Pin both the estimator and the checkpoint's presence in the plan,
+    for the operators and for the registry queries whose checkpoint
+    the gate guards."""
     from real_time_data_anomaly_detection_spark.operators.dedup import (
         minhash_neardup_pairs,
         prefix_filter_jaccard,
     )
     from real_time_data_anomaly_detection_spark.plans.inspect import (
+        MATERIALIZE_MAX_BYTES,
         plan_size_bytes,
     )
-
-    from real_time_data_anomaly_detection_spark.io import load_table
 
     # must be a FILE source: in-memory relations report Long.MaxValue
     # (unknown) and correctly fall to the recompute branch
     d = load_table(spark, SF_DIR, "documents")
     est = plan_size_bytes(d)
-    assert 0 < est < (1 << 30), est
+    assert 0 < est <= MATERIALIZE_MAX_BYTES, est
     for q in (minhash_neardup_pairs(d), prefix_filter_jaccard(d)):
-        plan = q._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" in plan, "checkpoint missing from plan"
+        assert "ExistingRDD" in _executed(q), "checkpoint missing from plan"
+    for name in (
+        "q_countmin_freq",
+        "q_hll_md5",
+        "q_video_index_md5",  # video_index_match
+        "q_video_neardup_md5",  # video_neardup_pairs
+    ):
+        plan = _executed(REGISTRY[name].spark_fn(spark, SF_DIR))
+        assert "ExistingRDD" in plan, f"{name}: checkpoint missing from plan"
+
+
+def test_materialize_gate_skips_large_inputs(spark):
+    """Above MATERIALIZE_MAX_BYTES the helper returns its input
+    untouched: no checkpoint in the plan. Without ``gate_on`` it
+    always checkpoints."""
+    from real_time_data_anomaly_detection_spark.plans.inspect import (
+        materialize,
+    )
+
+    df = spark.range(10).selectExpr("id % 3 AS k")
+    big = spark.range(1 << 40)  # Range estimate: 8 TiB
+    gated = materialize(df, gate_on=big)
+    assert gated is df
+    assert "ExistingRDD" not in _executed(gated)
+    assert "ExistingRDD" in _executed(materialize(df, eager=False))
+
+
+def test_sort_past_boundary_checkpoints_under_the_sort(spark):
+    """sort_past_boundary's checkpoint is the sort's direct logical
+    child, so the range-sampling job reads the checkpoint instead of
+    re-running the plan under it."""
+    from real_time_data_anomaly_detection_spark.plans.inspect import (
+        sort_past_boundary,
+    )
+
+    df = spark.range(10).selectExpr("id % 3 AS k", "id")
+    plan = sort_past_boundary(df, "k", "id")._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "Sort", plan.toString()
+    assert plan.child().getClass().getSimpleName() == "LogicalRDD", plan.toString()
 
 
 def test_dynamic_partition_pruning_fires(spark, tmp_path):
@@ -393,7 +433,7 @@ def test_ingest_dedup_corpus_never_shuffles(spark):
     map-side through all of them); the only exchanges are batch-sized
     (intra-batch dedup windows + presentation sort). A SortMergeJoin
     or ShuffledHashJoin anywhere means the corpus got reshuffled.
-    Since round 9 both key kinds ride ONE corpus pass (tagged
+    Both key kinds ride ONE corpus pass (tagged
     (kind, key) explode), so exactly one scan subtree carries the
     corpus-side doc_id < 400 pushed filter."""
     from real_time_data_anomaly_detection_spark.operators import REGISTRY
@@ -406,13 +446,13 @@ def test_ingest_dedup_corpus_never_shuffles(spark):
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan
     assert plan.count("BroadcastHashJoin") >= 3
-    # single corpus pass (round-8 advice #3): the corpus-side pushed
+    # single corpus pass: the corpus-side pushed
     # filter appears in exactly one scan subtree
     assert plan.count("LessThan(doc_id,400)") == 1
 
 
 def test_ingest_dedup_shuffle_fallback_matches_broadcast(spark):
-    """Round-8 verdict #1: an unbroadcastable batch must degrade to
+    """An unbroadcastable batch must degrade to
     key-keyed shuffle joins, not silently plan a corpus-side
     broadcast of a huge relation — and the two regimes must admit
     IDENTICAL rows. broadcast_keys=False forces the fallback; the
@@ -496,10 +536,9 @@ def test_image_index_match_pushdown_and_broadcast(spark, tmp_path_factory):
 
 
 def test_drift_report_single_scan(spark):
-    """Round-11 verdict #3: the fused q_drift_report derives all three
-    drift statistics (chi²/PSI/KS) from ONE pass — the executed plan
-    runs exactly one FileScan of events (the composed round-10 body
-    paid three scans + three event-sized aggregations). Counted on
+    """The fused q_drift_report derives all three drift statistics
+    (chi²/PSI/KS) from ONE pass — the executed plan runs exactly one
+    FileScan of events (the composed body paid three scans + three event-sized aggregations). Counted on
     the post-execution adaptive plan, skipping reused exchanges."""
     from real_time_data_anomaly_detection_spark.operators import REGISTRY
     from real_time_data_anomaly_detection_spark.plans.inspect import (
@@ -524,8 +563,7 @@ def _static_scans(df) -> int:
 
 
 def test_round13_single_consumer_scan_pins(spark):
-    """Round-13 restructures: every multi-consumer re-inlining fix
-    stays fixed. Catalyst re-inlines a DataFrame subtree once PER
+    """Every multi-consumer re-inlining fix stays fixed. Catalyst re-inlines a DataFrame subtree once PER
     CONSUMER, so an innocent second reference to an expensive relation
     silently multiplies its scans — these exact counts are the pin
     (before the restructures: psi_drift 22, ks_drift 2,

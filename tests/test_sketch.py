@@ -57,8 +57,8 @@ def test_cms_build_from_counts_equals_stream_build(spark):
     """countmin_build_from_counts over pre-aggregated (item, count)
     rows must produce the IDENTICAL sparse counter relation as
     countmin_build over the expanded occurrence stream (associativity
-    of the bucket sums) — the equivalence q_countmin_freq's round-14
-    single-pass restructure rests on."""
+    of the bucket sums) — the equivalence q_countmin_freq's
+    single-pass plan rests on."""
     from real_time_data_anomaly_detection_spark.operators.sketch import (
         countmin_build_from_counts,
     )
@@ -82,7 +82,7 @@ def test_hll_over_distinct_equals_over_raw(spark):
     """HLL registers are duplicate-insensitive (max of rho per bucket),
     so the estimate over the DISTINCT key relation must equal the
     estimate over the raw stream bit-for-bit — the equivalence
-    q_hll_md5's round-14 shared-distinct restructure rests on."""
+    q_hll_md5's shared-distinct plan rests on."""
     items = _zipf_items(spark).withColumn("g", F.lit("x"))
     raw = hll_estimate(items, "item", ["g"], p=6).collect()
     dis = hll_estimate(items.distinct(), "item", ["g"], p=6).collect()
@@ -307,3 +307,21 @@ def test_kmv_jaccard_within_sampling_bound(spark):
     r = REGISTRY["q_kmv_jaccard"].spark_fn(spark, "/root/testdata/sf0.01").collect()[0]
     assert r["k"] == 256 and 0 < r["matches"] <= r["k"]
     assert abs(r["est_jaccard_ppm"] - r["exact_jaccard_ppm"]) <= 62500
+
+
+def test_hll_md5_exact_side_ignores_null_keys(spark, tmp_path):
+    """q_hll_md5's exact_nd is count(DISTINCT l_partkey) per flag, as
+    in its oracle: a (flag, NULL) pair in the shared distinct relation
+    must not count as a key."""
+    from real_time_data_anomaly_detection_spark.operators.sketch import q_hll_md5
+
+    rows = [
+        ("A", 1), ("A", 2), ("A", 2), ("A", None),
+        ("R", 3), ("R", None), ("R", None),
+        ("N", 4), ("N", 5), ("N", 6),
+    ]
+    spark.createDataFrame(rows, "l_returnflag string, l_partkey long").write.parquet(
+        str(tmp_path / "lineitem.parquet")
+    )
+    got = {r.l_returnflag: r.exact_nd for r in q_hll_md5(spark, str(tmp_path)).collect()}
+    assert got == {"A": 2, "R": 1, "N": 3}

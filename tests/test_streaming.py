@@ -78,22 +78,27 @@ def test_tumbling_stream_equals_batch_twin(spark, replay_dir):
     assert len(got) > 0
 
 
+_STATE_STORE_PROVIDERS = {
+    "hdfs": "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+    "rocksdb": "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+}
+
+
 @pytest.mark.parametrize("provider", ["hdfs", "rocksdb"])
 def test_last_n_window_matches_deque_simulation(spark, replay_dir, provider):
     """The stateful last-N pipeline is provider-agnostic: identical
     results under the heap-backed HDFS store and the disk-backed
     RocksDB store (the 100 TB configuration — state spills to local
-    disk instead of executor heap; session.py STATE_STORE_PROVIDERS).
-    providerClass is read per streaming query, so toggling the session
-    conf around the run is the supported switch."""
-    from real_time_data_anomaly_detection_spark.session import STATE_STORE_PROVIDERS
-
+    disk instead of executor heap). providerClass is read per streaming
+    query, so toggling the session conf around the run is the
+    supported switch (``get_spark(extra_conf=...)`` sets it per
+    session)."""
     batch_df = spark.read.parquet(replay_dir)
     stream_df = file_replay_source(spark, replay_dir, batch_df.schema)
 
     key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(key, None)
-    spark.conf.set(key, STATE_STORE_PROVIDERS[provider])
+    spark.conf.set(key, _STATE_STORE_PROVIDERS[provider])
     try:
         out = _run_to_memory(
             spark,
