@@ -78,8 +78,9 @@ def bpe_train(
     partitioning (ties broken count DESC then (left, right) ASC).
 
     ``batch_size=B`` applies the standard merge-batching trick: each
-    round collects the top candidates once and greedily picks up to B pairs that are pairwise disjoint on SYMBOLS
-    (no member consumes another's operand) and on CREATIONS (no member
+    round collects the top candidates once and greedily picks up to B
+    pairs that are pairwise disjoint on SYMBOLS (no member consumes
+    another's operand) and on CREATIONS (no member
     touches a symbol equal to an earlier member's left+right
     concatenation — without this, ('a','b') then ('ab','x') would let
     the second fusion consume 'ab' tokens that did not exist when its

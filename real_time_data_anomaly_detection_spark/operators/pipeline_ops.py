@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from real_time_data_anomaly_detection_spark.io import load_table
 from real_time_data_anomaly_detection_spark.operators.dedup import shingles
 from real_time_data_anomaly_detection_spark.operators.registry import query
+from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
 
 
 def contamination_hits(
@@ -1133,8 +1134,6 @@ def ingest_dedup_keys(
     re-scan or re-digest corpus documents. Returns the admitted batch rows as
     (id, _dig, canon_url) — the digest rides along so admissions can
     be appended straight back into the index."""
-    from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
-
     if broadcast_keys is None:
         broadcast_keys = plan_size_bytes(batch) <= max_broadcast_bytes
     b = canonicalize_urls(batch, url_col).select(

@@ -4,6 +4,10 @@ These make scale properties TESTABLE: "the dimension join broadcasts",
 "the filter reached the parquet scan", "this pipeline shuffles once" —
 the difference between working-at-sf0.01 and working-at-100TB. Used by
 tests/test_plans.py and available for ad-hoc plan review.
+
+Also the engine's materialization policy (:func:`materialize`,
+:func:`sort_past_boundary`), which decides from the same plan
+statistics; no other module calls ``localCheckpoint``.
 """
 
 from __future__ import annotations
@@ -174,9 +178,9 @@ def materialize(
 
     ``gate_on=None`` always checkpoints: for lineage cuts inside
     driver loops, where the plan would otherwise grow every round,
-    and for relations bounded by construction. ``eager=False`` defers
-    the fill to the caller's next action, which then materializes and
-    consumes in one job."""
+    and for a result that must be filled before the caches it reads
+    are released. ``eager=False`` defers the fill to the caller's next
+    action, which then materializes and consumes in one job."""
     if gate_on is not None and plan_size_bytes(gate_on) > MATERIALIZE_MAX_BYTES:
         return df
     return df.localCheckpoint(eager=eager)
