@@ -38,30 +38,20 @@ from real_time_data_anomaly_detection_spark.operators import (  # noqa: E402,F40
 )
 
 # ---------------------------------------------------------------------------
-# Driver-gate window curation (round-6 judge item #1).
+# Correctness-gate window.
 #
-# The driver's per-round CORRECTNESS artifact checks the FIRST 50 registry
-# entries. Registration order is import order, which used to make the window
-# 100% relational — the LLM-pipeline / curation / sketch / graph families
-# (the engine's differentiating surface) only got hard verification when a
-# judge reran them. Reorder the dict (insertion-order preserving) so the
-# first 50 is a representative cross-family sample: ~23 relational core rows
-# plus 27 flagship rows spanning every SURVEY §2.3 family. All 50 are
-# oracle-backed. The rest keep their original relative order.
-#
-# Round-8 rotation (VERDICT r7 #4): seven redundant relational rows
-# (each family keeps siblings in the window) swapped for the round-7
-# flagships q_prefix_jaccard, q_split_leakage_safe, q_hierarchy_flatten,
-# q_cusum_alarms, q_quantile_sketch, q_ohlc_bars plus the round-8
-# q_url_host_cap, so the driver's hard per-round signal covers the
-# newest families too.
+# The per-run correctness gate checks the FIRST 50 registry entries.
+# Registration order is import order, which would make that window all
+# relational. Reorder the dict (insertion-order preserving) so the first 50
+# is a cross-family sample: relational core rows plus flagship rows from
+# every SURVEY §2.3 family, each family keeping siblings in the window. All
+# 50 are oracle-backed; the full sweeps check the rest, which keep their
+# original relative order.
 # ---------------------------------------------------------------------------
 _GATE_WINDOW = [
-    # smoke path first (driver convention)
+    # smoke path first
     "q_scan_project",
-    # relational core: filter/project/join/agg/window/set — r11
-    # rotated out q_filter_eq / q_join_semi / q_agg_having (each
-    # family keeps siblings in the window)
+    # relational core: filter/project/join/agg/window/set
     "q_filter_range",
     "q_project_compute",
     "q_join_inner",
@@ -71,42 +61,15 @@ _GATE_WINDOW = [
     "q_window_rank",
     "q_topk",
     "q_window_tumbling_batch",
-    # cross-family flagship sample (33 rows; judge-named set + the
-    # r7/r8/r9/r10 rotations — r9 swapped out q_join_anti /
-    # q_agg_distinct / q_window_lag for the media + chi-square-drift
-    # flagships; r10 swapped out q_clamp / q_join_theta / q_agg_rollup
-    # (each family keeps siblings in the window) for the round-10
-    # flagships: PSI numeric drift and the persisted image-index
-    # match + admission twins; r11 promoted the exact-integer KS
-    # drift, the fused single-scan quartet report, the aHash twin,
-    # the exact earth-mover's drift, and the Holt forecast —
-    # q_case_when / q_join_broadcast rotated out for the last two
-    # (projection keeps q_project_compute; join keeps inner + 3way,
-    # and the broadcast strategy stays plan-pinned in tests/test_plans))
+    # cross-family flagship sample
     "q_ks_drift",
     "q_emd_drift",
     "q_holt_forecast",
     "q_drift_report",
     "q_image_ahash_md5",
-    # r12 rotation: the video md5 trio (decoder + persisted index +
-    # admission — the image family's discipline at frame granularity)
-    # in; q_psi_drift out (the fused q_drift_report publishes the same
-    # PSI from the same edges) along with q_image_index_md5 /
-    # q_image_ingest_admit_md5 (their video analogs exercise the same
-    # index/admission algebra; the image family keeps ahash + neardup
-    # in-window, and every rotated row stays green in the full sweeps)
     "q_video_dhash_md5",
     "q_video_index_md5",
     "q_video_ingest_admit_md5",
-    # r13 rotation (VERDICT r12 #3): the remaining oracle-backed video
-    # twins (scene cuts + pairwise containment) and the bounded-state
-    # drift grid (q_ks_drift_bucketed — the bucket_edges valve's
-    # algebra) promoted; q_union_all / q_window_lastk /
-    # q_audio_fingerprint_md5 rotated out (set keeps intersect/except
-    # via full sweeps and union stays trivially plan-pinned; window
-    # keeps rank + tumbling; media keeps image ahash/neardup + the
-    # five video rows — every rotated row stays green in the full
-    # sweeps)
     "q_video_scene_cuts_md5",
     "q_video_neardup_md5",
     "q_ks_drift_bucketed",

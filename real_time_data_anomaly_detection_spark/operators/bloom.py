@@ -59,7 +59,7 @@ def bloom_build(
     # aggregate dedups map-side, the exchange carries one set per task
     # and the driver fetches a single array cell — same distinct
     # position set (bounded by m via pmod), measured 2.5x cheaper on
-    # the equivalent video-band fetch (round-14, cf. _bk_prune_inlist).
+    # the equivalent video-band fetch (cf. _bk_prune_inlist).
     row = df.select(
         F.explode(F.array(*_bit_positions(F.col(key_col), num_bits, k))).alias("p")
     ).agg(F.collect_set("p").alias("ps")).head()

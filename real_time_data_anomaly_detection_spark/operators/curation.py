@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from real_time_data_anomaly_detection_spark.io import load_table
 from real_time_data_anomaly_detection_spark.operators.registry import query
 from real_time_data_anomaly_detection_spark.plans.inspect import (
+    broadcast_if_small,
     materialize,
     sort_past_boundary,
 )
@@ -109,7 +110,6 @@ def segment_dedup(
     id_col: str = "doc_id",
     seg_words: int = 10,
     min_docs: int = 2,
-    broadcast_dups: bool = True,
 ) -> DataFrame:
     """Remove segments (fixed ``seg_words``-word windows) whose exact
     text recurs in >= ``min_docs`` distinct documents; returns
@@ -126,14 +126,11 @@ def segment_dedup(
 
     Scale shape: segments shuffle as sha2-256 digests, never text
     (same rule as exact doc dedup); the duplicated-digest set is the
-    output of a partial-aggregated count and is joined back BROADCAST
-    (boilerplate is, by definition, a small distinct set; for a
-    DUP-HEAVY corpus where the duplicated set itself scales with n,
-    pass ``broadcast_dups=False`` and the flag-back becomes a shuffle
-    join on the digest — still linear, never driver-sized).
-    Reassembly is one groupBy on the
-    doc id with a sort_array over (seg_idx, seg) structs — order
-    restored deterministically regardless of partitioning.
+    output of a partial-aggregated count and is joined back through
+    broadcast_if_small, gated on ``df`` (in a DUP-HEAVY corpus the
+    duplicated set itself scales with n). Reassembly is one groupBy
+    on the doc id with a sort_array over (seg_idx, seg) structs —
+    order restored deterministically regardless of partitioning.
     """
     toks = df.select(id_col, F.split(F.col(text_col), " ").alias("_t")).filter(
         F.size("_t") > 0
@@ -157,8 +154,7 @@ def segment_dedup(
         .filter(F.col("_nd") >= min_docs)
         .select("_dig", F.lit(True).alias("_dup"))
     )
-    dup_side = F.broadcast(dup) if broadcast_dups else dup
-    flagged = segs.join(dup_side, "_dig", "left").withColumn(
+    flagged = segs.join(broadcast_if_small(dup, df), "_dig", "left").withColumn(
         "_dup", F.coalesce("_dup", F.lit(False))
     )
     kept = F.filter(
@@ -222,7 +218,6 @@ def exact_substring_dedup(
     id_col: str = "doc_id",
     k: int = 10,
     min_count: int = 2,
-    broadcast_dups: bool = True,
 ) -> DataFrame:
     """Remove every token covered by a corpus-duplicated k-token gram
     (ANY alignment — the generalization fixed windows miss); returns
@@ -240,16 +235,13 @@ def exact_substring_dedup(
     distributed reimplementations.
 
     Scale shape, in shuffles: (1) gram digests partial-aggregate to
-    the duplicated set — sha2-256 digests shuffle, never text; in a
-    boilerplate-light corpus the duplicated set is tiny and rejoins
-    BROADCAST (default); in a DUP-HEAVY corpus the duplicated-start
-    set scales with n — pass ``broadcast_dups=False`` and both
-    flag-backs become shuffle joins (still linear, never
-    driver-sized); (2) tokens exchange once on the doc id for the
-    coverage window (``max(dup_start) over [p-k+1, p]`` — one pass,
-    no interval algebra, no range join) and the final reassembly
-    groupBy reuses that same hash partitioning, so it costs no
-    further exchange.
+    the duplicated set — sha2-256 digests shuffle, never text; both
+    flag-backs go through broadcast_if_small, gated on ``df`` (in a
+    DUP-HEAVY corpus the duplicated-start set scales with n); (2)
+    tokens exchange once on the doc id for the coverage window
+    (``max(dup_start) over [p-k+1, p]`` — one pass, no interval
+    algebra, no range join) and the final reassembly groupBy reuses
+    that same hash partitioning, so it costs no further exchange.
     """
     toks = df.select(id_col, F.split(F.col(text_col), " ").alias("_t")).filter(
         F.size("_t") > 0
@@ -283,7 +275,7 @@ def exact_substring_dedup(
     # trips Spark's "trivially true equals predicate" disambiguation
     # warning — the rename makes the self-join unambiguous by name.
     dup_starts = (
-        grams.join(F.broadcast(dup) if broadcast_dups else dup, "_dig")
+        grams.join(broadcast_if_small(dup, df), "_dig")
         .select(F.col(id_col).alias("_did"), "_s", F.lit(1).alias("_isd"))
         .distinct()
     )
@@ -291,11 +283,11 @@ def exact_substring_dedup(
     tokens = toks.select(
         id_col, F.posexplode("_t").alias("_p0", "tok")
     ).select(id_col, (F.col("_p0") + 1).alias("_p"), "tok")
-    # Under broadcast_dups the token stream is shuffled exactly once
-    # (for the coverage window) regardless of size estimates; without
-    # it the (doc_id, pos) join co-partitions with the window's key.
+    # Broadcast, the token stream is shuffled exactly once (for the
+    # coverage window); unbroadcast, the (doc_id, pos) join
+    # co-partitions with the window's key.
     flagged = tokens.join(
-        F.broadcast(dup_starts) if broadcast_dups else dup_starts,
+        broadcast_if_small(dup_starts, df),
         (F.col(id_col) == F.col("_did")) & (F.col("_p") == F.col("_s")),
         "left",
     ).select(id_col, "_p", "tok", F.coalesce("_isd", F.lit(0)).alias("_isd"))
@@ -1010,7 +1002,6 @@ def merge_upsert(
     target: DataFrame,
     updates: DataFrame,
     key_col: str,
-    broadcast_keys: bool = True,
 ) -> DataFrame:
     """Upsert ``updates`` into ``target`` on ``key_col``: rows whose
     key exists in updates are replaced, new keys are appended,
@@ -1018,14 +1009,11 @@ def merge_upsert(
 
     This is the relational core of MERGE INTO / CDC compaction. Scale
     shape: the typical change batch is orders of magnitude smaller
-    than the canonical table, so the anti-join probes a BROADCAST key
-    set — the 100 TB target is never reshuffled, and the union is a
-    metadata-only concatenation. (On a table format with partition
-    pruning, the same plan rewrites only partitions containing update
-    keys.) For a change batch too large to broadcast, pass
-    ``broadcast_keys=False`` and both sides shuffle on the key —
-    still one exchange each (mirrors segment_dedup's
-    ``broadcast_dups`` pattern).
+    than the canonical table, so the anti-join probes the key set
+    through broadcast_if_small, gated on ``updates`` — the 100 TB
+    target is never reshuffled, and the union is a metadata-only
+    concatenation. (On a table format with partition pruning, the
+    same plan rewrites only partitions containing update keys.)
     """
     cols = target.columns
     if set(updates.columns) != set(cols):
@@ -1041,9 +1029,7 @@ def merge_upsert(
     # ``latest`` instead, where the re-inlined work includes the
     # latest-wins window (measured win there).
     keys = updates.select(key_col).distinct()
-    untouched = target.join(
-        F.broadcast(keys) if broadcast_keys else keys, key_col, "left_anti"
-    )
+    untouched = target.join(broadcast_if_small(keys, updates), key_col, "left_anti")
     return untouched.select(cols).unionByName(updates.select(cols))
 
 
@@ -1325,7 +1311,6 @@ def cdc_apply(
     key_col: str,
     op_col: str = "op",
     seq_col: str = "seq",
-    broadcast_keys: bool = True,
 ) -> DataFrame:
     """Apply a CDC change batch to a snapshot: per key, the
     HIGHEST-``seq_col`` change wins ('upsert' replaces-or-appends the
@@ -1336,10 +1321,10 @@ def cdc_apply(
 
     Scale shape: latest-wins is one window pass over the CHANGE BATCH
     (never the snapshot); the snapshot is touched by exactly one
-    anti-join against the (broadcast by default) changed-key set —
-    the 100 TB target is never reshuffled. ``changes`` carries the
-    target's columns plus (op, seq); delete rows may leave the
-    payload columns null.
+    anti-join against the changed-key set, through
+    broadcast_if_small gated on ``changes`` — the 100 TB target is
+    never reshuffled. ``changes`` carries the target's columns plus
+    (op, seq); delete rows may leave the payload columns null.
 
     Ties on ``seq_col`` (a log that re-emits the same sequence number
     for a key) are resolved DETERMINISTICALLY, not by partition luck:
@@ -1370,9 +1355,7 @@ def cdc_apply(
     latest = materialize(latest, gate_on=changes)
     changed_keys = latest.select(key_col)
     untouched = target.join(
-        F.broadcast(changed_keys) if broadcast_keys else changed_keys,
-        key_col,
-        "left_anti",
+        broadcast_if_small(changed_keys, changes), key_col, "left_anti"
     )
     upserts = latest.filter(F.col(op_col) == "upsert").select(cols)
     return untouched.select(cols).unionByName(upserts)

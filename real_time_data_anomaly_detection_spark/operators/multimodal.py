@@ -27,8 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from real_time_data_anomaly_detection_spark.plans.inspect import (
+    broadcast_if_small,
     materialize,
-    plan_size_bytes,
     sort_past_boundary,
 )
 
@@ -1262,6 +1262,10 @@ def video_frame_dhash(
     return df.select(id_col, payload_col).mapInPandas(_hash, schema)
 
 
+# Most distinct band keys a batch may push into the index scan.
+PRUNE_KEYS_MAX = 100_000
+
+
 def _bk_prune_inlist(
     idx: DataFrame, bands: DataFrame, prune_keys_max: int
 ) -> DataFrame:
@@ -1314,9 +1318,6 @@ def video_index_match(
     hash_w: int = 8,
     hash_h: int = 8,
     n_bands: int | None = None,
-    broadcast_batch: bool | None = None,
-    max_broadcast_bytes: int = 64 << 20,
-    prune_keys_max: int = 100_000,
 ) -> DataFrame:
     """Cross-media near-dup: match every FRAME of a new Motion-JPEG
     video batch against a persisted IMAGE-hash index
@@ -1333,20 +1334,16 @@ def video_index_match(
     ``spark.read.parquet(f"{index_path}/seed")``. Scale shape mirrors
     image_index_match: frames decode ONCE in the Arrow worker onto a
     localCheckpoint, only 8-byte hashes + band keys shuffle, the
-    micro-batch side broadcasts so the index relation never moves,
-    and when the batch holds ≤ ``prune_keys_max`` distinct band keys
-    they are pushed as a bk IN-list into the index scan — the
-    two-hop-keys trick over build_image_index's bk-sorted layout, so
-    per-trigger cost scales with the BATCH's frames, not the corpus
-    (the image ladder's flat 1.27→1.48 s row transfers verbatim)."""
+    batch side goes through broadcast_if_small so a micro-batch's
+    index relation never moves, and when the batch holds ≤
+    PRUNE_KEYS_MAX distinct band keys they are pushed as a bk IN-list
+    into the index scan — the two-hop-keys trick over
+    build_image_index's bk-sorted layout, so per-trigger cost scales
+    with the BATCH's frames, not the corpus (the image ladder's flat
+    1.27→1.48 s row transfers verbatim)."""
     nbits = hash_w * hash_h
     if n_bands is None:
         n_bands = _default_bands(nbits, max_hamming)
-    if broadcast_batch is None:
-        # the image twins' valve: micro-batches broadcast, a
-        # backfill-sized batch degrades to a shuffle join instead of
-        # an executor-OOM broadcast
-        broadcast_batch = plan_size_bytes(batch_videos) <= max_broadcast_bytes
     decoded = video_frame_dhash(
         batch_videos, payload_col, id_col, hash_w, hash_h
     ).filter(F.col("dhash").isNotNull())
@@ -1363,9 +1360,9 @@ def video_index_match(
     if fps is not decoded:
         # the prune probe reads the CHECKPOINTED hashes, as in
         # image_index_match: an unmaterialized batch would re-run the
-        # decode for it, and is past prune_keys_max anyway
-        idx = _bk_prune_inlist(idx, b, prune_keys_max)
-    right = F.broadcast(b) if broadcast_batch else b
+        # decode for it, and is past PRUNE_KEYS_MAX anyway
+        idx = _bk_prune_inlist(idx, b, PRUNE_KEYS_MAX)
+    right = broadcast_if_small(b, batch_videos)
     hamming = F.bit_count(F.col("h_idx").bitwiseXOR(F.col("h_new")))
     return (
         idx.join(right, "bk")
@@ -1504,8 +1501,6 @@ def video_neardup_admit(
     hash_w: int = 8,
     hash_h: int = 8,
     n_bands: int | None = None,
-    broadcast_batch: bool | None = None,
-    max_broadcast_bytes: int = 64 << 20,
 ) -> DataFrame:
     """Frame-coverage admission for a video batch (the video gate
     next to the text and image gates): admit exactly the
@@ -1527,18 +1522,12 @@ def video_neardup_admit(
     nbits = hash_w * hash_h
     if n_bands is None:
         n_bands = _default_bands(nbits, max_hamming)
-    if broadcast_batch is None:
-        # the image twins' valve: micro-batches broadcast (the index
-        # side never shuffles); a backfill-sized batch degrades to a
-        # shuffle join instead of an executor-OOM broadcast
-        broadcast_batch = plan_size_bytes(batch_videos) <= max_broadcast_bytes
     fps = materialize(
         video_frame_dhash(batch_videos, payload_col, id_col, hash_w, hash_h),
         gate_on=batch_videos,
     )
     good = fps.filter(F.col("dhash").isNotNull())
     banded = _band_fps(good, id_col, nbits, n_bands, extra_cols=("frame_idx",))
-    maybe_bc = F.broadcast if broadcast_batch else (lambda x: x)
     new_side = banded.select(
         F.col(id_col).alias("_vid"),
         F.col("frame_idx").alias("_fidx"),
@@ -1548,7 +1537,7 @@ def video_neardup_admit(
     # covered-by-index frames
     hit_idx = (
         index_bands.select(F.col("dhash").alias("h_idx"), "bk")
-        .join(maybe_bc(new_side), "bk")
+        .join(broadcast_if_small(new_side, batch_videos), "bk")
         .filter(
             F.bit_count(F.col("h_idx").bitwiseXOR(F.col("h_new")))
             <= max_hamming
@@ -2115,17 +2104,13 @@ def image_index_match(
     hash_w: int = 8,
     hash_h: int = 8,
     n_bands: int | None = None,
-    broadcast_batch: bool | None = None,
-    max_broadcast_bytes: int = 64 << 20,
-    prune_keys_max: int = 100_000,
 ) -> DataFrame:
     """Match a NEW image batch against a persisted index: pairs
     (idx_id, new_id, hamming ≤ max_hamming). The batch decodes once
     (size-gated localCheckpoint on the 16 B/row hash relation), its
-    band rows broadcast to the index side (size-gated like
-    ingest_dedup's valve — above the gate it degrades to a shuffle
-    join), and when the batch holds ≤ ``prune_keys_max`` distinct band
-    keys they are pushed as a bk IN-list into the index scan — the
+    band rows go through broadcast_if_small to the index side, and
+    when the batch holds ≤ PRUNE_KEYS_MAX distinct band keys they are
+    pushed as a bk IN-list into the index scan — the
     two-hop-keys trick: because build_image_index sorted by bk,
     parquet row-group stats skip everything the batch can't touch, so
     per-trigger cost scales with the BATCH, not the corpus.
@@ -2137,8 +2122,6 @@ def image_index_match(
     nbits = hash_w * hash_h
     if n_bands is None:
         n_bands = _default_bands(nbits, max_hamming)
-    if broadcast_batch is None:
-        broadcast_batch = plan_size_bytes(batch_images) <= max_broadcast_bytes
     decoded = image_dhash(batch_images, payload_col, id_col, hash_w, hash_h).filter(
         F.col("dhash").isNotNull()
     )
@@ -2153,9 +2136,9 @@ def image_index_match(
         # two-hop prune probe reads the CHECKPOINTED hashes — never a
         # second decode; for un-checkpointed backfill batches the probe
         # would itself re-run the decode, and a batch that big would
-        # blow past prune_keys_max anyway, so skip it entirely.
-        idx = _bk_prune_inlist(idx, b, prune_keys_max)
-    right = F.broadcast(b) if broadcast_batch else b
+        # blow past PRUNE_KEYS_MAX anyway, so skip it entirely.
+        idx = _bk_prune_inlist(idx, b, PRUNE_KEYS_MAX)
+    right = broadcast_if_small(b, batch_images)
     hamming = F.bit_count(F.col("h_idx").bitwiseXOR(F.col("h_new")))
     return (
         idx.join(right, "bk")
@@ -2174,8 +2157,6 @@ def image_neardup_admit(
     hash_w: int = 8,
     hash_h: int = 8,
     n_bands: int | None = None,
-    broadcast_batch: bool | None = None,
-    max_broadcast_bytes: int = 64 << 20,
 ) -> DataFrame:
     """Admission decision for a new image batch against everything
     SEEN so far: admit exactly the images with (1) no indexed
@@ -2198,27 +2179,22 @@ def image_neardup_admit(
     nbits = hash_w * hash_h
     if n_bands is None:
         n_bands = _default_bands(nbits, max_hamming)
-    if broadcast_batch is None:
-        # the ingest_dedup valve: micro-batches broadcast (the index
-        # side never shuffles); a backfill-sized batch degrades to a
-        # shuffle join instead of an executor-OOM broadcast
-        broadcast_batch = plan_size_bytes(batch_images) <= max_broadcast_bytes
     all_fps = materialize(
         image_dhash(batch_images, payload_col, id_col, hash_w, hash_h),
         gate_on=batch_images,
     )
     fps = all_fps.filter(F.col("dhash").isNotNull())
     banded = _band_fps(fps, id_col, nbits, n_bands)
-    maybe_bc = F.broadcast if broadcast_batch else (lambda x: x)
     idx = index_bands.select(
         F.col("dhash").alias("h_idx"), "bk"
     )
     hit_idx = (
         idx.join(
-            maybe_bc(
+            broadcast_if_small(
                 banded.select(
                     F.col(id_col).alias("_nid"), F.col("dhash").alias("h_new"), "bk"
-                )
+                ),
+                batch_images,
             ),
             "bk",
         )
@@ -3029,7 +3005,7 @@ def q_video_index_md5(spark, sf_dir: str) -> DataFrame:
     parquet), then every FRAME of the batch half matches against the
     index read back from disk (video_index_match: frames decode once
     onto a localCheckpoint, bk IN-list prunes the index scan, the
-    batch side broadcasts behind the 64 MB valve). The oracle replays
+    batch side goes through broadcast_if_small). The oracle replays
     decode + dHash + banding for both halves and joins them directly —
     a hash match proves the PERSISTED path returns exactly what an
     inline frame join would, q_image_index_md5's index == inline

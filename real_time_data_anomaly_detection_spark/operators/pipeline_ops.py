@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from real_time_data_anomaly_detection_spark.io import load_table
 from real_time_data_anomaly_detection_spark.operators.dedup import shingles
 from real_time_data_anomaly_detection_spark.operators.registry import query
-from real_time_data_anomaly_detection_spark.plans.inspect import plan_size_bytes
+from real_time_data_anomaly_detection_spark.plans.inspect import broadcast_if_small
 
 
 def contamination_hits(
@@ -1073,8 +1073,6 @@ def ingest_dedup(
     url_col: str = "url",
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_keys: bool | None = None,
-    max_broadcast_bytes: int = 64 << 20,
 ) -> DataFrame:
     """Incremental crawl ingest: admit only batch docs that are new by
     BOTH content (exact text) and canonical URL — against the existing
@@ -1093,30 +1091,19 @@ def ingest_dedup(
     (≤ 2·|batch| rows); (2) batch keys ⋉ seen → the hit doc-ids;
     (3) batch ▷ hit ids.
 
-    Regimes (the broadcast valve): with ``broadcast_keys=None``
-    the batch side is size-gated via plans.inspect.plan_size_bytes —
-    under ``max_broadcast_bytes`` every hop is a broadcast-hash join
-    and the corpus is scanned once, SHUFFLED NEVER (plan-pinned in
-    tests/test_plans.py); above the gate (a backfill-sized batch, or
-    an unknown-size in-memory batch) all three hops degrade to
-    digest/key-keyed shuffle joins — the corpus is STILL scanned
-    once, and only its (kind, key) projection ever exchanges, never
-    documents. Both regimes produce identical rows
-    (tests/test_plans.py::test_ingest_dedup_shuffle_fallback_matches_broadcast
-    pins equality on the same fixture).
+    The batch side of every hop goes through
+    plans.inspect.broadcast_if_small, gated on ``batch``: a
+    micro-batch broadcasts and the corpus is scanned once, SHUFFLED
+    NEVER; a backfill-sized batch makes all three hops key-keyed
+    shuffle joins, where the corpus is still scanned once and only
+    its (kind, key) projection exchanges, never documents.
     """
     c = canonicalize_urls(corpus, url_col).select(
         F.sha2(F.col(text_col), 256).alias("_dig"), F.col("canon_url")
     )
-    return ingest_dedup_keys(
-        c,
-        batch,
-        url_col=url_col,
-        text_col=text_col,
-        id_col=id_col,
-        broadcast_keys=broadcast_keys,
-        max_broadcast_bytes=max_broadcast_bytes,
-    ).select(id_col, "canon_url")
+    return ingest_dedup_keys(c, batch, url_col, text_col, id_col).select(
+        id_col, "canon_url"
+    )
 
 
 def ingest_dedup_keys(
@@ -1125,8 +1112,6 @@ def ingest_dedup_keys(
     url_col: str = "url",
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_keys: bool | None = None,
-    max_broadcast_bytes: int = 64 << 20,
 ) -> DataFrame:
     """The :func:`ingest_dedup` core against a PRE-COMPUTED corpus key
     frame ``corpus_keys`` (columns ``_dig``, ``canon_url``) — what a
@@ -1134,8 +1119,6 @@ def ingest_dedup_keys(
     re-scan or re-digest corpus documents. Returns the admitted batch rows as
     (id, _dig, canon_url) — the digest rides along so admissions can
     be appended straight back into the index."""
-    if broadcast_keys is None:
-        broadcast_keys = plan_size_bytes(batch) <= max_broadcast_bytes
     b = canonicalize_urls(batch, url_col).select(
         id_col,
         F.sha2(F.col(text_col), 256).alias("_dig"),
@@ -1160,20 +1143,17 @@ def ingest_dedup_keys(
     bk = _tagged(b, id_col)
     b_keys = bk.select("kind", "key").distinct()
 
-    def _maybe_bc(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_keys else df
-
     seen = (
-        ck.join(_maybe_bc(b_keys), ["kind", "key"], "left_semi")
+        ck.join(broadcast_if_small(b_keys, batch), ["kind", "key"], "left_semi")
         .select("kind", "key")
         .distinct()
     )
     hit_ids = (
-        bk.join(_maybe_bc(seen), ["kind", "key"], "left_semi")
+        bk.join(broadcast_if_small(seen, batch), ["kind", "key"], "left_semi")
         .select(id_col)
         .distinct()
     )
-    fresh = b.join(_maybe_bc(hit_ids), id_col, "left_anti")
+    fresh = b.join(broadcast_if_small(hit_ids, batch), id_col, "left_anti")
     from pyspark.sql import Window
 
     w_d = Window.partitionBy("_dig")

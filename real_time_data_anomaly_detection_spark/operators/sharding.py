@@ -313,7 +313,7 @@ def epoch_order(
     shard file. Data loaders consume shard k in rank order; no RNG
     state is shared or checkpointed — the order IS the data.
 
-    Scale shape (round-8 verdict #2): the naive rank —
+    Scale shape: the naive rank —
     ``row_number() over (partition by shard)`` — sorts each WHOLE
     shard in one task, which at a fixed shard count and 100× corpus
     outgrows an executor (100 TB / 256 shards ≈ 390 GB single-task

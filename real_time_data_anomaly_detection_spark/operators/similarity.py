@@ -69,11 +69,11 @@ def _kmeans_centroids(
     Runs driver-side on a SAMPLE (centroid fitting is O(sample·k·d) and
     needs no distribution; assignment of the full corpus is the
     distributed part). The (n, k, d) difference tensor is allocated
-    once and updated in place (round-13: the per-iteration
-    broadcast-subtract + ``**2`` built two fresh n·k·d temporaries per
-    iteration — measured 1.5× on the 16-subspace PQ training loop);
-    the subtract/square/sum sequence is ARITHMETICALLY UNCHANGED, so
-    centroids stay bit-identical (pinned by the recall tests)."""
+    once and updated in place: a per-iteration broadcast-subtract +
+    ``**2`` would build two fresh n·k·d temporaries per iteration,
+    measured 1.5× slower on the 16-subspace PQ training loop. The
+    subtract/square/sum sequence is the same either way, so centroids
+    are bit-identical (pinned by the recall tests)."""
     rng = np.random.default_rng(seed)
     centroids = sample[rng.choice(len(sample), size=k, replace=False)]
     diff = np.empty((len(sample), k, sample.shape[1]))

@@ -5,14 +5,18 @@ These make scale properties TESTABLE: "the dimension join broadcasts",
 the difference between working-at-sf0.01 and working-at-100TB. Used by
 tests/test_plans.py and available for ad-hoc plan review.
 
-Also the engine's materialization policy (:func:`materialize`,
-:func:`sort_past_boundary`), which decides from the same plan
-statistics; no other module calls ``localCheckpoint``.
+Also the engine's two physical-plan policies, which decide from the
+same plan statistic (:func:`plan_size_bytes`): the materialization
+policy (:func:`materialize`, :func:`sort_past_boundary`; no other
+module calls ``localCheckpoint``) and the broadcast policy
+(:func:`broadcast_if_small`; no other module gates a broadcast on a
+size estimate).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -139,7 +143,7 @@ def partitionless_windows(df) -> list[str]:
 def plan_size_bytes(df) -> int:
     """Catalyst's sizeInBytes estimate for a DataFrame's optimized
     plan, or 2^60 when unavailable — the input to :func:`materialize`
-    and to the broadcast valves. py4j returns the underlying BigInt as
+    and :func:`broadcast_if_small`. py4j returns the underlying BigInt as
     a Python int on current pyspark; older versions handed back a JVM
     object needing .toString() — handle both, because the AttributeError
     from assuming one form silently disabled EVERY size gate (the
@@ -193,6 +197,35 @@ def sort_past_boundary(df: DataFrame, *cols) -> DataFrame:
     Python decode or scoring pass) before the sort job runs it again.
     Used where ``df`` is a small per-row result (hashes, scores)."""
     return df.localCheckpoint(eager=False).orderBy(*cols)
+
+
+# Largest input estimate whose derived relations broadcast.
+BROADCAST_MAX_BYTES = 64 << 20
+
+
+def broadcast_if_small(df: DataFrame, gate_on: DataFrame) -> DataFrame:
+    """The engine's one broadcast policy for DATA-sized relations:
+    ``F.broadcast(df)`` when ``gate_on``'s size estimate is at most
+    BROADCAST_MAX_BYTES, else ``df`` unchanged.
+
+    Use it for a relation whose row count grows with an input batch or
+    corpus: a batch's keys or band rows probing an index, a duplicated
+    digest set, a change batch's keys. Small, it broadcasts and the
+    large side of the join never shuffles. Large, a broadcast would
+    ship a data-sized relation to every executor, so the join stays a
+    key-keyed shuffle join, still linear and never driver-sized. The
+    rows are the same either way. ``gate_on`` is the INPUT scan or
+    batch ``df`` derives from, as in :func:`materialize`: derived
+    estimates, especially past a Python decode, are looser than the
+    file sizes under them. In-memory inputs report an unknown
+    (Long.MaxValue) estimate and so take the shuffle branch.
+
+    A relation whose row count is bounded by a key domain (per-key
+    stats, a dimension table, a query-sized input) takes a plain
+    ``F.broadcast``: its size does not grow with the data."""
+    if plan_size_bytes(gate_on) <= BROADCAST_MAX_BYTES:
+        return F.broadcast(df)
+    return df
 
 
 def executed_file_scans(df) -> int:

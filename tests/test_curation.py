@@ -17,6 +17,7 @@ from real_time_data_anomaly_detection_spark.operators.curation import (
     merge_upsert,
     segment_dedup,
 )
+from real_time_data_anomaly_detection_spark.plans import has_broadcast_join
 
 
 def _docs(spark, rows):
@@ -173,9 +174,23 @@ def test_exact_substring_dedup_within_doc_repeat(spark):
     assert got.clean_text == "x y z" and got.n_removed == 6
 
 
-def test_exact_substring_dedup_shuffle_mode_identical(spark):
-    """broadcast_dups=False (dup-heavy-corpus mode) returns exactly
-    the same rows as the broadcast default."""
+def _both_regimes(spark, tmp_path, rows, schema):
+    """The same rows twice: read back from parquet (a known, small
+    size estimate, so broadcast_if_small broadcasts) and held in memory
+    (an unknown estimate, so it takes the shuffle branch)."""
+    in_memory = spark.createDataFrame(rows, schema)
+    in_memory.write.parquet(str(tmp_path / "input"))
+    return spark.read.parquet(str(tmp_path / "input")), in_memory
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_exact_substring_dedup_shuffle_mode_identical(spark, tmp_path):
+    """The shuffle regime (an input past the broadcast gate) returns
+    exactly the same rows as the broadcast regime; the input alone
+    picks which plan runs."""
     from real_time_data_anomaly_detection_spark.operators.curation import (
         exact_substring_dedup,
     )
@@ -183,21 +198,52 @@ def test_exact_substring_dedup_shuffle_mode_identical(spark):
     rows = [
         (i, " ".join(f"w{i * 15 + j}" for j in range(35))) for i in range(30)
     ]
-    a = {
-        tuple(r)
-        for r in exact_substring_dedup(
-            _docs(spark, rows), k=10, broadcast_dups=True
-        ).collect()
-    }
-    b = {
-        tuple(r)
-        for r in exact_substring_dedup(
-            _docs(spark, rows), k=10, broadcast_dups=False
-        ).collect()
-    }
-    assert a == b and len(a) == 30
+    small, unknown = _both_regimes(spark, tmp_path, rows, "doc_id long, text string")
+    bc = exact_substring_dedup(small, k=10)
+    sh = exact_substring_dedup(unknown, k=10)
+    assert has_broadcast_join(bc) and not has_broadcast_join(sh)
+    a = _rows(bc)
+    assert a == _rows(sh) and len(a) == 30
     # the sliding-window construction plants real duplicated runs
     assert any(r[2] > 0 for r in a)
+
+
+def _regime_case(spark, name):
+    """(input rows, input schema, the operator over that input) for an
+    operator whose broadcast gates on the input."""
+    from real_time_data_anomaly_detection_spark.operators.curation import cdc_apply
+
+    if name == "segment_dedup":
+        rows = [(1, "a b c x y z"), (2, "a b c p q r"), (3, "m n o x y z")]
+        return rows, "doc_id long, text string", lambda d: segment_dedup(
+            d, seg_words=3, min_docs=2
+        )
+    target = spark.createDataFrame(
+        [(k, f"v{k}") for k in range(1, 6)], "k long, v string"
+    )
+    if name == "merge_upsert":
+        rows = [(2, "b2"), (9, "new")]
+        return rows, "k long, v string", lambda u: merge_upsert(target, u, "k")
+    rows = [
+        (1, "a2", "upsert", 1), (1, None, "delete", 2),
+        (2, "b2", "upsert", 1), (9, "new", "upsert", 1),
+    ]
+    return rows, "k long, v string, op string, seq int", lambda c: cdc_apply(
+        target, c, "k"
+    )
+
+
+@pytest.mark.parametrize("name", ["segment_dedup", "merge_upsert", "cdc_apply"])
+def test_broadcast_regime_follows_input_size(spark, tmp_path, name):
+    """Each operator's data-sized join broadcasts for an input with a
+    small known estimate and shuffles for one with an unknown
+    estimate, and both regimes return the same rows."""
+    rows, schema, op = _regime_case(spark, name)
+    small, unknown = _both_regimes(spark, tmp_path, rows, schema)
+    bc, sh = op(small), op(unknown)
+    assert has_broadcast_join(bc) and not has_broadcast_join(sh)
+    got = _rows(bc)
+    assert got and got == _rows(sh)
 
 
 def test_bm25_matches_closed_form(spark):

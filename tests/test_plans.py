@@ -331,6 +331,26 @@ def test_materialize_gate_skips_large_inputs(spark):
     assert "ExistingRDD" in _executed(materialize(df, eager=False))
 
 
+def test_broadcast_if_small_gates_on_the_input(spark):
+    """The broadcast hint follows ``gate_on``'s size estimate: a small
+    known-size input (spark.range(1000), 8 KB) broadcasts the relation;
+    a huge one (spark.range(1 << 40), 8 TiB) and an in-memory one
+    (unknown estimate) leave it unhinted. Both join sides are
+    in-memory, so without the hint Spark cannot pick a broadcast."""
+    from real_time_data_anomaly_detection_spark.plans.inspect import (
+        broadcast_if_small,
+    )
+
+    left = spark.createDataFrame([(i, i) for i in range(20)], "k long, a long")
+    right = spark.createDataFrame([(i, -i) for i in range(20)], "k long, b long")
+    small = broadcast_if_small(right, gate_on=spark.range(1000))
+    assert has_broadcast_join(left.join(small, "k"))
+    for gate in (spark.range(1 << 40), left):
+        unhinted = broadcast_if_small(right, gate_on=gate)
+        assert unhinted is right
+        assert not has_broadcast_join(left.join(unhinted, "k"))
+
+
 def test_sort_past_boundary_checkpoints_under_the_sort(spark):
     """sort_past_boundary's checkpoint is the sort's direct logical
     child, so the range-sampling job reads the checkpoint instead of
@@ -451,52 +471,36 @@ def test_ingest_dedup_corpus_never_shuffles(spark):
     assert plan.count("LessThan(doc_id,400)") == 1
 
 
-def test_ingest_dedup_shuffle_fallback_matches_broadcast(spark):
-    """An unbroadcastable batch must degrade to
-    key-keyed shuffle joins, not silently plan a corpus-side
-    broadcast of a huge relation — and the two regimes must admit
-    IDENTICAL rows. broadcast_keys=False forces the fallback; the
-    plan must then contain no BroadcastHashJoin on the dedup hops."""
+def test_ingest_dedup_shuffle_fallback_matches_broadcast(spark, tmp_path):
+    """The regime follows the batch's size estimate. The same batch
+    rows read back from parquet (known, small) plan every dedup hop as
+    a broadcast-hash join; held in memory (unknown estimate, as a
+    backfill-sized batch would be past the gate) they plan
+    key-keyed shuffle joins instead of broadcasting a relation of
+    unknown size. Both regimes admit IDENTICAL rows."""
     from real_time_data_anomaly_detection_spark.io import load_table
     from real_time_data_anomaly_detection_spark.operators.pipeline_ops import (
         _SYNTH_URL_SQL,
         ingest_dedup,
     )
-    from real_time_data_anomaly_detection_spark.plans.inspect import (
-        formatted_plan,
-    )
 
     d = load_table(spark, "/root/testdata/sf0.001", "documents")
     u = d.select("doc_id", "text", F.expr(_SYNTH_URL_SQL).alias("url"))
     corpus = u.filter(F.col("doc_id") < 400)
-    batch = u.filter(F.col("doc_id") >= 400)
-    bc_rows = sorted(
-        map(tuple, ingest_dedup(corpus, batch, broadcast_keys=True).collect())
-    )
-    # simulate backfill scale: kill the auto-broadcast thresholds so
-    # the un-hinted fallback joins plan as they would on a batch that
-    # genuinely exceeds them
-    saved = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-        )
-    }
-    try:
-        for k in saved:
-            spark.conf.set(k, "-1")
-        sh = ingest_dedup(corpus, batch, broadcast_keys=False)
-        plan = formatted_plan(sh)
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        sh_rows = sorted(map(tuple, sh.collect()))
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    assert bc_rows == sh_rows
+    rows = u.filter(F.col("doc_id") >= 400).collect()
+    assert rows
+    in_memory = spark.createDataFrame(rows, u.schema)
+    in_memory.write.parquet(str(tmp_path / "batch"))
+    from_parquet = spark.read.parquet(str(tmp_path / "batch"))
+
+    bc = ingest_dedup(corpus, from_parquet)
+    sh = ingest_dedup(corpus, in_memory)
+    bc_plan, sh_plan = formatted_plan(bc), formatted_plan(sh)
+    assert bc_plan.count("BroadcastHashJoin") >= 3
+    assert "SortMergeJoin" not in bc_plan and "ShuffledHashJoin" not in bc_plan
+    assert "SortMergeJoin" in sh_plan or "ShuffledHashJoin" in sh_plan
+    bc_rows = sorted(map(tuple, bc.collect()))
+    assert bc_rows and bc_rows == sorted(map(tuple, sh.collect()))
 
 
 def test_image_index_match_pushdown_and_broadcast(spark, tmp_path_factory):

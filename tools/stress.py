@@ -479,15 +479,12 @@ def scaling_main() -> None:
         "neardup_dedup": ("docs", lambda d: neardup_dedup(d, threshold=0.3).select("doc_id")),
         "decontaminate": ("docs", lambda d: decontaminate(d, bench).select("doc_id")),
         # this corpus is DUP-HEAVY (adjacent docs share 20-token runs,
-        # so the duplicated-gram set itself scales with n): run
-        # exact-substring with broadcast_dups=False — the honest scale
-        # mode for this regime; segment windows never align across
-        # docs here, so segment_dedup measures the pipeline floor.
+        # so the duplicated-gram set itself scales with n); the
+        # broadcast gate on the input picks the flag-back regime at
+        # each scale. Segment windows never align across docs here,
+        # so segment_dedup measures the pipeline floor.
         "segment_dedup": ("docs", lambda d: segment_dedup(d)),
-        "exact_substring": (
-            "docs",
-            lambda d: exact_substring_dedup(d, broadcast_dups=False),
-        ),
+        "exact_substring": ("docs", lambda d: exact_substring_dedup(d)),
         "kmeans_fit": ("emb", _kmeans_op),
         "semantic_dup_pairs": ("emb", _sem_op),
         "pq_encode": ("emb", _pq_op),
