@@ -53,7 +53,7 @@ def _is_size_estimate_call(node: ast.AST) -> bool:
 
 
 def _broadcast_params(node: ast.AST) -> list[str]:
-    if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+    if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
         return []
     a = node.args
     return [
@@ -123,8 +123,9 @@ def test_broadcast_gates_go_through_the_policy_module():
 
 def test_policy_module_holds_the_broadcast_gate():
     """As above for the broadcast scan: the policy module's two size
-    estimates, its one gate literal and broadcast_if_small's
-    parameters are all visible to the scan's predicates."""
+    estimates and its one gate literal are visible to the scan's
+    predicates, and so are the parameters of a def that hand-rolls
+    the knob."""
     nodes = list(ast.walk(ast.parse(POLICY_MODULE.read_text())))
     calls = [n for n in nodes if _is_size_estimate_call(n)]
     gates = [n for n in nodes if _is_shift_literal(n, 64, 20)]
