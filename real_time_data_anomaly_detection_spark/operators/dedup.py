@@ -327,22 +327,22 @@ def minhash_neardup_pairs(
     return verify_candidates_arr(cands, arr, id_col, threshold)
 
 
-def simhash_fingerprints(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+def _simhash(
+    df: DataFrame, text_col: str, id_col: str, token_hash, nbits: int
 ) -> DataFrame:
-    """64-bit SimHash per document, entirely with built-in expressions.
-
-    Each distinct token hashes to 64 bits; every bit votes ±1; the
+    """(id, simhash) per document, entirely with built-in expressions:
+    each distinct token hashes with ``token_hash`` (a Column → BIGINT
+    Column function), each of the low ``nbits`` bits votes ±1, and the
     fingerprint's bit is 1 where the vote sum is positive. Explode is
-    tokens×64 rows — linear, shuffle-free until one groupBy."""
+    tokens × nbits rows — linear, shuffle-free until one groupBy."""
     par = df.sparkSession.sparkContext.defaultParallelism
     df = df.repartition(par, id_col)  # parallelize single-file sources
     toks = df.select(
         id_col, F.explode(F.array_distinct(F.split(F.col(text_col), " "))).alias("tok")
-    ).withColumn("h", F.xxhash64("tok"))
+    ).withColumn("h", token_hash(F.col("tok")))
     bits = toks.select(
         id_col,
-        F.explode(F.sequence(F.lit(0), F.lit(63))).alias("bit"),
+        F.explode(F.sequence(F.lit(0), F.lit(nbits - 1))).alias("bit"),
         F.col("h"),
     ).select(
         id_col,
@@ -360,6 +360,14 @@ def simhash_fingerprints(
             )
         ).alias("simhash")
     )
+
+
+def simhash_fingerprints(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """64-bit SimHash per document: _simhash over xxhash64 token
+    hashes."""
+    return _simhash(df, text_col, id_col, F.xxhash64, 64)
 
 
 def simhash_pairs(
@@ -1236,35 +1244,11 @@ def minhash_md5_pairs(d: DataFrame) -> DataFrame:
 def q_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash fingerprints with the cross-engine md5 hasher —
     the oracle-backed correctness witness for the SimHash vote/bit
-    construction (the production 64-bit xxhash64 path is
-    q_simhash_pairs, recall-tested). Same plan: distinct-token
-    explode ×32 bits, one vote groupBy, one fingerprint groupBy."""
+    construction: the production _simhash body behind
+    simhash_fingerprints and q_simhash_pairs, with the token hash
+    swapped for md5 and 32 bits."""
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    toks = (
-        d.repartition(par, "doc_id")
-        .select(
-            "doc_id",
-            F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias("tok"),
-        )
-        .withColumn("h", _md5_hash64(F.col("tok"), 0))
-    )
-    bits = toks.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.lit(31))).alias("bit"),
-        "h",
-    ).select(
-        "doc_id", "bit", F.expr("(shiftright(h, bit) & 1) * 2 - 1").alias("vote")
-    )
-    votes = bits.groupBy("doc_id", "bit").agg(F.sum("vote").alias("v"))
-    return votes.groupBy("doc_id").agg(
-        F.sum(
-            F.expr(
-                "CASE WHEN v > 0 THEN shiftleft(CAST(1 AS BIGINT), bit) "
-                "ELSE CAST(0 AS BIGINT) END"
-            )
-        ).alias("simhash")
-    )
+    return _simhash(d, "text", "doc_id", lambda c: _md5_hash64(c, 0), 32)
 
 
 def _rademacher_planes(n_planes: int = 32, dim: int = 64) -> list[list[int]]:

@@ -1131,39 +1131,40 @@ def _mov_jpeg_frames(payload: bytes) -> list[bytes] | None:
             if stsz is None or stsc is None or stco is None:
                 return None
             u32 = lambda o: int.from_bytes(payload[o:o + 4], "big")  # noqa: E731
-            fixed, n_samples = u32(stsz[0] + 4), u32(stsz[0] + 8)
+            # The 32-bit counts are untrusted and the lists below hold one
+            # entry per counted item, so each count is clamped to what its
+            # box (for a fixed sample size: the payload) can hold.
+            fixed = u32(stsz[0] + 4)
+            n_samples = min(
+                u32(stsz[0] + 8),
+                len(payload) // fixed if fixed else (stsz[1] - stsz[0] - 12) // 4,
+            )
             sizes = (
                 [fixed] * n_samples
                 if fixed
                 else [u32(stsz[0] + 12 + 4 * i) for i in range(n_samples)]
             )
-            n_runs = u32(stsc[0] + 4)
+            n_runs = min(u32(stsc[0] + 4), (stsc[1] - stsc[0] - 8) // 12)
             runs = [
                 (u32(stsc[0] + 8 + 12 * i), u32(stsc[0] + 12 + 12 * i))
                 for i in range(n_runs)
             ]  # (first_chunk 1-based, samples_per_chunk)
-            n_chunks = u32(stco[0] + 4)
+            width = 8 if wide else 4
+            n_chunks = min(u32(stco[0] + 4), (stco[1] - stco[0] - 8) // width)
             offs = [
                 int.from_bytes(
-                    payload[
-                        stco[0] + 8 + (8 if wide else 4) * i:
-                        stco[0] + 8 + (8 if wide else 4) * (i + 1)
-                    ],
+                    payload[stco[0] + 8 + width * i:stco[0] + 8 + width * (i + 1)],
                     "big",
                 )
                 for i in range(n_chunks)
             ]
             frames: list[bytes] = []
             si = 0
+            ri = -1  # the run holding chunk ci: runs ascend by first_chunk
             for ci in range(n_chunks):
-                spc = next(
-                    (
-                        runs[ri][1]
-                        for ri in range(len(runs) - 1, -1, -1)
-                        if runs[ri][0] <= ci + 1
-                    ),
-                    0,
-                )
+                while ri + 1 < n_runs and runs[ri + 1][0] <= ci + 1:
+                    ri += 1
+                spc = runs[ri][1] if ri >= 0 else 0
                 off = offs[ci]
                 for _ in range(spc):
                     if si >= n_samples:
@@ -1187,412 +1188,9 @@ def _mjpeg_frames(payload: bytes) -> list[bytes] | None:
     return frames if frames is not None else _mov_jpeg_frames(payload)
 
 
-def _int64_col(values: list) -> pd.array:
-    """Nullable pandas Int64 column for Arrow handoff. The naive
-    ``pd.DataFrame({"h": [None, big_int, ...]})`` infers FLOAT64 the
-    moment any chunk mixes a null with ints — and float64 silently
-    rounds 64-bit hashes past 2^53, so a torn payload co-batched with
-    good ones CORRUPTED the good rows' hashes by up to ±7 ulps
-    (found when a streamed micro-batch put an undecodable video
-    next to a decodable one, its frame hashes lost their low bits,
-    and the near-dup gate silently admitted a duplicate). Nullable
-    Int64 keeps the integers exact through Arrow; pinned in
-    tests/test_multimodal.py::test_null_cobatched_hashes_stay_exact."""
-    return pd.array(values, dtype="Int64")
-
-
-def video_frame_dhash(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    hash_w: int = 8,
-    hash_h: int = 8,
-) -> DataFrame:
-    """(id, frame_idx, dhash) per Motion-JPEG video frame — REAL
-    pixels through the baseline/progressive JPEG decoder: the
-    per-frame perceptual hash is the video twin of image_dhash, feeding the same banded near-dup /
-    index-admission algebra (scene dedup across a video corpus is the
-    100 TB use case: only 8-byte hashes ever shuffle, pixels die in
-    the Arrow worker). Contract matches image_dhash: undecodable
-    CONTAINERS yield one (id, null, null) row (kept, joins don't
-    silently drop); a decodable container's individually-torn frame
-    yields (id, idx, null)."""
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("frame_idx", T.LongType(), True),
-            T.StructField("dhash", T.LongType(), True),
-        ]
-    )
-
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, hashes = [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                frames = (
-                    None if payload is None else _mjpeg_frames(bytes(payload))
-                )
-                if not frames:
-                    ids.append(mid)
-                    idxs.append(None)
-                    hashes.append(None)
-                    continue
-                for i, fb in enumerate(frames):
-                    h = None
-                    try:
-                        gm = _jpeg_gray_pixels(fb)
-                        if gm is not None:
-                            # milli-luma contract of decode_gray_milli
-                            h = dhash_bits(
-                                gm.astype(np.int64) * 1000, hash_w, hash_h
-                            )
-                    except Exception:
-                        h = None
-                    ids.append(mid)
-                    idxs.append(i)
-                    hashes.append(h)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "frame_idx": _int64_col(idxs),
-                    "dhash": _int64_col(hashes),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(_hash, schema)
-
-
-# Most distinct band keys a batch may push into the index scan.
-PRUNE_KEYS_MAX = 100_000
-
-
-def _bk_prune_inlist(
-    idx: DataFrame, bands: DataFrame, prune_keys_max: int
-) -> DataFrame:
-    """The two-hop-keys index prune, shared by image_index_match /
-    video_index_match. The
-    candidate band keys go into the index scan as ONE parsed SQL
-    ``bk IN (...)`` string instead of ``isin(list)``, whose per-literal
-    py4j expression assembly measured ~1.1 ms/key (13 s of pure
-    DRIVER time at the 12k keys a backfill-sized video batch
-    produces, dwarfing the 1.9 s scan it was pruning). A single
-    string crosses py4j once and Catalyst folds it to an InSet;
-    row-group pruning on the bk-sorted index layout is unchanged.
-    Batches holding more than ``prune_keys_max`` distinct keys skip
-    the filter — at that size the batch touches most of the index's
-    band-key domain and the full scan is the cheaper plan.
-
-    The keys come back as ONE row, capped twice with slice: first per
-    input partition, then after the merge. Any partition holding more
-    than prune_keys_max keys alone pushes the merged set over the cap,
-    so the skip decision is exact, while the final merge task and the
-    driver fetch hold at most P × (prune_keys_max+1) and
-    prune_keys_max+1 keys. One aggregate row instead of
-    distinct().limit().collect() measured 0.44 -> 0.16 s on the sf0.1
-    video batch."""
-    cap = prune_keys_max + 1
-    merged = F.array_distinct(F.flatten(F.collect_list("ks")))
-    row = (
-        bands.groupBy(F.spark_partition_id().alias("_part"))
-        .agg(F.slice(F.collect_set("bk"), 1, cap).alias("ks"))
-        .agg(F.slice(merged, 1, cap).alias("ks"))
-        .head()
-    )
-    keys = [int(x) for x in (row.ks or [])]
-    if len(keys) > prune_keys_max:
-        return idx
-    if not keys:
-        # no decodable frames in the batch: nothing can match (the
-        # isin([])-is-false behavior this replaces, minus a parse error
-        # on the empty IN-list)
-        return idx.filter(F.lit(False))
-    return idx.filter(F.expr(f"bk IN ({','.join(map(str, keys))})"))
-
-
-def video_index_match(
-    index_bands: DataFrame,
-    batch_videos: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    max_hamming: int = 3,
-    hash_w: int = 8,
-    hash_h: int = 8,
-    n_bands: int | None = None,
-) -> DataFrame:
-    """Cross-media near-dup: match every FRAME of a new Motion-JPEG
-    video batch against a persisted IMAGE-hash index
-    (:func:`build_image_index`) — "does this video contain a shot of
-    anything we've already indexed". Returns
-    (idx_id, video_id, frame_idx, hamming ≤ max_hamming).
-
-    Because video_frame_dhash emits the SAME integer dHash the image
-    path does (pinned frame-vs-direct-image bit-equality in
-    tests/test_multimodal.py), frames enter the identical banded
-    algebra: the banding geometry MUST match the index's meta.json.
-    Run :func:`check_image_index_meta` with the caller's geometry,
-    then read ``index_bands`` with
-    ``spark.read.parquet(f"{index_path}/seed")``. Scale shape mirrors
-    image_index_match: frames decode ONCE in the Arrow worker onto a
-    localCheckpoint, only 8-byte hashes + band keys shuffle, the
-    batch side goes through broadcast_if_small so a micro-batch's
-    index relation never moves, and when the batch holds ≤
-    PRUNE_KEYS_MAX distinct band keys they are pushed as a bk IN-list
-    into the index scan — the two-hop-keys trick over
-    build_image_index's bk-sorted layout, so per-trigger cost scales
-    with the BATCH's frames, not the corpus (the image ladder's flat
-    1.27→1.48 s row transfers verbatim)."""
-    nbits = hash_w * hash_h
-    if n_bands is None:
-        n_bands = _default_bands(nbits, max_hamming)
-    decoded = video_frame_dhash(
-        batch_videos, payload_col, id_col, hash_w, hash_h
-    ).filter(F.col("dhash").isNotNull())
-    fps = materialize(decoded, gate_on=batch_videos)  # decode once: probe + join
-    b = _band_fps(fps, id_col, nbits, n_bands, extra_cols=("frame_idx",)).select(
-        F.col(id_col).alias("video_id"),
-        "frame_idx",
-        F.col("dhash").alias("h_new"),
-        "bk",
-    )
-    idx = index_bands.select(
-        F.col(id_col).alias("idx_id"), F.col("dhash").alias("h_idx"), "bk"
-    )
-    if fps is not decoded:
-        # the prune probe reads the CHECKPOINTED hashes, as in
-        # image_index_match: an unmaterialized batch would re-run the
-        # decode for it, and is past PRUNE_KEYS_MAX anyway
-        idx = _bk_prune_inlist(idx, b, PRUNE_KEYS_MAX)
-    right = broadcast_if_small(b, batch_videos)
-    hamming = F.bit_count(F.col("h_idx").bitwiseXOR(F.col("h_new")))
-    return (
-        idx.join(right, "bk")
-        .select("idx_id", "video_id", "frame_idx", hamming.alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-def video_scene_cuts(
-    videos: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    threshold: int = 10,
-    hash_w: int = 8,
-    hash_h: int = 8,
-) -> DataFrame:
-    """Scene-change detection over Motion-JPEG frame hashes: a cut is
-    a frame whose dHash Hamming distance to the PREVIOUS decodable frame exceeds ``threshold`` bits — the
-    classic hash-delta detector, here as one decode pass plus a lag
-    window per video (JVM-side; pixels never leave the Arrow
-    worker). Returns (id, frame_idx, prev_idx, hamming, is_cut) for
-    every frame with a predecessor; frame-sampling pipelines keep
-    one frame per cut segment instead of a fixed stride, which is
-    what makes per-frame near-dup indexes affordable on long
-    videos (cuts, not frames, carry the information)."""
-    fps = video_frame_dhash(videos, payload_col, id_col, hash_w, hash_h)
-    fps = fps.filter(F.col("dhash").isNotNull())
-    w = Window.partitionBy(id_col).orderBy("frame_idx")
-    prev_h = F.lag("dhash").over(w)
-    prev_i = F.lag("frame_idx").over(w)
-    hamming = F.bit_count(F.col("dhash").bitwiseXOR(prev_h))
-    return (
-        fps.select(
-            id_col,
-            "frame_idx",
-            prev_i.alias("prev_idx"),
-            hamming.alias("hamming"),
-            (hamming > threshold).alias("is_cut"),
-        )
-        .filter(F.col("prev_idx").isNotNull())
-    )
-
-
-def video_neardup_pairs(
-    videos: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    max_hamming: int = 3,
-    min_frac: float = 0.5,
-    hash_w: int = 8,
-    hash_h: int = 8,
-    n_bands: int | None = None,
-) -> DataFrame:
-    """Video-vs-video near-dup over frame perceptual hashes: a pair
-    qualifies when at least ``min_frac`` of the SHORTER video's decodable frames have a dHash match (Hamming ≤
-    ``max_hamming``) somewhere in the other — the frame-containment
-    rule, robust to one video being a clip/extension of the other.
-    Returns (vid_a, vid_b, n_a, n_b, matched_a, matched_b) with
-    vid_a < vid_b; matched_x = distinct frames of x with a
-    cross-video match.
-
-    Shape: one decode pass (pixels die in the Arrow worker), banded
-    frame self-join on the packed band key (only 8-byte hashes + ids
-    shuffle; banding lossless by pigeonhole at Hamming < n_bands),
-    then two counts-sized aggregations — per-(pair, frame) dedup and
-    the per-pair roll-up joined against the per-video frame counts.
-    The quadratic hazard is band-bucket saturation, same as
-    image_neardup_pairs; the SCALING §7.2 sizing rule (band width
-    grows with corpus) applies unchanged because the algebra is the
-    identical relation."""
-    nbits = hash_w * hash_h
-    if n_bands is None:
-        n_bands = _default_bands(nbits, max_hamming)
-    fps = video_frame_dhash(
-        videos, payload_col, id_col, hash_w, hash_h
-    ).filter(F.col("dhash").isNotNull())
-    fps = materialize(fps, gate_on=videos)  # decode once: counts + join
-    n_frames = fps.groupBy(id_col).agg(
-        F.countDistinct("frame_idx").alias("n_frames")
-    )
-    banded = _band_fps(fps, id_col, nbits, n_bands, extra_cols=("frame_idx",))
-    a = banded.select(
-        F.col(id_col).alias("vid_a"),
-        F.col("frame_idx").alias("f_a"),
-        F.col("dhash").alias("h_a"),
-        "bk",
-    )
-    b = banded.select(
-        F.col(id_col).alias("vid_b"),
-        F.col("frame_idx").alias("f_b"),
-        F.col("dhash").alias("h_b"),
-        "bk",
-    )
-    hits = (
-        a.join(b, "bk")
-        .filter(F.col("vid_a") < F.col("vid_b"))
-        .filter(
-            F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))) <= max_hamming
-        )
-        .select("vid_a", "vid_b", "f_a", "f_b")
-        .distinct()
-    )
-    per_pair = hits.groupBy("vid_a", "vid_b").agg(
-        F.countDistinct("f_a").alias("matched_a"),
-        F.countDistinct("f_b").alias("matched_b"),
-    )
-    na = n_frames.select(
-        F.col(id_col).alias("vid_a"), F.col("n_frames").alias("n_a")
-    )
-    nb_ = n_frames.select(
-        F.col(id_col).alias("vid_b"), F.col("n_frames").alias("n_b")
-    )
-    return (
-        per_pair.join(F.broadcast(na), "vid_a")
-        .join(F.broadcast(nb_), "vid_b")
-        .filter(
-            F.when(
-                F.col("n_a") <= F.col("n_b"),
-                F.col("matched_a") >= F.ceil(F.col("n_a") * F.lit(min_frac)),
-            ).otherwise(
-                F.col("matched_b") >= F.ceil(F.col("n_b") * F.lit(min_frac))
-            )
-        )
-        .select("vid_a", "vid_b", "n_a", "n_b", "matched_a", "matched_b")
-    )
-
-
-def video_neardup_admit(
-    index_bands: DataFrame,
-    batch_videos: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    max_hamming: int = 3,
-    min_frac: float = 0.5,
-    hash_w: int = 8,
-    hash_h: int = 8,
-    n_bands: int | None = None,
-) -> DataFrame:
-    """Frame-coverage admission for a video batch (the video gate
-    next to the text and image gates): admit exactly the
-    videos for which FEWER than ``min_frac`` of their decodable
-    frames are already covered — a frame is covered when it has a
-    dHash near-dup (Hamming ≤ ``max_hamming``) in the seen-frame
-    index OR in a SMALLER-ID video of the same batch (first-arrival
-    wins). Returns (id, n_frames, covered) for admitted videos;
-    videos with NO decodable frames are admitted with (0, 0) — no
-    evidence of duplication, same policy as the image gate's
-    null-hash admissions.
-
-    The decision is a pure function of (this video's frame hashes,
-    the SEEN frame-hash set): coverage needs no per-video grouping of
-    the index side. Intra-batch coverage composes with it: under id
-    order, "covered by the index" plus "covered by a smaller-id
-    same-batch video" equals "covered by ANY smaller-id video or the
-    seed"."""
-    nbits = hash_w * hash_h
-    if n_bands is None:
-        n_bands = _default_bands(nbits, max_hamming)
-    fps = materialize(
-        video_frame_dhash(batch_videos, payload_col, id_col, hash_w, hash_h),
-        gate_on=batch_videos,
-    )
-    good = fps.filter(F.col("dhash").isNotNull())
-    banded = _band_fps(good, id_col, nbits, n_bands, extra_cols=("frame_idx",))
-    new_side = banded.select(
-        F.col(id_col).alias("_vid"),
-        F.col("frame_idx").alias("_fidx"),
-        F.col("dhash").alias("h_new"),
-        "bk",
-    )
-    # covered-by-index frames
-    hit_idx = (
-        index_bands.select(F.col("dhash").alias("h_idx"), "bk")
-        .join(broadcast_if_small(new_side, batch_videos), "bk")
-        .filter(
-            F.bit_count(F.col("h_idx").bitwiseXOR(F.col("h_new")))
-            <= max_hamming
-        )
-        .select("_vid", "_fidx")
-    )
-    # covered-by-smaller-id-same-batch frames (frames of the SAME
-    # video never cover each other — a static shot is not a dup)
-    older = banded.select(
-        F.col(id_col).alias("_ovid"), F.col("dhash").alias("h_old"), "bk"
-    )
-    hit_intra = (
-        older.join(
-            new_side, "bk"
-        )
-        .filter(F.col("_ovid") < F.col("_vid"))
-        .filter(
-            F.bit_count(F.col("h_old").bitwiseXOR(F.col("h_new")))
-            <= max_hamming
-        )
-        .select("_vid", "_fidx")
-    )
-    covered = (
-        hit_idx.unionByName(hit_intra)
-        .distinct()
-        .groupBy("_vid")
-        .agg(F.count(F.lit(1)).alias("covered"))
-    )
-    n_frames = good.groupBy(id_col).agg(
-        F.countDistinct("frame_idx").alias("n_frames")
-    )
-    # one row per presented video (undecodable containers included via
-    # the fps null rows -> n_frames 0)
-    all_vids = fps.select(id_col).distinct()
-    stats = (
-        all_vids.join(n_frames, id_col, "left")
-        .join(covered.withColumnRenamed("_vid", id_col), id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_frames", F.lit(0)).alias("n_frames"),
-            F.coalesce("covered", F.lit(0)).alias("covered"),
-        )
-    )
-    return stats.filter(
-        F.col("covered") < F.ceil(F.col("n_frames") * F.lit(min_frac))
-    ).unionByName(
-        stats.filter(F.col("n_frames") == 0).select(
-            id_col, F.lit(0).alias("n_frames"), F.lit(0).alias("covered")
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
-# Perceptual image near-dup: integer dHash over the
-# codec-free pixel decodes + the SimHash Hamming-band pair search.
+# Perceptual hashes: integer dHash / aHash over the codec-free pixel
+# decodes — engine-replayable bit functions of a gray milli-luma matrix.
 # ---------------------------------------------------------------------------
 
 
@@ -1732,6 +1330,99 @@ def ahash_bits(gm: np.ndarray, hash_w: int = 8, hash_h: int = 8) -> int:
     return bits - (1 << 64) if bits >= 1 << 63 else bits
 
 
+# ---------------------------------------------------------------------------
+# The fingerprint relation. An image is a one-frame video: every media
+# operator below decodes its payloads through ONE mapInPandas body into
+# (id, frame_idx, hash) rows — an image's frame split is [payload], a
+# Motion-JPEG video's is its container's frame list — and the banded
+# Hamming algebra (pairs, persisted index, match, admission) runs on that
+# relation whichever media it came from. The public image_* / video_*
+# functions are the caller-specific ends: which split, which output
+# names, which admission rule.
+# ---------------------------------------------------------------------------
+
+
+def _int64_col(values: list) -> pd.array:
+    """Nullable pandas Int64 column for Arrow handoff. The naive
+    ``pd.DataFrame({"h": [None, big_int, ...]})`` infers FLOAT64 the
+    moment any chunk mixes a null with ints — and float64 silently
+    rounds 64-bit hashes past 2^53, so a torn payload co-batched with
+    good ones CORRUPTED the good rows' hashes by up to ±7 ulps
+    (found when a streamed micro-batch put an undecodable video
+    next to a decodable one, its frame hashes lost their low bits,
+    and the near-dup gate silently admitted a duplicate). Nullable
+    Int64 keeps the integers exact through Arrow; pinned in
+    tests/test_multimodal.py::test_null_cobatched_hashes_stay_exact."""
+    return pd.array(values, dtype="Int64")
+
+
+def _one_frame(payload: bytes) -> list[bytes]:
+    """An image's frame split: the payload is its only frame."""
+    return [payload]
+
+
+def _fingerprints(
+    df: DataFrame,
+    payload_col: str,
+    id_col: str,
+    split,
+    hash_w: int,
+    hash_h: int,
+    bits=dhash_bits,
+    hash_col: str = "dhash",
+) -> DataFrame:
+    """(id, frame_idx, hash) per frame of each payload, via one
+    Arrow-batched mapInPandas. ``split`` cuts a payload into frame
+    byte-streams (``_one_frame`` for an image, ``_mjpeg_frames`` for a
+    Motion-JPEG video); every frame decodes through decode_gray_milli
+    and hashes with ``bits`` (dhash_bits or ahash_bits) on the
+    hash_w × hash_h grid — so a video frame's hash equals the image
+    hash of the same bytes. Pixels die in the Arrow worker; only
+    8-byte hashes leave it, through _int64_col.
+
+    Contract: a null payload, or one whose split finds no frames (an
+    undecodable container), yields ONE (id, null, null) row — kept, so
+    joins don't silently drop it; an undecodable, torn or
+    smaller-than-grid frame yields (id, frame_idx, null). The guard is
+    per frame, so one corrupt byte stream never fails the job."""
+    schema = T.StructType(
+        [
+            T.StructField(id_col, T.LongType(), False),
+            T.StructField("frame_idx", T.LongType(), True),
+            T.StructField(hash_col, T.LongType(), True),
+        ]
+    )
+
+    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids, idxs, hashes = [], [], []
+            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
+                frames = None if payload is None else split(bytes(payload))
+                if not frames:
+                    ids.append(mid)
+                    idxs.append(None)
+                    hashes.append(None)
+                    continue
+                for i, fb in enumerate(frames):
+                    try:
+                        gm = decode_gray_milli(fb)
+                        h = None if gm is None else bits(gm, hash_w, hash_h)
+                    except Exception:
+                        h = None
+                    ids.append(mid)
+                    idxs.append(i)
+                    hashes.append(h)
+            yield pd.DataFrame(
+                {
+                    id_col: ids,
+                    "frame_idx": _int64_col(idxs),
+                    hash_col: _int64_col(hashes),
+                }
+            )
+
+    return df.select(id_col, payload_col).mapInPandas(_hash, schema)
+
+
 def image_dhash(
     df: DataFrame,
     payload_col: str = "payload",
@@ -1739,38 +1430,12 @@ def image_dhash(
     hash_w: int = 8,
     hash_h: int = 8,
 ) -> DataFrame:
-    """(id, dhash BIGINT) per image via Arrow-batched mapInPandas over
-    the codec-free pixel decode; undecodable, torn, or
-    smaller-than-grid payloads yield null (the multimodal contract:
-    rows kept, joins don't silently drop — the per-payload guard
-    is per payload, so one corrupt byte stream never fails the whole
-    job)."""
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("dhash", T.LongType(), True),
-        ]
-    )
-
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for payload in pdf[payload_col]:
-                if payload is None:
-                    out.append(None)
-                    continue
-                try:  # torn bytes (valid magic, broken body) → null
-                    gm = decode_gray_milli(bytes(payload))
-                    out.append(
-                        None if gm is None else dhash_bits(gm, hash_w, hash_h)
-                    )
-                except Exception:
-                    out.append(None)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "dhash": _int64_col(out)}
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(_hash, schema)
+    """(id, dhash BIGINT) per image — the one-frame case of
+    _fingerprints; an undecodable, torn or smaller-than-grid payload
+    yields a null dhash."""
+    return _fingerprints(
+        df, payload_col, id_col, _one_frame, hash_w, hash_h
+    ).drop("frame_idx")
 
 
 def image_ahash(
@@ -1781,34 +1446,24 @@ def image_ahash(
     hash_h: int = 8,
 ) -> DataFrame:
     """(id, ahash BIGINT) per image — average-hash sibling of
-    image_dhash, same Arrow-batched mapInPandas decode and the same
-    torn-payload → null guard."""
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("ahash", T.LongType(), True),
-        ]
-    )
+    image_dhash, same decode and null contract."""
+    return _fingerprints(
+        df, payload_col, id_col, _one_frame, hash_w, hash_h, ahash_bits, "ahash"
+    ).drop("frame_idx")
 
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for payload in pdf[payload_col]:
-                if payload is None:
-                    out.append(None)
-                    continue
-                try:
-                    gm = decode_gray_milli(bytes(payload))
-                    out.append(
-                        None if gm is None else ahash_bits(gm, hash_w, hash_h)
-                    )
-                except Exception:
-                    out.append(None)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "ahash": _int64_col(out)}
-            )
 
-    return df.select(id_col, payload_col).mapInPandas(_hash, schema)
+def video_frame_dhash(
+    df: DataFrame,
+    payload_col: str = "payload",
+    id_col: str = "media_id",
+    hash_w: int = 8,
+    hash_h: int = 8,
+) -> DataFrame:
+    """(id, frame_idx, dhash) per Motion-JPEG video frame (AVI or
+    MOV container) — _fingerprints over the container's frame split.
+    An undecodable container yields one (id, null, null) row; a
+    decodable container's torn frame yields (id, frame_idx, null)."""
+    return _fingerprints(df, payload_col, id_col, _mjpeg_frames, hash_w, hash_h)
 
 
 def _band_fps(
@@ -1879,6 +1534,52 @@ def _default_bands(nbits: int, max_hamming: int) -> int:
     )
 
 
+def _geometry(
+    hash_w: int, hash_h: int, n_bands: int | None, max_hamming: int
+) -> tuple[int, int]:
+    """(hash bits, band count): ``n_bands=None`` resolves to
+    _default_bands, the lossless banding for ``max_hamming``."""
+    nbits = hash_w * hash_h
+    if n_bands is None:
+        n_bands = _default_bands(nbits, max_hamming)
+    return nbits, n_bands
+
+
+def _hamming(a: str, b: str):
+    return F.bit_count(F.col(a).bitwiseXOR(F.col(b)))
+
+
+def _near_pairs(
+    fps: DataFrame, id_col: str, nbits: int, n_bands: int, max_hamming: int
+) -> DataFrame:
+    """The banded self-join over decodable fingerprint rows
+    (id, frame_idx, dhash): (_a, _fa, _b, _fb, hamming) for every pair
+    of frames of items _a < _b within ``max_hamming`` bits. Candidates
+    are band-bucket pairs (pigeonhole: distance < n_bands guarantees
+    one identical chunk), verified with bit_count(xor) — never
+    all-pairs, and only 8-byte hashes and band keys shuffle. Frames of
+    one item never pair. Not deduplicated: a pair sharing several
+    bands repeats. The quadratic hazard is band-bucket saturation;
+    SCALING §7.2's sizing rule (band width grows with the corpus)
+    applies."""
+    banded = _band_fps(fps, id_col, nbits, n_bands, extra_cols=("frame_idx",))
+
+    def side(s: str) -> DataFrame:
+        return banded.select(
+            F.col(id_col).alias(f"_{s}"),
+            F.col("frame_idx").alias(f"_f{s}"),
+            F.col("dhash").alias(f"_h{s}"),
+            "bk",
+        )
+
+    return (
+        side("a").join(side("b"), "bk")
+        .filter(F.col("_a") < F.col("_b"))
+        .select("_a", "_fa", "_b", "_fb", _hamming("_ha", "_hb").alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
 def image_neardup_pairs(
     df: DataFrame,
     payload_col: str = "payload",
@@ -1888,13 +1589,10 @@ def image_neardup_pairs(
     hash_h: int = 8,
     n_bands: int | None = None,
 ) -> DataFrame:
-    """Image pairs whose dHash Hamming distance ≤ ``max_hamming`` —
-    the perceptual twin of dedup.simhash_pairs, reusing its banded
-    self-join: the hash splits into ``n_bands`` equal chunks
-    (pigeonhole: distance < n_bands guarantees one identical chunk),
-    candidates sharing a band verify with bit_count(xor). Scale shape
-    is simhash_pairs': band-bucket join, never all-pairs; payloads
-    decode ONCE into 8-byte hashes and only hashes shuffle.
+    """Image pairs (img_a < img_b, hamming) whose dHash Hamming
+    distance ≤ ``max_hamming`` — the perceptual twin of
+    dedup.simhash_pairs: _near_pairs over the images' one-frame
+    fingerprints, decoded once.
 
     ``n_bands=None`` picks the smallest divisor of
     the hash width STRICTLY GREATER than ``max_hamming``, so the
@@ -1902,9 +1600,7 @@ def image_neardup_pairs(
     losslessly (the old fixed default of 4 silently missed pairs at
     distance 4-6). An explicit ``n_bands <= max_hamming`` is allowed
     for recall-oriented wide searches but warns that banding is lossy."""
-    nbits = hash_w * hash_h
-    if n_bands is None:
-        n_bands = _default_bands(nbits, max_hamming)
+    nbits, n_bands = _geometry(hash_w, hash_h, n_bands, max_hamming)
     if nbits % n_bands:
         raise ValueError("n_bands must divide hash_w*hash_h")
     if max_hamming >= n_bands:
@@ -1916,34 +1612,123 @@ def image_neardup_pairs(
             f">= {n_bands} may be missed",
             stacklevel=2,
         )
-    fps = image_dhash(df, payload_col, id_col, hash_w, hash_h).filter(
-        F.col("dhash").isNotNull()
-    )
+    fps = _fingerprints(df, payload_col, id_col, _one_frame, hash_w, hash_h)
     # Both self-join sides consume fps — unmaterialized, the Python
     # DECODE subplan evaluates twice. The checkpointed relation is
-    # (id, hash), 16 B/row, never payloads.
-    fps = materialize(fps, gate_on=df)
-    banded = _band_fps(fps, id_col, nbits, n_bands)
-    a = banded.select(
-        F.col(id_col).alias("img_a"), F.col("dhash").alias("h_a"), "bk"
-    )
-    b = banded.select(
-        F.col(id_col).alias("img_b"), F.col("dhash").alias("h_b"), "bk"
-    )
-    hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
+    # (id, frame_idx, hash), 24 B/row, never payloads.
+    fps = materialize(fps.filter(F.col("dhash").isNotNull()), gate_on=df)
     return (
-        a.join(b, "bk")
-        .filter(F.col("img_a") < F.col("img_b"))
-        .select("img_a", "img_b", hamming.alias("hamming"))
+        _near_pairs(fps, id_col, nbits, n_bands, max_hamming)
+        .select(F.col("_a").alias("img_a"), F.col("_b").alias("img_b"), "hamming")
         .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
+def video_neardup_pairs(
+    videos: DataFrame,
+    payload_col: str = "payload",
+    id_col: str = "media_id",
+    max_hamming: int = 3,
+    min_frac: float = 0.5,
+    hash_w: int = 8,
+    hash_h: int = 8,
+    n_bands: int | None = None,
+) -> DataFrame:
+    """Video-vs-video near-dup over frame perceptual hashes: a pair
+    qualifies when at least ``min_frac`` of the SHORTER video's decodable frames have a dHash match (Hamming ≤
+    ``max_hamming``) somewhere in the other — the frame-containment
+    rule, robust to one video being a clip/extension of the other.
+    Returns (vid_a, vid_b, n_a, n_b, matched_a, matched_b) with
+    vid_a < vid_b; matched_x = distinct frames of x with a
+    cross-video match.
+
+    Shape: one decode pass, _near_pairs over the frames, then two
+    counts-sized aggregations — per-(pair, frame) dedup and the
+    per-pair roll-up joined against the per-video frame counts."""
+    nbits, n_bands = _geometry(hash_w, hash_h, n_bands, max_hamming)
+    fps = video_frame_dhash(
+        videos, payload_col, id_col, hash_w, hash_h
+    ).filter(F.col("dhash").isNotNull())
+    fps = materialize(fps, gate_on=videos)  # decode once: counts + join
+    n_frames = fps.groupBy(id_col).agg(
+        F.countDistinct("frame_idx").alias("n_frames")
+    )
+    hits = (
+        _near_pairs(fps, id_col, nbits, n_bands, max_hamming)
+        .select(
+            F.col("_a").alias("vid_a"),
+            F.col("_b").alias("vid_b"),
+            F.col("_fa").alias("f_a"),
+            F.col("_fb").alias("f_b"),
+        )
+        .distinct()
+    )
+    per_pair = hits.groupBy("vid_a", "vid_b").agg(
+        F.countDistinct("f_a").alias("matched_a"),
+        F.countDistinct("f_b").alias("matched_b"),
+    )
+    na = n_frames.select(
+        F.col(id_col).alias("vid_a"), F.col("n_frames").alias("n_a")
+    )
+    nb_ = n_frames.select(
+        F.col(id_col).alias("vid_b"), F.col("n_frames").alias("n_b")
+    )
+    return (
+        per_pair.join(F.broadcast(na), "vid_a")
+        .join(F.broadcast(nb_), "vid_b")
+        .filter(
+            F.when(
+                F.col("n_a") <= F.col("n_b"),
+                F.col("matched_a") >= F.ceil(F.col("n_a") * F.lit(min_frac)),
+            ).otherwise(
+                F.col("matched_b") >= F.ceil(F.col("n_b") * F.lit(min_frac))
+            )
+        )
+        .select("vid_a", "vid_b", "n_a", "n_b", "matched_a", "matched_b")
+    )
+
+
+def video_scene_cuts(
+    videos: DataFrame,
+    payload_col: str = "payload",
+    id_col: str = "media_id",
+    threshold: int = 10,
+    hash_w: int = 8,
+    hash_h: int = 8,
+) -> DataFrame:
+    """Scene-change detection over Motion-JPEG frame hashes: a cut is
+    a frame whose dHash Hamming distance to the PREVIOUS decodable frame exceeds ``threshold`` bits — the
+    classic hash-delta detector, here as one decode pass plus a lag
+    window per video (JVM-side; pixels never leave the Arrow
+    worker). Returns (id, frame_idx, prev_idx, hamming, is_cut) for
+    every frame with a predecessor; frame-sampling pipelines keep
+    one frame per cut segment instead of a fixed stride, which is
+    what makes per-frame near-dup indexes affordable on long
+    videos (cuts, not frames, carry the information)."""
+    fps = video_frame_dhash(videos, payload_col, id_col, hash_w, hash_h)
+    fps = fps.filter(F.col("dhash").isNotNull())
+    w = Window.partitionBy(id_col).orderBy("frame_idx")
+    prev_h = F.lag("dhash").over(w)
+    prev_i = F.lag("frame_idx").over(w)
+    hamming = F.bit_count(F.col("dhash").bitwiseXOR(prev_h))
+    return (
+        fps.select(
+            id_col,
+            "frame_idx",
+            prev_i.alias("prev_idx"),
+            hamming.alias("hamming"),
+            (hamming > threshold).alias("is_cut"),
+        )
+        .filter(F.col("prev_idx").isNotNull())
     )
 
 
 # ---------------------------------------------------------------------------
-# Persisted image-hash index: the multimodal analog of the text MinHash
-# persisted/incremental index family — build once, match new image batches
-# incrementally, and admit a crawl batch against everything ever seen.
+# Persisted fingerprint index: build once, match new batches incrementally,
+# and admit a crawl batch against everything ever seen — the multimodal
+# analog of the text MinHash persisted/incremental index family. One
+# writer, one match body and one covered-frames relation serve images and
+# videos alike.
 # ---------------------------------------------------------------------------
 
 
@@ -1961,13 +1746,50 @@ def image_band_rows(
     payloads contribute no rows (they can never match anything).
     ``n_bands=None`` resolves like image_neardup_pairs (smallest
     divisor of the hash width above ``max_hamming`` — lossless)."""
-    nbits = hash_w * hash_h
-    if n_bands is None:
-        n_bands = _default_bands(nbits, max_hamming)
+    nbits, n_bands = _geometry(hash_w, hash_h, n_bands, max_hamming)
     fps = image_dhash(df, payload_col, id_col, hash_w, hash_h).filter(
         F.col("dhash").isNotNull()
     )
     return _band_fps(fps, id_col, nbits, n_bands)
+
+
+def _write_index(
+    rows: DataFrame,
+    index_path: str,
+    hash_w: int,
+    hash_h: int,
+    n_bands: int,
+    num_files: int,
+) -> None:
+    """Persist banded fingerprint rows as an index: ``index_path``/seed
+    is range-partitioned and sorted by ``bk``, so an incremental
+    match's bk IN-list prunes parquet row groups instead of scanning
+    every indexed hash; readers load
+    ``spark.read.parquet(f"{index_path}/seed")``. The index holds
+    hashes and band keys only, never pixels, and a rebuild is one
+    map-only decode pass.
+
+    The banding geometry (hash_w, hash_h, n_bands) goes to
+    ``index_path``/meta.json: the packed ``bk`` keys are only
+    comparable under the SAME geometry, so a reader matching with
+    different parameters would silently join almost nothing —
+    ``check_image_index_meta`` turns that mismatch into a loud
+    ValueError."""
+    import json as _json
+
+    from real_time_data_anomaly_detection_spark import fs as _fs
+
+    rows.repartitionByRange(num_files, "bk").sortWithinPartitions(
+        "bk"
+    ).write.mode("overwrite").parquet(f"{index_path}/seed")
+    # meta.json is written AFTER the seed's _SUCCESS commit (readers
+    # gate on the marker, so a torn meta write is never authoritative);
+    # the Hadoop FS shim makes the index portable to hdfs://s3a://
+    _fs.write_text(
+        f"{index_path}/meta.json",
+        _json.dumps({"hash_w": hash_w, "hash_h": hash_h, "n_bands": n_bands}),
+        rows.sparkSession,
+    )
 
 
 def build_image_index(
@@ -1981,47 +1803,12 @@ def build_image_index(
     max_hamming: int = 3,
     num_files: int = 8,
 ) -> None:
-    """Seed the persisted image-hash index: ONE decode pass over the
-    corpus writes the banded fingerprint relation to
-    ``index_path``/seed, range-partitioned and sorted by ``bk`` so an
-    incremental match's bk IN-list prunes parquet row groups instead
-    of scanning every indexed hash. Readers load
-    ``spark.read.parquet(f"{index_path}/seed")``.
-
-    Scale shape: the index holds ~(8 + 8 + 2·4 + 8) bytes × n_bands
-    per image — hashes and band keys only, never pixels; rebuilds are
-    one map-only decode pass.
-
-    The banding geometry (hash_w, hash_h, n_bands) is persisted to
-    ``index_path``/meta.json: the packed ``bk`` keys are only
-    comparable under the SAME geometry, so a reader matching with
-    different parameters would silently join almost nothing —
-    ``check_image_index_meta`` turns that mismatch into a loud
-    ValueError."""
-    import json as _json
-
-    nbits = hash_w * hash_h
-    resolved = n_bands if n_bands is not None else _default_bands(
-        nbits, max_hamming
-    )
-    rows = image_band_rows(
-        images, payload_col, id_col, hash_w, hash_h, resolved, max_hamming
-    )
-    rows.repartitionByRange(num_files, "bk").sortWithinPartitions(
-        "bk"
-    ).write.mode("overwrite").parquet(f"{index_path}/seed")
-    from real_time_data_anomaly_detection_spark import fs as _fs
-
-    # meta.json is written AFTER the seed's _SUCCESS commit (readers
-    # gate on the marker, so a torn meta write is never authoritative);
-    # the Hadoop FS shim makes the index portable to hdfs://s3a://
-    _fs.write_text(
-        f"{index_path}/meta.json",
-        _json.dumps(
-            {"hash_w": hash_w, "hash_h": hash_h, "n_bands": resolved}
-        ),
-        images.sparkSession,
-    )
+    """Seed a persisted image-hash index: image_band_rows — (id,
+    dhash, band, key, bk) per decodable image — through _write_index
+    (bk-sorted ``index_path``/seed plus the meta.json geometry)."""
+    _, n_bands = _geometry(hash_w, hash_h, n_bands, max_hamming)
+    rows = image_band_rows(images, payload_col, id_col, hash_w, hash_h, n_bands)
+    _write_index(rows, index_path, hash_w, hash_h, n_bands, num_files)
 
 
 def build_video_index(
@@ -2035,36 +1822,15 @@ def build_video_index(
     max_hamming: int = 3,
     num_files: int = 8,
 ) -> None:
-    """Seed the persisted SEEN-FRAME index for the video gate: one
-    decode pass over the video corpus writes the banded per-frame
-    fingerprint relation — (id, frame_idx, dhash, band, key, bk),
-    bk-sorted for row-group pruning — to ``index_path``/seed, plus
-    the same meta.json geometry marker the image index carries
-    (checked by check_image_index_meta; the bk domain is only
-    comparable under one geometry). Readers load
-    ``spark.read.parquet(f"{index_path}/seed")``. Pixels never enter
-    the index: ~40 bytes × n_bands per FRAME."""
-    import json as _json
-
-    nbits = hash_w * hash_h
-    resolved = n_bands if n_bands is not None else _default_bands(
-        nbits, max_hamming
-    )
+    """Seed the persisted SEEN-FRAME index for the video gate: the
+    banded per-frame rows (id, frame_idx, dhash, band, key, bk) of
+    every decodable frame through _write_index (bk-sorted
+    ``index_path``/seed plus the meta.json geometry)."""
+    nbits, n_bands = _geometry(hash_w, hash_h, n_bands, max_hamming)
     fps = video_frame_dhash(videos, payload_col, id_col, hash_w, hash_h)
     fps = fps.filter(F.col("dhash").isNotNull())
-    rows = _band_fps(fps, id_col, nbits, resolved, extra_cols=("frame_idx",))
-    rows.repartitionByRange(num_files, "bk").sortWithinPartitions(
-        "bk"
-    ).write.mode("overwrite").parquet(f"{index_path}/seed")
-    from real_time_data_anomaly_detection_spark import fs as _fs
-
-    _fs.write_text(
-        f"{index_path}/meta.json",
-        _json.dumps(
-            {"hash_w": hash_w, "hash_h": hash_h, "n_bands": resolved}
-        ),
-        fps.sparkSession,
-    )
+    rows = _band_fps(fps, id_col, nbits, n_bands, extra_cols=("frame_idx",))
+    _write_index(rows, index_path, hash_w, hash_h, n_bands, num_files)
 
 
 def check_image_index_meta(
@@ -2095,6 +1861,104 @@ def check_image_index_meta(
         )
 
 
+# Most distinct band keys a batch may push into the index scan.
+PRUNE_KEYS_MAX = 100_000
+
+
+def _bk_prune_inlist(
+    idx: DataFrame, bands: DataFrame, prune_keys_max: int
+) -> DataFrame:
+    """The two-hop-keys index prune of _index_match. The
+    candidate band keys go into the index scan as ONE parsed SQL
+    ``bk IN (...)`` string instead of ``isin(list)``, whose per-literal
+    py4j expression assembly measured ~1.1 ms/key (13 s of pure
+    DRIVER time at the 12k keys a backfill-sized video batch
+    produces, dwarfing the 1.9 s scan it was pruning). A single
+    string crosses py4j once and Catalyst folds it to an InSet;
+    row-group pruning on the bk-sorted index layout is unchanged.
+    Batches holding more than ``prune_keys_max`` distinct keys skip
+    the filter — at that size the batch touches most of the index's
+    band-key domain and the full scan is the cheaper plan.
+
+    The keys come back as ONE row, capped twice with slice: first per
+    input partition, then after the merge. Any partition holding more
+    than prune_keys_max keys alone pushes the merged set over the cap,
+    so the skip decision is exact, while the final merge task and the
+    driver fetch hold at most P × (prune_keys_max+1) and
+    prune_keys_max+1 keys. One aggregate row instead of
+    distinct().limit().collect() measured 0.44 -> 0.16 s on the sf0.1
+    video batch."""
+    cap = prune_keys_max + 1
+    merged = F.array_distinct(F.flatten(F.collect_list("ks")))
+    row = (
+        bands.groupBy(F.spark_partition_id().alias("_part"))
+        .agg(F.slice(F.collect_set("bk"), 1, cap).alias("ks"))
+        .agg(F.slice(merged, 1, cap).alias("ks"))
+        .head()
+    )
+    keys = [int(x) for x in (row.ks or [])]
+    if len(keys) > prune_keys_max:
+        return idx
+    if not keys:
+        # no decodable frames in the batch: nothing can match (the
+        # isin([])-is-false behavior this replaces, minus a parse error
+        # on the empty IN-list)
+        return idx.filter(F.lit(False))
+    return idx.filter(F.expr(f"bk IN ({','.join(map(str, keys))})"))
+
+
+def _index_match(
+    index_bands: DataFrame,
+    batch: DataFrame,
+    split,
+    payload_col: str,
+    id_col: str,
+    max_hamming: int,
+    hash_w: int,
+    hash_h: int,
+    n_bands: int | None,
+) -> DataFrame:
+    """(idx_id, id, frame_idx, hamming ≤ max_hamming) for every
+    decodable frame of a new batch (frames cut by ``split``) against a
+    persisted index (build_image_index or build_video_index).
+
+    The batch decodes ONCE onto a size-gated localCheckpoint of the
+    hash relation; its band rows go through broadcast_if_small, so a
+    micro-batch's index relation never moves; and when the batch
+    holds ≤ PRUNE_KEYS_MAX distinct band keys they are pushed as a bk
+    IN-list into the index scan — the two-hop-keys trick: the index
+    is bk-sorted, so parquet row-group stats skip everything the
+    batch can't touch and per-trigger cost scales with the BATCH, not
+    the corpus. The prune probe reads the CHECKPOINTED hashes; an
+    unmaterialized (backfill-sized) batch skips it, because the probe
+    would re-run the decode and a batch that big is past
+    PRUNE_KEYS_MAX anyway.
+
+    Callers run :func:`check_image_index_meta` with their geometry,
+    then read ``index_bands`` with
+    ``spark.read.parquet(f"{index_path}/seed")`` — a mismatched index
+    silently matches (almost) nothing."""
+    nbits, n_bands = _geometry(hash_w, hash_h, n_bands, max_hamming)
+    decoded = _fingerprints(
+        batch, payload_col, id_col, split, hash_w, hash_h
+    ).filter(F.col("dhash").isNotNull())
+    fps = materialize(decoded, gate_on=batch)
+    b = _band_fps(fps, id_col, nbits, n_bands, extra_cols=("frame_idx",)).select(
+        id_col, "frame_idx", F.col("dhash").alias("h_new"), "bk"
+    )
+    idx = index_bands.select(
+        F.col(id_col).alias("idx_id"), F.col("dhash").alias("h_idx"), "bk"
+    )
+    if fps is not decoded:
+        idx = _bk_prune_inlist(idx, b, PRUNE_KEYS_MAX)
+    return (
+        idx.join(broadcast_if_small(b, batch), "bk")
+        .select("idx_id", id_col, "frame_idx", _hamming("h_idx", "h_new").alias("hamming"))
+        .distinct()
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
 def image_index_match(
     index_bands: DataFrame,
     batch_images: DataFrame,
@@ -2106,46 +1970,74 @@ def image_index_match(
     n_bands: int | None = None,
 ) -> DataFrame:
     """Match a NEW image batch against a persisted index: pairs
-    (idx_id, new_id, hamming ≤ max_hamming). The batch decodes once
-    (size-gated localCheckpoint on the 16 B/row hash relation), its
-    band rows go through broadcast_if_small to the index side, and
-    when the batch holds ≤ PRUNE_KEYS_MAX distinct band keys they are
-    pushed as a bk IN-list into the index scan — the
-    two-hop-keys trick: because build_image_index sorted by bk,
-    parquet row-group stats skip everything the batch can't touch, so
-    per-trigger cost scales with the BATCH, not the corpus.
+    (idx_id, new_id, hamming ≤ max_hamming) — _index_match over the
+    images' one-frame fingerprints."""
+    return _index_match(
+        index_bands, batch_images, _one_frame, payload_col, id_col,
+        max_hamming, hash_w, hash_h, n_bands,
+    ).select("idx_id", F.col(id_col).alias("new_id"), "hamming")
 
-    Run :func:`check_image_index_meta` with the caller's geometry,
-    then read ``index_bands`` with
-    ``spark.read.parquet(f"{index_path}/seed")`` — a mismatched index
-    silently matches (almost) nothing here."""
-    nbits = hash_w * hash_h
-    if n_bands is None:
-        n_bands = _default_bands(nbits, max_hamming)
-    decoded = image_dhash(batch_images, payload_col, id_col, hash_w, hash_h).filter(
-        F.col("dhash").isNotNull()
+
+def video_index_match(
+    index_bands: DataFrame,
+    batch_videos: DataFrame,
+    payload_col: str = "payload",
+    id_col: str = "media_id",
+    max_hamming: int = 3,
+    hash_w: int = 8,
+    hash_h: int = 8,
+    n_bands: int | None = None,
+) -> DataFrame:
+    """Match every FRAME of a new Motion-JPEG video batch against a
+    persisted index — an image index answers "does this video contain
+    a shot of anything we've already indexed". Returns (idx_id,
+    video_id, frame_idx, hamming ≤ max_hamming) via _index_match."""
+    return _index_match(
+        index_bands, batch_videos, _mjpeg_frames, payload_col, id_col,
+        max_hamming, hash_w, hash_h, n_bands,
+    ).select(
+        "idx_id", F.col(id_col).alias("video_id"), "frame_idx", "hamming"
     )
-    fps = materialize(decoded, gate_on=batch_images)
-    b = _band_fps(fps, id_col, nbits, n_bands).select(
-        F.col(id_col).alias("new_id"), F.col("dhash").alias("h_new"), "bk"
+
+
+def _covered_frames(
+    index_bands: DataFrame,
+    fps: DataFrame,
+    gate_on: DataFrame,
+    id_col: str,
+    nbits: int,
+    n_bands: int,
+    max_hamming: int,
+) -> DataFrame:
+    """Distinct (id, frame_idx) of the batch frames already COVERED,
+    the relation both admission gates decide on. ``fps`` is the
+    batch's materialized fingerprint relation. A frame is covered
+    when its dHash is within ``max_hamming`` of a hash in the seen
+    index OR of a frame of a SMALLER-ID item of the same batch
+    (first arrival wins; frames of one item never cover each other —
+    a static shot is not a dup). Undecodable rows cover nothing and
+    are never covered.
+
+    Hamming similarity is NOT transitive, so the rule is deliberate:
+    an index that remembers EVERY item ever presented — admitted or
+    rejected — makes "covered by an earlier batch" and "covered by a
+    smaller-id item of this batch" compose to exactly "covered by ANY
+    smaller-id item or the seed" under id-ordered arrival. Coverage
+    needs no per-item grouping of the index side."""
+    good = fps.filter(F.col("dhash").isNotNull())
+    new_side = _band_fps(
+        good, id_col, nbits, n_bands, extra_cols=("frame_idx",)
+    ).select(id_col, "frame_idx", F.col("dhash").alias("h_new"), "bk")
+    hit_idx = (
+        index_bands.select(F.col("dhash").alias("h_idx"), "bk")
+        .join(broadcast_if_small(new_side, gate_on), "bk")
+        .filter(_hamming("h_idx", "h_new") <= max_hamming)
+        .select(id_col, "frame_idx")
     )
-    idx = index_bands.select(
-        F.col(id_col).alias("idx_id"), F.col("dhash").alias("h_idx"), "bk"
+    hit_intra = _near_pairs(good, id_col, nbits, n_bands, max_hamming).select(
+        F.col("_b").alias(id_col), F.col("_fb").alias("frame_idx")
     )
-    if fps is not decoded:
-        # two-hop prune probe reads the CHECKPOINTED hashes — never a
-        # second decode; for un-checkpointed backfill batches the probe
-        # would itself re-run the decode, and a batch that big would
-        # blow past PRUNE_KEYS_MAX anyway, so skip it entirely.
-        idx = _bk_prune_inlist(idx, b, PRUNE_KEYS_MAX)
-    right = broadcast_if_small(b, batch_images)
-    hamming = F.bit_count(F.col("h_idx").bitwiseXOR(F.col("h_new")))
-    return (
-        idx.join(right, "bk")
-        .select("idx_id", "new_id", hamming.alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    return hit_idx.unionByName(hit_intra).distinct()
 
 
 def image_neardup_admit(
@@ -2159,69 +2051,80 @@ def image_neardup_admit(
     n_bands: int | None = None,
 ) -> DataFrame:
     """Admission decision for a new image batch against everything
-    SEEN so far: admit exactly the images with (1) no indexed
-    near-dup within ``max_hamming`` and (2) no SMALLER-ID batch
-    neighbor — first-arrival wins intra-batch. Returns (id, dhash)
-    (dhash null for undecodable payloads, which are admitted: no
-    evidence of duplication, and the crawl keeps the bytes for a
-    later decoder).
-
-    Hamming similarity is NOT transitive, so the rule is deliberate:
-    an index that remembers EVERY image ever presented — admitted or
-    rejected — makes "matches an earlier batch's image" and "matches
-    a smaller-id same-batch image" compose to exactly "matches ANY
-    smaller-id image or the seed" under id-ordered arrival.
+    SEEN so far: admit exactly the images whose one frame is not
+    covered (_covered_frames) — no indexed near-dup within
+    ``max_hamming`` and no SMALLER-ID batch neighbor. Returns (id,
+    dhash); dhash is null for undecodable payloads, which are
+    admitted: no evidence of duplication, and the crawl keeps the
+    bytes for a later decoder.
 
     Run :func:`check_image_index_meta` with the caller's geometry,
     then read ``index_bands`` with
     ``spark.read.parquet(f"{index_path}/seed")`` — a mismatched index
     silently admits near-everything."""
-    nbits = hash_w * hash_h
-    if n_bands is None:
-        n_bands = _default_bands(nbits, max_hamming)
-    all_fps = materialize(
-        image_dhash(batch_images, payload_col, id_col, hash_w, hash_h),
+    nbits, n_bands = _geometry(hash_w, hash_h, n_bands, max_hamming)
+    fps = materialize(
+        _fingerprints(batch_images, payload_col, id_col, _one_frame, hash_w, hash_h),
         gate_on=batch_images,
     )
-    fps = all_fps.filter(F.col("dhash").isNotNull())
-    banded = _band_fps(fps, id_col, nbits, n_bands)
-    idx = index_bands.select(
-        F.col("dhash").alias("h_idx"), "bk"
+    covered = _covered_frames(
+        index_bands, fps, batch_images, id_col, nbits, n_bands, max_hamming
     )
-    hit_idx = (
-        idx.join(
-            broadcast_if_small(
-                banded.select(
-                    F.col(id_col).alias("_nid"), F.col("dhash").alias("h_new"), "bk"
-                ),
-                batch_images,
-            ),
-            "bk",
+    return fps.drop("frame_idx").join(covered.select(id_col), id_col, "left_anti")
+
+
+def video_neardup_admit(
+    index_bands: DataFrame,
+    batch_videos: DataFrame,
+    payload_col: str = "payload",
+    id_col: str = "media_id",
+    max_hamming: int = 3,
+    min_frac: float = 0.5,
+    hash_w: int = 8,
+    hash_h: int = 8,
+    n_bands: int | None = None,
+) -> DataFrame:
+    """Frame-coverage admission for a video batch: admit exactly the
+    videos for which FEWER than ``min_frac`` of their decodable frames
+    are covered (_covered_frames: a near-dup in the seen-frame index
+    or in a smaller-id video of the batch), i.e. covered <
+    ceil(n_frames·min_frac). Returns (id, n_frames, covered) for
+    admitted videos; videos with NO decodable frames are admitted
+    with (0, 0) — no evidence of duplication, the image gate's
+    null-hash policy."""
+    nbits, n_bands = _geometry(hash_w, hash_h, n_bands, max_hamming)
+    fps = materialize(
+        video_frame_dhash(batch_videos, payload_col, id_col, hash_w, hash_h),
+        gate_on=batch_videos,
+    )
+    covered = (
+        _covered_frames(
+            index_bands, fps, batch_videos, id_col, nbits, n_bands, max_hamming
         )
-        .filter(
-            F.bit_count(F.col("h_idx").bitwiseXOR(F.col("h_new")))
-            <= max_hamming
+        .groupBy(id_col)
+        .agg(F.count(F.lit(1)).alias("covered"))
+    )
+    n_frames = (
+        fps.filter(F.col("dhash").isNotNull())
+        .groupBy(id_col)
+        .agg(F.countDistinct("frame_idx").alias("n_frames"))
+    )
+    # one row per presented video (undecodable containers included via
+    # the fps null rows -> n_frames 0)
+    stats = (
+        fps.select(id_col).distinct()
+        .join(n_frames, id_col, "left")
+        .join(covered, id_col, "left")
+        .select(
+            id_col,
+            F.coalesce("n_frames", F.lit(0)).alias("n_frames"),
+            F.coalesce("covered", F.lit(0)).alias("covered"),
         )
-        .select(F.col("_nid").alias(id_col))
-        .distinct()
     )
-    a = banded.select(
-        F.col(id_col).alias("_ida"), F.col("dhash").alias("h_a"), "bk"
+    return stats.filter(
+        (F.col("covered") < F.ceil(F.col("n_frames") * F.lit(min_frac)))
+        | (F.col("n_frames") == 0)
     )
-    bside = banded.select(
-        F.col(id_col).alias("_idb"), F.col("dhash").alias("h_b"), "bk"
-    )
-    hit_intra = (
-        a.join(bside, "bk")
-        .filter(F.col("_ida") < F.col("_idb"))
-        .filter(
-            F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))) <= max_hamming
-        )
-        .select(F.col("_idb").alias(id_col))
-        .distinct()
-    )
-    rejected = hit_idx.unionByName(hit_intra).distinct()
-    return all_fps.join(rejected, id_col, "left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -2231,7 +2134,10 @@ def image_neardup_admit(
 # integer algebra from the md5 hex directly (the SimHash-md5 discipline).
 # ---------------------------------------------------------------------------
 
-from real_time_data_anomaly_detection_spark.io import load_table  # noqa: E402
+from real_time_data_anomaly_detection_spark.io import (  # noqa: E402
+    corpus_cache_path,
+    load_table,
+)
 from real_time_data_anomaly_detection_spark.operators.registry import query  # noqa: E402
 
 _IMG_MD5S = 12  # 12 * 16 bytes = 192 >= 9*7*3 = 189 pixel bytes
@@ -2546,32 +2452,29 @@ def q_image_ahash_md5(spark, sf_dir: str) -> DataFrame:
     return sort_past_boundary(out, "doc_id")
 
 
-def _image_index_path(sf_dir: str) -> str:
-    """Session-cache image-index dir keyed by the documents corpus
-    fingerprint (io.corpus_cache_path — shared staleness contract)."""
-    from real_time_data_anomaly_detection_spark.io import corpus_cache_path
-
-    return corpus_cache_path(sf_dir, "documents", "imgidx")
-
-
-def _img_index_seed(spark, sf_dir: str) -> tuple[str, DataFrame]:
-    """Build-once-per-(corpus, session) persisted image index over the
-    CORPUS half of the synthetic images (doc_id % 10 ∈ {0, 1} — so
-    every even base-image quintuple has 2 corpus + 3 batch members and
-    every odd quintuple is batch-only, exercising both the index-hit
-    and the intra-batch paths), and the BATCH half as a DataFrame."""
+def _index_seed(spark, sf_dir: str, prefix: str, synth, build):
+    """(index bands, batch) for the persisted-index md5 twins. The
+    index is built once per (corpus, session) under
+    io.corpus_cache_path(sf_dir, "documents", prefix) by ``build``
+    over the CORPUS half of the ``synth`` fixture (doc_id % 10 ∈ {0,
+    1} — every even base quintuple has 2 corpus + 3 batch members and
+    every odd quintuple is batch-only, so the index-hit and the
+    intra-batch paths both run at every SF). The BATCH half comes
+    back UNDECODED: every invocation pays its own batch decode (the
+    persisted artifact is the index under test, not a cache of decode
+    output). Each half is filtered BEFORE synthesis, because a filter
+    cannot push below the video fixture's mapInPandas."""
     from real_time_data_anomaly_detection_spark import fs as _fs
 
     d = load_table(spark, sf_dir, "documents")
-    img = _synth_doc_images(d)
-    corpus = img.filter(F.col("doc_id") % 10 <= 1)
-    batch = img.filter(F.col("doc_id") % 10 >= 2)
-    path = _image_index_path(sf_dir)
+    path = corpus_cache_path(sf_dir, "documents", prefix)
     if not _fs.exists(path + "/seed/_SUCCESS", spark):
-        build_image_index(
-            corpus, path, "payload", "doc_id", hash_w=8, hash_h=7, n_bands=4
+        build(
+            synth(d.filter(F.col("doc_id") % 10 <= 1)), path, "payload",
+            "doc_id", hash_w=8, hash_h=7, n_bands=4,
         )
-    return path, batch
+    batch = synth(d.filter(F.col("doc_id") % 10 >= 2))
+    return spark.read.parquet(f"{path}/seed"), batch
 
 
 @query(
@@ -2591,13 +2494,13 @@ def q_image_index_md5(spark, sf_dir: str) -> DataFrame:
     ONCE (build_image_index — banded dHash rows sorted by bk under
     /tmp, the q_index_phrase_search build-once discipline), then the
     batch half matches against the index read back from parquet
-    (image_index_match: batch decodes once, bk IN-list prunes index
-    row groups, batch side broadcasts). The oracle replays decode +
+    (image_index_match → _index_match). The oracle replays decode +
     dHash + banding in DuckDB and joins the two halves directly — a
     hash-match proves the PERSISTED path returns exactly what the
     inline pair search would, the index == inline discipline."""
-    path, batch = _img_index_seed(spark, sf_dir)
-    idx = spark.read.parquet(f"{path}/seed")
+    idx, batch = _index_seed(
+        spark, sf_dir, "imgidx", _synth_doc_images, build_image_index
+    )
     pairs = image_index_match(
         idx, batch, "payload", "doc_id", max_hamming=3, hash_w=8, hash_h=7,
         n_bands=4,
@@ -2639,8 +2542,9 @@ def q_image_ingest_admit_md5(spark, sf_dir: str) -> DataFrame:
     their min-id member survives the intra-batch rule — both paths
     exercised at every SF. The oracle replays the full decode → dHash
     → banding → double NOT EXISTS in DuckDB."""
-    path, batch = _img_index_seed(spark, sf_dir)
-    idx = spark.read.parquet(f"{path}/seed")
+    idx, batch = _index_seed(
+        spark, sf_dir, "imgidx", _synth_doc_images, build_image_index
+    )
     admitted = image_neardup_admit(
         idx, batch, "payload", "doc_id", max_hamming=3, hash_w=8, hash_h=7,
         n_bands=4,
@@ -2951,41 +2855,6 @@ def q_video_dhash_md5(spark, sf_dir: str) -> DataFrame:
     return sort_past_boundary(out, "doc_id", "frame_idx")
 
 
-def _video_index_path(sf_dir: str) -> str:
-    """Session-cache video-index dir keyed by the documents corpus
-    fingerprint (io.corpus_cache_path — shared staleness contract)."""
-    from real_time_data_anomaly_detection_spark.io import corpus_cache_path
-
-    return corpus_cache_path(sf_dir, "documents", "vididx")
-
-
-def _vid_index_seed(spark, sf_dir: str) -> tuple[str, DataFrame]:
-    """Build-once-per-(corpus, session) persisted seen-frame index over
-    the CORPUS half of the synthetic videos (doc_id % 10 ∈ {0, 1} —
-    every even base quintuple has 2 corpus + 3 batch members, every odd
-    quintuple is batch-only: both the index-hit and intra-batch paths
-    exercised at every SF), and the BATCH half as a DataFrame. The
-    batch half is returned UNDECODED: every query invocation pays its
-    own batch decode (the persisted artifact is the INDEX — the
-    feature under test — not a cross-run cache of decode output)."""
-    from real_time_data_anomaly_detection_spark import fs as _fs
-
-    d = load_table(spark, sf_dir, "documents")
-    # Filter the halves BEFORE synthesis: mapInPandas is opaque to
-    # Catalyst, so a filter above it cannot push down and every
-    # invocation synthesized ALL docs' videos only to drop the corpus
-    # half (synthesis is per-doc row-wise, so filtering the
-    # id relation first yields the identical payload rows).
-    corpus = _synth_doc_videos(d.filter(F.col("doc_id") % 10 <= 1))
-    batch = _synth_doc_videos(d.filter(F.col("doc_id") % 10 >= 2))
-    path = _video_index_path(sf_dir)
-    if not _fs.exists(path + "/seed/_SUCCESS", spark):
-        build_video_index(
-            corpus, path, "payload", "doc_id", hash_w=8, hash_h=7, n_bands=4
-        )
-    return path, batch
-
-
 @query(
     "q_video_index_md5",
     oracle=f"""{_VID_DHASH_CTES}
@@ -3003,15 +2872,15 @@ def q_video_index_md5(spark, sf_dir: str) -> DataFrame:
     corpus half of the synthetic videos is indexed
     ONCE (build_video_index — banded per-frame dHash rows, bk-sorted
     parquet), then every FRAME of the batch half matches against the
-    index read back from disk (video_index_match: frames decode once
-    onto a localCheckpoint, bk IN-list prunes the index scan, the
-    batch side goes through broadcast_if_small). The oracle replays
+    index read back from disk (video_index_match → _index_match, the
+    body q_image_index_md5 runs). The oracle replays
     decode + dHash + banding for both halves and joins them directly —
     a hash match proves the PERSISTED path returns exactly what an
     inline frame join would, q_image_index_md5's index == inline
     discipline at frame granularity."""
-    path, batch = _vid_index_seed(spark, sf_dir)
-    idx = spark.read.parquet(f"{path}/seed")
+    idx, batch = _index_seed(
+        spark, sf_dir, "vididx", _synth_doc_videos, build_video_index
+    )
     pairs = video_index_match(
         idx, batch, "payload", "doc_id", max_hamming=3, hash_w=8, hash_h=7,
         n_bands=4,
@@ -3065,8 +2934,9 @@ def q_video_ingest_admit_md5(spark, sf_dir: str) -> DataFrame:
     2·covered ≤ n_frames admits the exactly-half-covered even-n case
     the production rule rejects — replicate the rule, don't
     re-derive it)."""
-    path, batch = _vid_index_seed(spark, sf_dir)
-    idx = spark.read.parquet(f"{path}/seed")
+    idx, batch = _index_seed(
+        spark, sf_dir, "vididx", _synth_doc_videos, build_video_index
+    )
     admitted = video_neardup_admit(
         idx, batch, "payload", "doc_id", max_hamming=3, min_frac=0.5,
         hash_w=8, hash_h=7, n_bands=4,

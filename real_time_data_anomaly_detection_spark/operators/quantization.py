@@ -40,7 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from real_time_data_anomaly_detection_spark.io import load_table
+from real_time_data_anomaly_detection_spark.io import corpus_cache_path, load_table
 from real_time_data_anomaly_detection_spark.operators.clustering import _sample_matrix
 from real_time_data_anomaly_detection_spark.operators.registry import query
 from real_time_data_anomaly_detection_spark.operators.similarity import (
@@ -396,11 +396,9 @@ def ivfpq_probe(
 
 
 def _ivfpq_index_path(sf_dir: str) -> str:
-    from real_time_data_anomaly_detection_spark.operators.similarity import (
-        _ivf_index_path,
-    )
-
-    return _ivf_index_path(sf_dir).replace("spark_graft_ivf_", "spark_graft_ivfpq_")
+    """Session-cache IVF-PQ index dir keyed by the embeddings corpus
+    fingerprint (io.corpus_cache_path — shared staleness contract)."""
+    return corpus_cache_path(sf_dir, "embeddings", "ivfpq")
 
 
 @query("q_ivfpq_topk")  # approximate (IVF-PQ recall) → rows-only

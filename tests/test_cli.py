@@ -6,6 +6,9 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
 
 
 def test_cli_list():
@@ -13,7 +16,7 @@ def test_cli_list():
         [sys.executable, "-m", "real_time_data_anomaly_detection_spark", "list"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
         timeout=120,
     )
     assert out.returncode == 0
@@ -33,7 +36,7 @@ def test_cli_unknown_query_exit_code():
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
         timeout=300,
     )
     assert out.returncode == 2

@@ -6,7 +6,10 @@ perfbench/, tests/ and __spark_entry__.py, and require that each
 inside a function — names an existing module and, for ``from X import
 name``, a name that module defines or a submodule of it. A deleted
 function then fails here instead of at the first run of the script
-that still imports it.
+that still imports it. A second scan of the same files fails on any
+string literal naming an absolute path inside a checkout of this repo:
+scripts and tests find the repo from their own ``__file__``, so a copy
+run from elsewhere tests and writes itself.
 """
 
 from __future__ import annotations
@@ -77,3 +80,28 @@ def test_engine_imports_resolve():
                     broken.append(f"{rel}:{lineno}: {module} has no {name}")
     assert seen > 100, "the scan must see the scripts' engine imports"
     assert not broken, "\n".join(broken)
+
+
+def _checkout_literals(path: Path):
+    """(lineno, literal) per string constant naming an absolute path in
+    a checkout of this repo — the literal itself or one of its parents
+    holds the package. Such a script imports or writes that checkout
+    whichever copy it was started from."""
+    for node in ast.walk(ast.parse(path.read_text())):
+        if not (isinstance(node, ast.Constant) and isinstance(node.value, str)):
+            continue
+        s = node.value
+        if not s.startswith("/") or len(s) > 256 or any(c.isspace() for c in s):
+            continue
+        p = Path(s)
+        if any((q / PKG).is_dir() for q in (p, *p.parents)):
+            yield node.lineno, s
+
+
+def test_scripts_find_the_repo_from_their_own_path():
+    hits = [
+        f"{path.relative_to(ROOT)}:{lineno}: {s}"
+        for path in _sources()
+        for lineno, s in _checkout_literals(path)
+    ]
+    assert not hits, "derive the root from __file__:\n" + "\n".join(hits)

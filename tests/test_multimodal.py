@@ -5,6 +5,7 @@ near-dup operators built on them."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from real_time_data_anomaly_detection_spark.operators.multimodal import (
@@ -2182,3 +2183,118 @@ def test_dc_only_jpeg_entropy_pack_golden():
     p0, p1 = _synth_video_payload(0), _synth_video_payload(1)
     assert hashlib.md5(p0).hexdigest() == "8997a8d30f8ac88a37303a9165b7617a"
     assert hashlib.md5(p1).hexdigest() == "3a393d006813498f3823b22e794dd157"
+
+
+def test_mov_sample_table_counts_bounded_by_box_sizes():
+    """The stsz/stsc/stco counts are untrusted 32-bit fields: a tiny
+    MOV claiming 2^32-1 entries in any of them must return at once
+    (the walker clamps each count to what its box, or for a fixed
+    sample size the payload, can hold) instead of looping over or
+    allocating one entry per claimed item. The boxes still hold the
+    real table, so the clamped walk yields the real frames. A long
+    well-formed table walks in time linear in its size."""
+    import time
+
+    from real_time_data_anomaly_detection_spark.operators.multimodal import (
+        _mov_jpeg_frames,
+    )
+
+    frames, _ = _mjpeg_test_frames(n=3, w=8, h=8)
+    mov = _mov_bytes(frames)
+    assert _mov_jpeg_frames(mov) == frames
+    huge = 2**32 - 1
+
+    def put(buf, box, field_off, value):
+        at = buf.index(box) + 4 + field_off
+        return buf[:at] + value.to_bytes(4, "big") + buf[at + 4:]
+
+    n_samples = put(mov, b"stsz", 8, huge)
+    every = put(put(put(n_samples, b"stsc", 4, huge), b"stco", 4, huge),
+                b"stsc", 12, huge)  # + samples_per_chunk of the first run
+    cases = [
+        (n_samples, frames),
+        (put(mov, b"stsc", 4, huge), frames),  # n_runs
+        (put(mov, b"stco", 4, huge), frames),  # n_chunks
+        (every, frames),
+        (put(n_samples, b"stsz", 4, 1), None),  # fixed 1-byte samples
+    ]
+    # a well-formed table of 20k one-byte samples, one chunk and one run
+    # each: the chunk walk is linear in the table, not chunks x runs
+    n = 20_000
+    b32 = lambda v: v.to_bytes(4, "big")  # noqa: E731
+
+    def box(t, data):
+        return b32(8 + len(data)) + t + data
+
+    def moov(off):
+        stbl = box(
+            b"stbl",
+            box(b"stsd", b32(0) + b32(1) + box(b"jpeg", b"\x00" * 78))
+            + box(b"stsz", b32(0) + b32(1) + b32(n))
+            + box(b"stsc", b32(0) + b32(n) + b"".join(
+                b32(i + 1) + b32(1) + b32(1) for i in range(n)))
+            + box(b"stco", b32(0) + b32(n) + b"".join(
+                b32(off + i) for i in range(n))),
+        )
+        return box(b"moov", box(b"trak", box(b"mdia", box(b"minf", stbl))))
+
+    long_table = moov(len(moov(0)) + 8) + box(b"mdat", b"\xff" * n)
+    cases.append((long_table, [b"\xff"] * n))
+    for buf, want in cases:
+        t0 = time.perf_counter()
+        got = _mov_jpeg_frames(buf)
+        assert time.perf_counter() - t0 < 1.0
+        if want is not None:
+            assert got == want
+
+
+@pytest.mark.parametrize("op", ["match", "admit"])
+def test_image_is_a_one_frame_video(spark, tmp_path, op):
+    """The same JPEG bytes presented as images and as one-frame AVI /
+    MOV videos take one fingerprint path: image_index_match and
+    video_index_match return the same (idx_id, id, hamming) rows, and
+    image_neardup_admit and video_neardup_admit (min_frac=0.5) admit
+    the same ids — an undecodable item included."""
+    from real_time_data_anomaly_detection_spark.operators.multimodal import (
+        build_image_index,
+        image_index_match,
+        image_neardup_admit,
+        video_index_match,
+        video_neardup_admit,
+    )
+
+    a, b, c, d = _mjpeg_test_frames(n=4)[0]
+    idx_path = str(tmp_path / "idx")
+    build_image_index(
+        spark.createDataFrame([(100, a), (101, b)], "media_id long, payload binary"),
+        idx_path,
+    )
+    idx = spark.read.parquet(f"{idx_path}/seed")
+    # indexed (a), intra-batch duplicate (c twice), novel (d), undecodable
+    batch = [(1, a), (2, c), (3, c), (4, d), (5, b"not media")]
+    images = spark.createDataFrame(batch, "media_id long, payload binary")
+    videos = spark.createDataFrame(
+        [
+            (i, p if i == 5 else (_avi_bytes([p]) if i % 2 else _mov_bytes([p])))
+            for i, p in batch
+        ],
+        "media_id long, payload binary",
+    )
+    if op == "match":
+        img = {
+            (r.idx_id, r.new_id, r.hamming)
+            for r in image_index_match(idx, images).collect()
+        }
+        vid = {
+            (r.idx_id, r.video_id, r.hamming)
+            for r in video_index_match(idx, videos).collect()
+        }
+        assert (100, 1, 0) in img
+    else:
+        img = {r.media_id for r in image_neardup_admit(idx, images).collect()}
+        vid = {
+            r.media_id
+            for r in video_neardup_admit(idx, videos, min_frac=0.5).collect()
+        }
+        assert img == {2, 4, 5}
+    assert img == vid

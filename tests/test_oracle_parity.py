@@ -6,11 +6,15 @@ column-name schema + order-insensitive value multiset).
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from real_time_data_anomaly_detection_spark.operators import REGISTRY
 from tests.conftest import SF_DIR
 from tools.verify_oracle import rows_multiset
+
+ROOT = Path(__file__).resolve().parent.parent
 
 ORACLE_QUERIES = sorted(n for n, q in REGISTRY.items() if q.oracle is not None)
 
@@ -260,7 +264,7 @@ def test_registry_artifact_sync():
     import json
     import re
 
-    cov = open("/root/repo/COVERAGE.md").read()
+    cov = open(ROOT / "COVERAGE.md").read()
     missing_cov = [n for n in REGISTRY if f"`{n}`" not in cov]
     assert not missing_cov, f"COVERAGE.md stale, regen: {missing_cov}"
     n_oracle = sum(1 for q in REGISTRY.values() if q.oracle)
@@ -271,7 +275,7 @@ def test_registry_artifact_sync():
         n_oracle,
     ), "COVERAGE.md counts line stale — rerun tools/gen_coverage.py"
 
-    full = json.load(open("/root/repo/CORRECTNESS_FULL.json"))
+    full = json.load(open(ROOT / "CORRECTNESS_FULL.json"))
     recs = {r["name"]: r for r in full["queries"]}
     assert set(recs) == set(REGISTRY), (
         "CORRECTNESS_FULL.json stale — rerun tools/verify_oracle.py --json: "
@@ -289,7 +293,7 @@ def test_registry_artifact_sync():
     # The sf0.1 full sweep is part of the standing evidence chain too
     # (round-8 verdict #7): it has caught half-boundary/-0.0/1-ulp
     # divergences the sf0.01 gate scale never hits.
-    sf01 = json.load(open("/root/repo/CORRECTNESS_SF0_1.json"))
+    sf01 = json.load(open(ROOT / "CORRECTNESS_SF0_1.json"))
     recs01 = {r["name"]: r for r in sf01["queries"]}
     assert set(recs01) == set(REGISTRY), (
         "CORRECTNESS_SF0_1.json stale — rerun tools/verify_oracle.py "
@@ -310,7 +314,7 @@ def test_registry_artifact_sync():
 
     stale_plan = [n for n in plan_queries if n not in REGISTRY]
     assert not stale_plan, f"gen_plans.QUERIES stale names: {stale_plan}"
-    src = open("/root/repo/bench.py").read()
+    src = open(ROOT / "bench.py").read()
     bench_names = set(re.findall(r'"(q_[a-z0-9_]+)"', src))
     stale_bench = [n for n in bench_names if n not in REGISTRY]
     assert not stale_bench, f"bench.py references unknown queries: {stale_bench}"

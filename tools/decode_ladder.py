@@ -37,8 +37,10 @@ from __future__ import annotations
 import hashlib
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 
 def _frames(n: int, blocks_w: int, blocks_h: int) -> list[bytes]:
@@ -78,7 +80,7 @@ def _ac_frames(n: int) -> list[bytes]:
     import numpy as np
 
     spec = importlib.util.spec_from_file_location(
-        "_mmfix", "/root/repo/tests/test_multimodal.py"
+        "_mmfix", ROOT / "tests" / "test_multimodal.py"
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

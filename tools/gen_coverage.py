@@ -7,8 +7,10 @@ Run:  python tools/gen_coverage.py
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 HEADER = """# COVERAGE — operator inventory vs implementation
 
@@ -35,12 +37,14 @@ exercised by the listed tests.
 | Memory-table sink (streaming/pipeline.py); graceful stop (batch-boundary, benign under load) | streaming/sinks.py | tests/test_stream_join_recovery.py::test_stop_gracefully_no_abort, ::test_stop_under_load_sink_consistent |
 | ANN similarity (hyperplane LSH + multiprobe) | operators/similarity.py | tests/test_similarity.py (recall + candidate-fraction bounds) |
 | Skew mitigation (salted join) | functions/skew.py | tests/test_skew.py (equivalence on 90%-skewed keys) |
-| Multimodal binary columns + Arrow-batched decode | operators/multimodal.py (one codec-free decode stack: decode_gray_milli for 8-bit PNG incl. Adam7+palette / GIF incl. interlaced / baseline+progressive JPEG / PPM / 24bpp BMP; _wav_samples_int for WAV PCM; Motion-JPEG video frames through the JPEG decoder; other codecs decode to null) | tests/test_multimodal.py (incl. generated-stream PNG/GIF/JPEG decode, libjpeg-encoded progressive fixtures) |
+| Multimodal binary columns + Arrow-batched decode | operators/multimodal.py (one codec-free decode stack: decode_gray_milli for 8-bit PNG incl. Adam7+palette / GIF incl. interlaced / baseline+progressive JPEG / PPM / 24bpp BMP; _wav_samples_int for WAV PCM; Motion-JPEG video frames through the same decode_gray_milli as images; other codecs decode to null) | tests/test_multimodal.py (incl. generated-stream PNG/GIF/JPEG decode, libjpeg-encoded progressive fixtures) |
 | Plan assertions (pushdown, broadcast, exchange counts) | plans/inspect.py | tests/test_plans.py |
 | Connected components: O(log n) pointer-jump rounds | operators/dedup.py::connected_components | tests/test_dedup.py::test_connected_components_round_scaling (10k chain/star) |
 | Kafka parse-path parity (no broker in env) | streaming/source.py::parse_energy_json | tests/test_kafka_gating.py::test_kafka_parse_path_parity_via_file_replay |
 | Sequence packing (deterministic bucketed greedy) | operators/pipeline_ops.py::pack_sequences | tests/test_pipeline_ops.py |
 | sklearn IsolationForest parity scaffolding | tests/golden/gen_iforest_golden.py | tests/test_iforest.py::test_sklearn_label_agreement (gated) |
+| Media fingerprint relation (an image is a one-frame video: one decode→hash body, one index writer, one index match, one covered-frames relation for images and videos) | operators/multimodal.py::_fingerprints, ::_write_index, ::_index_match, ::_covered_frames | tests/test_multimodal.py::test_image_is_a_one_frame_video, ::test_video_frame_dhash_matches_image_path |
+| MOV sample-table bounds (untrusted stsz/stsc/stco counts clamped to their box sizes) | operators/multimodal.py::_mov_jpeg_frames | tests/test_multimodal.py::test_mov_sample_table_counts_bounded_by_box_sizes |
 | Image admission gate (banded dHash admission vs a persisted index; geometry guard) | operators/multimodal.py::image_neardup_admit, ::build_image_index, ::check_image_index_meta | q_image_ingest_admit_md5; tests/test_multimodal.py::test_image_admit_undecodable_policy, ::test_image_index_meta_mismatch_raises |
 | Video admission gate (frame-coverage admission over MJPEG frame hashes) | operators/multimodal.py::video_neardup_admit, ::build_video_index | q_video_ingest_admit_md5; tests/test_multimodal.py::test_video_admit_rejects_exactly_half_covered_even_n |
 | Video near-dup algebra (frame-containment pairs; cross-media match vs persisted image index with bk IN-list pruning) | operators/multimodal.py::video_neardup_pairs, ::video_index_match | tests/test_multimodal.py::test_video_neardup_pairs_frame_containment, ::test_video_index_match_cross_media |
@@ -73,7 +77,7 @@ def main() -> None:
         f"{len(REGISTRY) - n_oracle} rows-only (approximate / not "
         "SQL-expressible — each covered by its own accuracy/recall tests).**\n"
     )
-    with open("/root/repo/COVERAGE.md", "w") as f:
+    with open(ROOT / "COVERAGE.md", "w") as f:
         f.write(HEADER + "\n".join(rows) + "\n" + footer)
     print(f"COVERAGE.md: {len(REGISTRY)} queries ({n_oracle} oracle-backed)")
 

@@ -8,8 +8,10 @@ Run:  python tools/gen_plans.py
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 SHOWCASE = ["q_agg_group", "q_tpch_q3", "q_asof_join", "q_cosine_topk", "q_curation_pipeline"]
 
@@ -120,14 +122,11 @@ QUERIES = [
     "q_psi_drift",
     "q_ks_drift",
     "q_drift_report",
-    # round-11 additions
     "q_emd_drift",
     "q_holt_forecast",
-    # round-12 additions
     "q_video_dhash_md5",
     "q_video_index_md5",
     "q_video_ingest_admit_md5",
-    # round-13 additions
     "q_video_scene_cuts_md5",
     "q_video_neardup_md5",
     "q_ks_drift_bucketed",
@@ -194,7 +193,7 @@ def main() -> None:
             tree.append(ln)
         lines += [f"### `{name}`", "", "```", *tree, "```", ""]
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"PLANS.md: {len(QUERIES)} queries documented")
 

@@ -22,8 +22,11 @@ import math
 import sys
 import time
 from collections import Counter
+from pathlib import Path
 
 import duckdb
+
+ROOT = Path(__file__).resolve().parent.parent
 
 
 def canon(v):
@@ -84,7 +87,7 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(ROOT))
     import __spark_entry__ as e
     from real_time_data_anomaly_detection_spark.session import get_spark
 
