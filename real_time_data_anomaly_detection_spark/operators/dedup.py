@@ -27,7 +27,10 @@ from pyspark.sql import functions as F
 from real_time_data_anomaly_detection_spark.functions.vector import cosine_similarity
 from real_time_data_anomaly_detection_spark.io import load_table
 from real_time_data_anomaly_detection_spark.operators.registry import query
-from real_time_data_anomaly_detection_spark.plans.inspect import materialize
+from real_time_data_anomaly_detection_spark.plans.inspect import (
+    fetch_if_small,
+    materialize,
+)
 
 
 def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:
@@ -976,7 +979,17 @@ def connected_components(
     stats: dict | None = None,
 ) -> DataFrame:
     """(node, component) labeling over an undirected edge list via
-    iterative min-label propagation.
+    iterative min-label propagation; each node's label is the min node
+    id of its component.
+
+    Small graphs finish on the driver. The symmetric edge list is
+    persisted once; ``plans.inspect.fetch_if_small`` then fetches it
+    when it has at most FETCH_MAX_ROWS rows, and the rounds run in
+    numpy over dense node indices. Past that bound every round is a
+    distributed Spark round over the same cached edges. Nothing else
+    selects the path. Both paths run the same rounds and converge to
+    the min id, a unique answer, so their labels and round counts are
+    equal (pinned in tests/test_dedup.py).
 
     Each round every node takes the min of its own label and its
     neighbors' labels, then POINTER-JUMPS TWICE (label := label of
@@ -984,16 +997,17 @@ def connected_components(
     ~log2(n)/2 rounds even for chain-shaped clusters, where plain
     propagation needs O(diameter) and would blow the iteration cap.
     Labels seed with min(self, neighbors), folding the first
-    propagation round into the init shuffle. A driver LOOP, but every
-    round is fully distributed: one edge-sized join + groupBy-min,
-    two label-sized jump joins, and a convergence check that is a
-    filter-count SCAN of the round's own checkpointed frontier (the
-    start-of-round label rides along as ``_prev`` — no old-vs-new
-    join job). Stops when no label changes; raises past ``max_iter``
-    rather than returning a half-propagated labeling.
+    propagation round into the init shuffle. A distributed round is
+    one edge-sized join + groupBy-min, two label-sized jump joins, and
+    a convergence check that is a filter-count SCAN of the round's own
+    checkpointed frontier (the start-of-round label rides along as
+    ``_prev`` — no old-vs-new join job). Stops when no label changes;
+    raises past ``max_iter`` rather than returning a half-propagated
+    labeling.
 
-    Pass ``stats`` (a dict) to get ``stats["rounds"]`` back — the
-    O(log n) round claim is pinned, not assumed, by
+    Pass ``stats`` (a dict) to get ``stats["rounds"]`` and
+    ``stats["path"]`` ("driver" or "distributed") back — the O(log n)
+    round claim is pinned, not assumed, by
     tests/test_dedup.py::test_connected_components_round_scaling.
 
     The edge cache is NOT pre-partitioned by ``src`` (pagerank's
@@ -1019,6 +1033,17 @@ def connected_components(
             )
         ).alias("_e")
     ).select("_e.src", "_e.dst").persist()
+    # Decide from the persisted relation: the fetch fills its cache, so
+    # the upstream pair derivation runs once on either path. A null
+    # endpoint has no dense index and keeps the distributed semantics.
+    tbl = fetch_if_small(sym)
+    if tbl is not None and tbl.column("src").null_count == 0:
+        sym.unpersist()
+        if stats is not None:
+            stats["path"] = "driver"
+        return _components_on_driver(edges.sparkSession, tbl, max_iter, stats)
+    if stats is not None:
+        stats["path"] = "distributed"
     # Seed comp = min(self, direct neighbors), not comp = self: the
     # node set needs a groupBy-shaped shuffle either way (the old code
     # paid it as distinct), and folding the first neighbor-min into it
@@ -1085,6 +1110,45 @@ def connected_components(
             sym.unpersist()
             return comp
     sym.unpersist()
+    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+
+
+def _components_on_driver(spark, tbl, max_iter: int, stats: dict | None) -> DataFrame:
+    """connected_components' rounds in numpy over the fetched symmetric
+    edge list (src, dst): the same neighbor-min seed, propagation, two
+    pointer jumps and no-change test, on indices into the sorted node
+    ids. Index order is id order, so the min index is the min id."""
+    import numpy as np
+    import pyarrow as pa
+
+    src = tbl.column("src").to_numpy()
+    nodes, inv = np.unique(
+        np.concatenate([src, tbl.column("dst").to_numpy()]), return_inverse=True
+    )
+    s, d = np.split(inv, [len(src)])
+    order = np.argsort(s, kind="stable")
+    s, d = s[order], d[order]
+    # Both directions are present, so every node starts one run of s.
+    starts = np.flatnonzero(np.diff(s, prepend=-1))
+
+    def neighbor_min(lab):
+        return np.minimum(lab, np.minimum.reduceat(lab[d], starts))
+
+    comp = neighbor_min(np.arange(len(nodes)))
+    for _round in range(max_iter):
+        new = neighbor_min(comp)
+        new = np.minimum(new, new[new])
+        new = np.minimum(new, new[new])
+        if np.array_equal(new, comp):
+            if stats is not None:
+                stats["rounds"] = _round + 1
+            t = tbl.schema.field("src").type
+            return spark.createDataFrame(
+                pa.table(
+                    {"node": pa.array(nodes, t), "comp": pa.array(nodes[comp], t)}
+                )
+            )
+        comp = new
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 

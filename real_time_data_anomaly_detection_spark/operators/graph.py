@@ -27,12 +27,15 @@ restrictions, bit-comparable after the registry's round-to-4 contract
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from real_time_data_anomaly_detection_spark.io import load_table
 from real_time_data_anomaly_detection_spark.operators.registry import query
 from real_time_data_anomaly_detection_spark.plans.inspect import (
+    fetch_if_small,
     live_exchanges,
     materialize,
 )
@@ -91,11 +94,22 @@ def pagerank(
     # cache, and preserves the hash(_src) output partitioning the
     # iterations rely on.
     ew = e.join(deg.hint("shuffle_hash"), "_src").persist()
-    # Fill the cache EAGERLY: an unmaterialized AQE cached plan reports
-    # unknown outputPartitioning to consumers, so without this count the
+    # The fetch is the first action on the cache and fills it EAGERLY,
+    # once for either path: an unmaterialized AQE cached plan reports
+    # unknown outputPartitioning to consumers, so without a fill the
     # first iterations re-exchange the edges even when pre-partitioned
     # (observed: hash(_src) live exchange until the cache finalizes).
-    ew.count()
+    # ew has no null _src (the degree join drops it); a null _dst has
+    # no dense index and keeps the distributed semantics.
+    tbl = fetch_if_small(ew)
+    if tbl is not None and tbl.column("_dst").null_count == 0:
+        ew.unpersist()
+        if stats is not None:
+            stats["path"] = "driver"
+            stats["iter_live_exchanges"] = []
+        return _pagerank_on_driver(edges.sparkSession, tbl, n_iters, damping, stats)
+    if stats is not None:
+        stats["path"] = "distributed"
     # Derive nodes from the CACHED ew, not from e: ew ≡ e with _deg
     # attached (deg is keyed by e's own _src, so the inner join drops
     # nothing), and reading the cache avoids recomputing the edge
@@ -173,6 +187,31 @@ def pagerank(
         ew.unpersist()
         nodes.unpersist()
     return ranks
+
+
+def _pagerank_on_driver(
+    spark, tbl, n_iters: int, damping: float, stats: dict | None
+) -> DataFrame:
+    """pagerank's recurrence in numpy over the fetched degree-annotated
+    edges (_src, _dst, _deg): the same node set, the same per-edge
+    r(u)/deg(u) terms and the same base + d·sum update. Only the order
+    in which np.bincount adds each node's terms differs from Spark's."""
+    src = tbl.column("_src").to_numpy()
+    nodes, inv = np.unique(
+        np.concatenate([src, tbl.column("_dst").to_numpy()]), return_inverse=True
+    )
+    s, d = np.split(inv, [len(src)])
+    n = len(nodes)
+    if n == 0:
+        raise ValueError("pagerank: empty edge list")
+    if stats is not None:
+        stats["n_nodes"] = n
+    deg = tbl.column("_deg").to_numpy()
+    base = (1.0 - damping) / n
+    pr = np.full(n, 1.0 / n)
+    for _ in range(n_iters):
+        pr = base + damping * np.bincount(d, weights=pr[s] / deg, minlength=n)
+    return spark.createDataFrame(pa.table({"node": pa.array(nodes), "pr": pr}))
 
 
 def _interaction_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -10,7 +10,9 @@ same plan statistic (:func:`plan_size_bytes`): the materialization
 policy (:func:`materialize`, :func:`sort_past_boundary`; no other
 module calls ``localCheckpoint``) and the broadcast policy
 (:func:`broadcast_if_small`; no other module gates a broadcast on a
-size estimate).
+size estimate). And the one bounded driver fetch
+(:func:`fetch_if_small`; no other module calls ``toArrow``), which
+decides from an observed row count instead.
 """
 
 from __future__ import annotations
@@ -226,6 +228,33 @@ def broadcast_if_small(df: DataFrame, gate_on: DataFrame) -> DataFrame:
     if plan_size_bytes(gate_on) <= BROADCAST_MAX_BYTES:
         return F.broadcast(df)
     return df
+
+
+# Most rows a data-sized relation may bring to the driver.
+FETCH_MAX_ROWS = 1 << 22
+
+
+def fetch_if_small(df: DataFrame):
+    """The engine's one bounded driver fetch: ``df`` as a
+    ``pyarrow.Table`` when it has at most FETCH_MAX_ROWS rows, else
+    None.
+
+    Used by iterative operators (connected components, PageRank) that
+    finish a small graph in numpy instead of paying several Spark jobs
+    per round. The decision reads an OBSERVED row count: one
+    ``limit(FETCH_MAX_ROWS + 1)`` fetch, never a plan estimate, since
+    estimates of derived pair graphs are loose in both directions.
+    Pass a persisted ``df``: the fetch then fills its cache, and a
+    caller that gets None runs its distributed path over the same
+    blocks without re-deriving them.
+
+    The bound: 4 Mi rows. For an edge list of two or three 8-byte
+    columns that is at most 96 MiB of Arrow in the driver JVM and again
+    in the Python driver, plus a small constant multiple for the numpy
+    rounds' index arrays, within a 1 GB driver. Past it, at most that
+    one fetch is wasted before the caller takes its distributed path."""
+    t = df.limit(FETCH_MAX_ROWS + 1).toArrow()
+    return t if t.num_rows <= FETCH_MAX_ROWS else None
 
 
 def executed_file_scans(df) -> int:

@@ -175,18 +175,23 @@ def test_stop_bucket_cap_drops_boilerplate_pairs(spark):
     )
 
 
-def test_connected_components_deep_chain(spark):
+def test_connected_components_deep_chain(spark, monkeypatch):
     """A 60-node chain (diameter 59) must converge well inside the
     25-round cap — pointer jumping makes rounds O(log n), where plain
-    propagation would need 59 rounds and raise."""
+    propagation would need 59 rounds and raise. The fetch cap is
+    patched to 0 so the distributed rounds run."""
     from real_time_data_anomaly_detection_spark.operators.dedup import (
         connected_components,
     )
+    from real_time_data_anomaly_detection_spark.plans import inspect
 
+    monkeypatch.setattr(inspect, "FETCH_MAX_ROWS", 0)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(59)], "doc_a long, doc_b long"
     )
-    comps = {r.node: r.comp for r in connected_components(edges).collect()}
+    s = {}
+    comps = {r.node: r.comp for r in connected_components(edges, stats=s).collect()}
+    assert s["path"] == "distributed"
     assert len(comps) == 60
     assert set(comps.values()) == {0}
 
@@ -260,19 +265,22 @@ def test_prefix_filter_candidates(spark):
     assert len(cands) < len(full) / 10
 
 
-def test_connected_components_round_scaling(spark):
+def test_connected_components_round_scaling(spark, monkeypatch):
     """The O(log n) pointer-jump claim, pinned: a 10k-node chain
     (worst-case diameter) and a 10k-node star must converge in
     <= log2(n)/2+2 rounds — plain propagation would need ~10k rounds
     on the chain. The double pointer jump + neighbor-min seed roughly
     halve the single-jump round count; measured growth is ~log2(n)/2+1
-    (256->5, 1024->6, 4096->7, 10000->8 rounds)."""
+    (256->5, 1024->6, 4096->7, 10000->8 rounds). The fetch cap is
+    patched to 0 so the distributed rounds run."""
     import math
 
     from real_time_data_anomaly_detection_spark.operators.dedup import (
         connected_components,
     )
+    from real_time_data_anomaly_detection_spark.plans import inspect
 
+    monkeypatch.setattr(inspect, "FETCH_MAX_ROWS", 0)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
@@ -284,6 +292,7 @@ def test_connected_components_round_scaling(spark):
         )
         s = {}
         comp = connected_components(chain, stats=s)
+        assert s["path"] == "distributed"
         assert comp.select("comp").distinct().count() == 1
         assert s["rounds"] <= bound, f"chain took {s['rounds']} > {bound} rounds"
 

@@ -6,7 +6,11 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from real_time_data_anomaly_detection_spark.operators.dedup import (
+    connected_components,
+)
 from real_time_data_anomaly_detection_spark.operators.graph import pagerank
+from real_time_data_anomaly_detection_spark.plans import inspect as plan_inspect
 
 
 def _ranks(df):
@@ -77,12 +81,15 @@ def test_matches_numpy_power_iteration(spark):
         assert r[i] == pytest.approx(pr[i], rel=1e-12)
 
 
-def test_iteration_edge_shuffle_contract(spark):
+def test_iteration_edge_shuffle_contract(spark, monkeypatch):
     """The scale claim behind pre_partition (the default): each
     iteration's LIVE shuffles (cache-fill excluded) carry only
     rank-vector-sized relations — never the persisted corpus-sized
     edges. Broadcast of the tiny test rank vector is disabled so the
-    join plans the SMJ shape a 100 TB-scale rank vector forces."""
+    join plans the SMJ shape a 100 TB-scale rank vector forces. The
+    fetch cap is patched to 0 so the small test graph takes the
+    distributed path whose plan this pins."""
+    monkeypatch.setattr(plan_inspect, "FETCH_MAX_ROWS", 0)
     pairs = [(i, (i * 7 + 3) % 50) for i in range(400)]
     edges = spark.createDataFrame(pairs, "src int, dst int")
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -91,6 +98,7 @@ def test_iteration_edge_shuffle_contract(spark):
     try:
         stats: dict = {}
         pagerank(edges, n_iters=1, stats=stats)
+        assert stats["path"] == "distributed"
         live = stats["iter_live_exchanges"]
         blob = " ".join(live)
         assert "hashpartitioning(_dst" in blob, live  # contribution groupBy
@@ -138,6 +146,64 @@ def test_pre_partition_drops_edge_exchange_vs_broadcast_built_cache(spark):
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", prev)
         ew.unpersist()
     assert "hashpartitioning(_src" not in " ".join(live), live
+
+
+def _random_graph(seed: int) -> list[tuple[int, int]]:
+    import random
+
+    rng = random.Random(seed)
+    return [(rng.randrange(60), rng.randrange(60)) for _ in range(80)]
+
+
+GRAPHS = {
+    "random-1": _random_graph(1),
+    "random-2": _random_graph(2),
+    "random-3": _random_graph(3),
+    "chain": [(i, i + 1) for i in range(40)],
+    "star": [(0, i) for i in range(1, 30)],
+    "duplicate-edges": [(1, 2), (1, 2), (2, 3), (2, 3), (7, 8), (7, 8)],
+    "both-orientations": [(1, 2), (2, 1), (2, 3), (3, 2), (9, 4), (4, 9)],
+    "self-loop": [(5, 5), (5, 6), (6, 1), (7, 7)],
+}
+
+
+@pytest.mark.parametrize("name", sorted(GRAPHS))
+def test_driver_and_distributed_paths_agree(spark, monkeypatch, name):
+    """Small graphs finish on the driver; the distributed path is forced
+    by patching the fetch cap to 0. Component labels must be equal, and
+    PageRank must agree to 1e-12 and be equal after the registry's
+    round(pr·|V|, 4)."""
+    edges = spark.createDataFrame(GRAPHS[name], "src long, dst long")
+    cc_edges = edges.toDF("doc_a", "doc_b")
+
+    def run():
+        cs: dict = {}
+        comps = {r.node: r.comp for r in connected_components(cc_edges, stats=cs).collect()}
+        ps: dict = {}
+        n = pagerank(edges, n_iters=5, stats=ps).persist()
+        ranks = _ranks(n)
+        scaled = {
+            r.node: r.s
+            for r in n.select(
+                "node", F.round(F.col("pr") * F.lit(float(ps["n_nodes"])), 4).alias("s")
+            ).collect()
+        }
+        n.unpersist()
+        return cs, comps, ps, ranks, scaled
+
+    d_cs, d_comps, d_ps, d_ranks, d_scaled = run()
+    monkeypatch.setattr(plan_inspect, "FETCH_MAX_ROWS", 0)
+    s_cs, s_comps, s_ps, s_ranks, s_scaled = run()
+
+    assert (d_cs["path"], d_ps["path"]) == ("driver", "driver")
+    assert (s_cs["path"], s_ps["path"]) == ("distributed", "distributed")
+    assert d_comps == s_comps
+    assert d_cs["rounds"] == s_cs["rounds"]
+    assert d_ps["n_nodes"] == s_ps["n_nodes"]
+    assert d_ranks.keys() == s_ranks.keys()
+    for k in d_ranks:
+        assert d_ranks[k] == pytest.approx(s_ranks[k], rel=1e-12, abs=0)
+    assert d_scaled == s_scaled
 
 
 def test_empty_edges_raises(spark):

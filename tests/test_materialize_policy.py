@@ -1,14 +1,16 @@
-"""One materialization policy and one broadcast policy: only
-``plans/inspect.py`` checkpoints or gates a broadcast on a size estimate.
+"""One materialization policy, one broadcast policy and one bounded
+driver fetch: only ``plans/inspect.py`` checkpoints, gates a broadcast
+on a size estimate or fetches a relation as Arrow.
 
 Static check (no Spark): parse every module of the package and fail on
 any ``.localCheckpoint(`` call or ``1 << 30`` size-gate literal outside
-the module that owns ``materialize`` / ``sort_past_boundary``, and on
+the module that owns ``materialize`` / ``sort_past_boundary``, on
 any ``plan_size_bytes(`` call, ``64 << 20`` size-gate literal or
 ``broadcast_*`` / ``max_broadcast_bytes`` parameter outside the module
-that owns ``broadcast_if_small``. A new operator that hand-rolls its
-own checkpoint or gate fails here instead of drifting from the shared
-policy.
+that owns ``broadcast_if_small``, and on any ``.toArrow(`` call outside
+the module that owns ``fetch_if_small``. A new operator that hand-rolls
+its own checkpoint, gate or driver fetch fails here instead of drifting
+from the shared policy.
 """
 
 from __future__ import annotations
@@ -50,6 +52,14 @@ def _is_size_estimate_call(node: ast.AST) -> bool:
     f = node.func
     name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
     return name == "plan_size_bytes"
+
+
+def _is_arrow_fetch(node: ast.AST) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "toArrow"
+    )
 
 
 def _broadcast_params(node: ast.AST) -> list[str]:
@@ -100,6 +110,16 @@ def broadcast_violations(pkg: Path) -> list[str]:
     return out
 
 
+def fetch_violations(pkg: Path) -> list[str]:
+    """``path:line: .toArrow(`` for each Arrow fetch outside the
+    package's plans/inspect.py."""
+    return [
+        f"{rel}:{node.lineno}: .toArrow("
+        for rel, node in _package_nodes(pkg)
+        if _is_arrow_fetch(node)
+    ]
+
+
 def test_checkpoints_go_through_the_policy_module():
     bad = policy_violations(PKG)
     hint = "use plans.inspect.materialize / sort_past_boundary"
@@ -135,3 +155,16 @@ def test_policy_module_holds_the_broadcast_gate():
         "broadcast_keys",
         "max_broadcast_bytes",
     ]
+
+
+def test_driver_fetches_go_through_the_policy_module():
+    bad = fetch_violations(PKG)
+    hint = "use plans.inspect.fetch_if_small(df)"
+    assert not bad, hint + ":\n" + "\n".join(bad)
+
+
+def test_policy_module_holds_the_bounded_fetch():
+    """As above for the fetch scan: the policy module's one Arrow fetch
+    is visible to the scan's predicate."""
+    nodes = list(ast.walk(ast.parse(POLICY_MODULE.read_text())))
+    assert len([n for n in nodes if _is_arrow_fetch(n)]) == 1
