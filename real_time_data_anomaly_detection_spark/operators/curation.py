@@ -812,12 +812,13 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     from real_time_data_anomaly_detection_spark.functions.vector import (
+        array_lit,
         cosine_similarity,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
     probe = e.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    probe_col = F.array(*[F.lit(float(x)) for x in probe])
+    probe_col = array_lit(probe)
     cs_top = (
         e.filter(F.col("vec_id") != 0)
         .select(

@@ -24,7 +24,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from real_time_data_anomaly_detection_spark.functions.vector import cosine_similarity
+from real_time_data_anomaly_detection_spark.functions.vector import (
+    array_lit,
+    cosine_similarity,
+)
 from real_time_data_anomaly_detection_spark.io import load_table
 from real_time_data_anomaly_detection_spark.operators.registry import query
 from real_time_data_anomaly_detection_spark.plans.inspect import (
@@ -1375,7 +1378,7 @@ def q_embed_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = F.col("embedding").cast("array<double>")
 
     def dot(p):
-        lit = F.array(*[F.lit(float(c)) for c in p])
+        lit = array_lit(p)
         return F.aggregate(
             F.zip_with(v, lit, lambda x, s: x * s), F.lit(0.0), lambda a, x: a + x
         )

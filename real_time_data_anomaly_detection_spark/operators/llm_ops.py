@@ -119,11 +119,14 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject. At 100 TB this is the brute-force baseline;
     similarity.py adds the LSH-bucketed scale path.
     """
-    from real_time_data_anomaly_detection_spark.functions.vector import cosine_similarity
+    from real_time_data_anomaly_detection_spark.functions.vector import (
+        array_lit,
+        cosine_similarity,
+    )
 
     e = load_table(spark, sf_dir, "embeddings")
     probe = e.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    probe_col = F.array(*[F.lit(float(x)) for x in probe])
+    probe_col = array_lit(probe)
     return (
         e.filter(F.col("vec_id") != 0)
         .select(

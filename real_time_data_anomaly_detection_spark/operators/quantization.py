@@ -40,6 +40,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from real_time_data_anomaly_detection_spark.functions.vector import (
+    array_lit,
+    cosine_similarity,
+)
 from real_time_data_anomaly_detection_spark.io import corpus_cache_path, load_table
 from real_time_data_anomaly_detection_spark.operators.clustering import _sample_matrix
 from real_time_data_anomaly_detection_spark.operators.registry import query
@@ -148,9 +152,7 @@ def pq_adc_topk(
     lut = np.stack(
         [((codebooks[j] - p[j * dsub : (j + 1) * dsub]) ** 2).sum(axis=1) for j in range(m)]
     )  # (m, k)
-    lut_col = F.array(
-        *[F.array(*[F.lit(float(x)) for x in lut[j]]) for j in range(m)]
-    )
+    lut_col = array_lit(lut)
     # dist = Σ_j lut[j][codes[j]]  (element_at is 1-based)
     dist = F.aggregate(
         F.zip_with(
@@ -377,11 +379,7 @@ def ivfpq_probe(
     )
     if refine_with is None:
         return cand.orderBy(F.asc("adc_dist"), F.asc(id_col)).limit(n_results)
-    from real_time_data_anomaly_detection_spark.functions.vector import (
-        cosine_similarity,
-    )
-
-    probe_col = F.array(*[F.lit(float(x)) for x in p])
+    probe_col = array_lit(p)
     return (
         refine_with.join(F.broadcast(cand), id_col, "left_semi")
         .select(

@@ -18,7 +18,10 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from real_time_data_anomaly_detection_spark.functions.vector import cosine_similarity
+from real_time_data_anomaly_detection_spark.functions.vector import (
+    array_lit,
+    cosine_similarity,
+)
 from real_time_data_anomaly_detection_spark.operators.registry import query
 
 
@@ -31,7 +34,7 @@ def _bucket_expr(vec_col, planes: np.ndarray):
     """Sign-pattern bucket id: bit i set iff dot(vec, plane_i) > 0."""
     bits = []
     for i, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(x)) for x in plane])
+        lit_plane = array_lit(plane)
         d = F.aggregate(
             F.zip_with(vec_col, lit_plane, lambda x, y: x * y),
             F.lit(0.0),
@@ -111,7 +114,7 @@ def with_ivf_cells(
     v = F.col(vec_col).cast("array<double>")
     d2s = []
     for c in centroids:
-        lit_c = F.array(*[F.lit(float(x)) for x in c])
+        lit_c = array_lit(c)
         d2s.append(
             F.aggregate(
                 F.zip_with(v, lit_c, lambda x, y: (x - y) * (x - y)),
@@ -144,7 +147,7 @@ def ivf_topk(
     celled, centroids = with_ivf_cells(df, vec_col, n_cells, seed=seed)
     p = np.asarray(probe, dtype=np.float64)
     order = (((centroids - p) ** 2).sum(axis=1)).argsort()[:nprobe]
-    probe_col = F.array(*[F.lit(float(x)) for x in probe])
+    probe_col = array_lit(probe)
     return (
         celled.filter(F.col("cell").isin([int(c) for c in order]))
         .select(
@@ -276,7 +279,7 @@ def ivf_probe(
         for r in spark.read.parquet(path + "/centroids").collect()
     }
     order = sorted(cents, key=lambda c: float(((cents[c] - p) ** 2).sum()))[:nprobe]
-    probe_col = F.array(*[F.lit(float(x)) for x in probe])
+    probe_col = array_lit(probe)
     return (
         spark.read.parquet(path + "/vectors")
         .filter(F.col("cell").isin(order))
@@ -376,7 +379,7 @@ def ann_topk(
     hamming = F.bit_count(
         F.col("bucket").cast("bigint").bitwiseXOR(F.lit(probe_bucket).cast("bigint"))
     )
-    probe_col = F.array(*[F.lit(float(x)) for x in probe])
+    probe_col = array_lit(probe)
     return (
         bucketed.filter(hamming <= multiprobe_hamming)
         .select(

@@ -4,7 +4,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from real_time_data_anomaly_detection_spark.functions.vector import cosine_similarity
+from real_time_data_anomaly_detection_spark.functions.vector import (
+    array_lit,
+    cosine_similarity,
+)
 from real_time_data_anomaly_detection_spark.io import load_table
 from real_time_data_anomaly_detection_spark.operators.similarity import (
     ann_topk,
@@ -17,6 +20,33 @@ SF_DIR = "/root/testdata/sf0.001"
 def _probe(spark):
     e = load_table(spark, SF_DIR, "embeddings")
     return [float(x) for x in e.filter(F.col("vec_id") == 0).head()["embedding"]]
+
+
+def test_array_lit_equals_elementwise_literal(spark):
+    """One JSON literal builds the same array<double> /
+    array<array<double>> value as one F.lit per element, exactly,
+    including subnormals, signed zero and values near the double
+    range; non-finite values are rejected."""
+    import numpy as np
+    import pytest
+
+    rng = np.random.default_rng(0)
+    m = rng.standard_normal((4, 8)) * 10.0 ** rng.integers(-300, 300, (4, 8))
+    m[0, :4] = [-0.0, 5e-324, 1e-320, 1.7976931348623157e308]
+    v = rng.standard_normal(16)
+    by_elem_m = F.array(*[F.array(*[F.lit(float(x)) for x in row]) for row in m])
+    by_elem_v = F.array(*[F.lit(float(x)) for x in v])
+    r = spark.range(1).select(
+        (array_lit(m) == by_elem_m).alias("m_eq"),
+        (array_lit(v) == by_elem_v).alias("v_eq"),
+        array_lit(m).alias("m"),
+    ).head()
+    assert r.m_eq and r.v_eq
+    assert np.array_equal(np.array(r.m), m)
+    assert str(np.array(r.m)[0, 0]) == "-0.0"
+    for bad in ([1.0, float("nan")], [[float("inf")]]):
+        with pytest.raises(ValueError, match="finite"):
+            array_lit(bad)
 
 
 def test_buckets_are_deterministic_and_bounded(spark):
