@@ -317,8 +317,7 @@ def minhash_neardup_pairs(
     (verify_candidates_arr). The only exchanges left are the band-key
     self-join and the two candidate→doc hash joins — versus the
     earlier exploded-postings design which paid a repartition+distinct
-    exchange per branch (3×) plus a signature groupBy. Measured 5.6 s
-    → ~1 s at sf0.1 on local[32].
+    exchange per branch (3×) plus a signature groupBy.
 
     The arr relation feeds three subplans (signatures + both verify
     sides), so it is materialized under the size gate (measured 1.8 →

@@ -5,18 +5,24 @@ their hosts (PageRank/harmonic centrality over the host graph is a
 standard crawl-quality signal); the same join-aggregate iteration
 underlies label propagation and trust propagation. The reference app
 has no graph surface — this extends the engine the same way
-dedup.connected_components does, and shares its scaling discipline: a
-driver LOOP whose every round is fully distributed (one join + one
-groupBy), with checkpoint lineage truncation so Catalyst analysis
-stays O(1) per round instead of growing with the iteration count.
+dedup.connected_components does, and shares its scaling discipline.
 
-100 TB shape: the edge list is the corpus-sized side; it is persisted
-ONCE with its out-degrees attached, and every iteration shuffles only
-rank-vector-sized relations (|V| rows — at most the hash(node) feed
-into the join plus the hash(dst) contribution groupBy; the cache is
-partitioned by source, so the join side reuses compatible hash
-partitioning and the measured live set is the groupBy exchange
-alone). Nothing corpus-sized is ever collected or broadcast.
+Small graphs finish on the driver: the edge list is persisted ONCE,
+and when ``plans.inspect.fetch_if_small`` finds at most
+FETCH_MAX_ROWS (4 Mi) rows in it, the rounds run in numpy over the
+fetched Arrow table. That is the only collect, and the cap bounds it;
+no option selects the path.
+
+Past the cap the operator is a driver LOOP whose every round is fully
+distributed (one join + one groupBy), with checkpoint lineage
+truncation so Catalyst analysis stays O(1) per round instead of
+growing with the iteration count. 100 TB shape: the edge list is the
+corpus-sized side; it is persisted ONCE with its out-degrees attached,
+and every iteration shuffles only rank-vector-sized relations (|V|
+rows — at most the hash(node) feed into the join plus the hash(dst)
+contribution groupBy; the cache is partitioned by source, so the join
+side reuses compatible hash partitioning and the measured live set is
+the groupBy exchange alone). Nothing corpus-sized is ever broadcast.
 
 Correctness is pinned cross-engine: the declared query's DuckDB oracle
 replays the SAME fixed-iteration recurrence as plain SQL with the
@@ -60,6 +66,16 @@ def pagerank(
     (PageRank contracts at rate d, so ~20 rounds ≈ 3-digit precision)
     beats a convergence check that costs an extra full pass per round.
 
+    The deduplicated, degree-annotated edge set is persisted once. When
+    ``plans.inspect.fetch_if_small`` finds at most FETCH_MAX_ROWS rows
+    in it, the iterations run on the driver in numpy with the same node
+    set, degrees and dangling-mass leak; only the order in which each
+    node's contributions are summed differs, so ranks agree with the
+    distributed path to rounding (pinned to 1e-12 in
+    tests/test_graph.py). Past the cap the iterations are distributed
+    rounds. ``stats["path"]`` says which ran ("driver" or
+    "distributed"); ``stats["n_nodes"]`` is |V| on both.
+
     The persisted edge set is repartitioned by ``_src`` BEFORE
     caching, making the co-partitioning of the per-iteration join
     CONTRACTUAL: the InMemoryTableScan's outputPartitioning is
@@ -70,7 +86,8 @@ def pagerank(
     partitioning and EVERY iteration re-exchanges the edges. The
     repartition cost is paid once at cache fill; tests/test_graph.py
     pins the plan, and ``stats["iter_live_exchanges"]`` exposes the
-    measured per-iteration non-cache-fill exchange list.
+    measured per-iteration non-cache-fill exchange list (empty on the
+    driver path, which has none).
     """
     # ONE shuffle funds the whole cache fill: hash(_src) satisfies the
     # clustered-distribution requirement of BOTH the (_src,_dst) dedup

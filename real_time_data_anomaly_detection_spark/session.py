@@ -13,7 +13,22 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _host_cpus() -> int:
+    """Cores this process may run on; SPARK_GRAFT_CPUS overrides."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def _host_driver_mem() -> str:
+    """Driver heap: two fifths of physical RAM, at least 1g, leaving
+    the rest to Python workers, off-heap buffers and the OS (a heap
+    sized past the host let one JVM grow until the kernel ended it
+    mid-sweep); SPARK_GRAFT_DRIVER_MEM overrides."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, ram * 2 // 5 >> 30)}g"
+
 
 # Directory that holds the package. Python workers start in the JVM's
 # working directory and import the package only through PYTHONPATH,
@@ -29,9 +44,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    At real cluster scale the same knobs apply; only ``master`` and the
-    shuffle-partition count (sized ~2-3x total cores, with AQE coalescing
-    the excess) change.
+    The defaults fit the host: ``local[N]`` over the cores this process
+    may use, as many shuffle partitions, and a heap from physical RAM
+    (:func:`_host_cpus`, :func:`_host_driver_mem`). At real cluster scale
+    the same knobs apply; only ``master`` and the shuffle-partition
+    count (sized ~2-3x total cores, with AQE coalescing the excess)
+    change.
 
     Puts the package root on PYTHONPATH first, so Python workers import
     the package from any working directory. Like the memory setting,
@@ -40,20 +58,15 @@ def get_spark(
     paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
     if _PACKAGE_ROOT not in paths:
         os.environ["PYTHONPATH"] = os.pathsep.join([_PACKAGE_ROOT, *paths])
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _host_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         # Local mode = one JVM; driver memory IS executor memory. The
         # 1g default OOMs any real shuffle. Takes effect only when this
         # call launches the JVM (ignored on an already-running session).
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-        )
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
+        .config("spark.driver.memory", _host_driver_mem())
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         # AQE: runtime re-planning — coalesce small shuffle partitions,
         # convert SMJ->broadcast when runtime stats allow, split skewed
         # partitions. Essential at 100 TB, harmless at sf0.01.
@@ -73,7 +86,7 @@ def get_spark(
         # measured as a consistent ~2-3 s in-bench overhead on the
         # iterative queries (pagerank's 5-iteration loop alone
         # generates ~15 stages). Sized for the registry sweep; a few
-        # KB of bytecode per entry, so ~tens of MB against a 48g heap.
+        # KB of bytecode per entry, so ~tens of MB of heap.
         .config("spark.sql.codegen.cache.maxEntries", "4000")
         .config("spark.ui.enabled", "false")
     )

@@ -146,7 +146,7 @@ def main() -> None:
     sf = "/root/testdata/sf0.1"
 
     lines = [
-        "# PLANS — physical-plan properties (sf0.1, local[32])",
+        f"# PLANS — physical-plan properties (sf0.1, {spark.sparkContext.master})",
         "",
         "Generated by `tools/gen_plans.py`. `shuffles` counts non-broadcast",
         "exchanges; `pushed` = filters reaching the parquet scan; every",
