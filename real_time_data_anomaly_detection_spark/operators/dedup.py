@@ -991,7 +991,7 @@ def connected_components(
     distributed Spark round over the same cached edges. Nothing else
     selects the path. Both paths run the same rounds and converge to
     the min id, a unique answer, so their labels and round counts are
-    equal (pinned in tests/test_dedup.py).
+    equal (pinned in tests/test_graph.py).
 
     Each round every node takes the min of its own label and its
     neighbors' labels, then POINTER-JUMPS TWICE (label := label of
