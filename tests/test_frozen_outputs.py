@@ -10,9 +10,13 @@ the sum of those hashes mod 1e9+7 (both order-insensitive).
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
-SF_DIR = "/root/testdata/sf0.01"
+from tests.conftest import SF_DIR as SMALLEST_SF_DIR
+
+SF_DIR = str(Path(SMALLEST_SF_DIR).with_name("sf0.01"))
 
 FROZEN = {
     "q_neardup_dedup": [476, -7936532954703956228, 228451887104],
